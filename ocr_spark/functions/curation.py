@@ -3485,6 +3485,14 @@ def rrf_fusion(
     formulation this replaced (measured 4.3-5.1 s -> 2.7-2.8 s at sf0.1; at
     100 TB the same rewrite removes 2(|signals|-1) full-data shuffles
     and the |signals|-way id-keyed join chain).
+
+    NULL signals: a NULL value gets no rank under its signal (the
+    (sig, val) join drops it) and shifts no other row's rank (NULLs sort
+    after every value). Its row keeps ``rank_<c>`` NULL and ``rrf_micro``
+    NULL; an id whose signals are all NULL is absent from the output. The
+    per-column formulation this replaced dropped an id with ANY NULL
+    signal, so the two differ on such rows (no current caller passes
+    NULLs).
     """
     out = df.select(
         F.col(id_col).alias("id"),

@@ -518,19 +518,6 @@ for _ft in ("aadhaar", "pan", "vehicle_rc"):
             ALL_FIELDS.append(_k)
 
 
-def fields_for_type(doc_type: Column, text: Column, words: Column, lines: Column) -> dict[str, Column]:
-    """Per-field CASE over doc_type: only the classified type's extractor
-    branch evaluates per row (codegen short-circuits CASE WHEN)."""
-    per_type = {t: FIELD_BUILDERS[t](text, words, lines) for t in FIELD_BUILDERS}
-    out: dict[str, Column] = {}
-    for fname in ALL_FIELDS:
-        col = F.when(doc_type == "aadhaar", per_type["aadhaar"].get(fname, F.lit(None)).cast("string"))
-        col = col.when(doc_type == "pan", per_type["pan"].get(fname, F.lit(None)).cast("string"))
-        col = col.when(doc_type == "vehicle_rc", per_type["vehicle_rc"].get(fname, F.lit(None)).cast("string"))
-        out[fname] = col
-    return out
-
-
 # Full Verhoeff checksum (dihedral group D5): the validation the
 # reference STUBS OUT at aadhaar.py:170-172 ("Basic Verhoeff algorithm
 # check (simplified) / In production, implement full Verhoeff

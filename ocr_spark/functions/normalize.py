@@ -22,11 +22,6 @@ def normalize_numeric_field(col: Column) -> Column:
     return F.regexp_replace(F.translate(col, src, dst), r"[^0-9.,\-]", "")
 
 
-def clean_whitespace(col: Column) -> Column:
-    """D3 — normalization.py:9-15 (' '.join(split()))."""
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
 def normalize_date(col: Column) -> Column:
     """D4 — normalization.py:50-72: to DD/MM/YYYY, else NULL.
 

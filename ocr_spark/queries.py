@@ -13,6 +13,13 @@ compare holds):
   backrefs, explicit ``[0-9०-९]`` digit classes — see functions/extractors.py);
 - timestamps are projected as formatted strings;
 - booleans are projected as ints.
+
+One spelling per input, two per operator: a synthetic input keyed on
+``doc_id % n`` (the ``_RECIPE_TEXT``-style fixtures) is written once, as an
+``ocr_spark.casespec`` spec, and rendered for both engines (``_docs_sql`` /
+``_docs``, or ``case_sql`` / ``case_col``). The operator logic under test
+keeps two independent spellings, Spark and DuckDB, because the DuckDB twin
+is the reference the Spark side is checked against.
 """
 
 from __future__ import annotations
@@ -26,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ocr_spark import config as C
+from ocr_spark.casespec import Spec, case_col, case_sql
 from ocr_spark.functions import similarity
 from ocr_spark.functions.classify import classify
 from ocr_spark.functions.dedup import (
@@ -52,6 +60,7 @@ from ocr_spark.functions.scoring import (
     schema_score,
 )
 from ocr_spark.functions.wordstats import split_words
+from ocr_spark.oracle_sql import dbl
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -84,13 +93,33 @@ def _cpu(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# casespec parts naming a column of ``documents``
+_DOC_ID = ("col", "doc_id")
+_TEXT = ("col", "text")
+
+
+def _docs_sql(spec: Spec, name: str) -> str:
+    """A doc_id-residue fixture over ``documents``: columns (doc, name)."""
+    return (f"SELECT doc_id AS doc, {case_sql('doc_id', spec)} AS {name} "
+            "FROM documents")
+
+
+def _docs(spark: SparkSession, sf_dir: str, spec: Spec,
+          name: str) -> DataFrame:
+    """Spark twin of ``_docs_sql``, over the ``_cpu`` scan."""
+    return _cpu(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("doc"),
+        case_col(F.col("doc_id"), spec).alias(name))
+
+
 def query(name: str, sql: str | None = None, *, eager: bool = False):
     def deco(fn):
         # A silent overwrite shadowed a whole implementation in round 4
         # (two @query("dehyphenate") registrations; the first was dead
         # code and the registry held 396 of 397 registrations) — make a
         # duplicate name a hard import-time error.
-        assert name not in QUERIES, f"duplicate query registration: {name}"
+        if name in QUERIES:
+            raise ValueError(f"duplicate query registration: {name}")
         QUERIES[name] = fn
         if sql is not None:
             ORACLE[name] = sql
@@ -1393,14 +1422,8 @@ def _score_decide_frame(spark: SparkSession, sf_dir: str, mode: int) -> DataFram
     )
 
 
-def _dbl(x: float) -> str:
-    """DuckDB float literal forced to DOUBLE — bare literals parse as
-    DECIMAL and constant-fold exactly, diverging from Spark's doubles."""
-    return f"CAST({x!r} AS DOUBLE)"
-
-
 def _score_decide_oracle() -> str:
-    w_total_global = _dbl(sum(C.SCORE_WEIGHTS.values()))
+    w_total_global = dbl(sum(C.SCORE_WEIGHTS.values()))
     selects = []
     field_sql_gen = {
         0: OSQL.aadhaar_fields_sql,
@@ -1410,12 +1433,12 @@ def _score_decide_oracle() -> str:
     for mode, t in _MODE_TYPE.items():
         fields_sql = field_sql_gen[mode](_mode_corpus_sql(mode))
         weights = C.FIELD_WEIGHTS[t]
-        total_w = _dbl(sum(weights.values()))
+        total_w = dbl(sum(weights.values()))
         got = " + ".join(
-            f"(CASE WHEN f.{fn} IS NOT NULL THEN {_dbl(w)} ELSE {_dbl(0.0)} END)"
+            f"(CASE WHEN f.{fn} IS NOT NULL THEN {dbl(w)} ELSE {dbl(0.0)} END)"
             for fn, w in weights.items()
         )
-        schema = f"(({_dbl(0.0)} + {got}) / {total_w})"
+        schema = f"(({dbl(0.0)} + {got}) / {total_w})"
         mandatory = " AND ".join(f"f.{fn} IS NOT NULL" for fn in C.REQUIRED_FIELDS[t])
         crit = " + ".join(
             f"(CASE WHEN f.{fn} IS NULL THEN 1 ELSE 0 END)"
@@ -1426,23 +1449,23 @@ def _score_decide_oracle() -> str:
         n_words = "len(string_split_regex(trim(c.text), '\\s+'))"
         ocr_conf = (
             f"(CASE WHEN {n_words} < {C.MIN_WORDS_DETECTED} "
-            f"THEN {_dbl(0.0)} ELSE {_dbl(1.0)} END)"
+            f"THEN {dbl(0.0)} ELSE {dbl(1.0)} END)"
         )
-        consistency = f"(CASE WHEN ({mandatory}) THEN {_dbl(1.0)} ELSE {_dbl(0.5)} END)"
+        consistency = f"(CASE WHEN ({mandatory}) THEN {dbl(1.0)} ELSE {dbl(0.5)} END)"
         sw = C.SCORE_WEIGHTS
         num = (
-            f"{_dbl(sw['image_quality'])} * {_dbl(_FIXED_PARTS['image_quality'])}"
-            f" + {_dbl(sw['ocr_confidence'])} * {ocr_conf}"
-            f" + {_dbl(sw['regex_match'])} * {schema}"
-            f" + {_dbl(sw['fuzzy_match'])} * {_dbl(_FIXED_PARTS['fuzzy'])}"
-            f" + {_dbl(sw['layout_validity'])} * {ocr_conf}"
-            f" + {_dbl(sw['kv_match'])} * {_dbl(_FIXED_PARTS['kv'])}"
-            f" + {_dbl(sw['consistency'])} * {consistency}"
-            f" + {_dbl(sw['schema_completeness'])} * {schema}"
-            f" + {_dbl(sw['distribution'])} * {dist}"
-            f" + {_dbl(sw['spatial_compactness'])} * {_dbl(_FIXED_PARTS['spatial'])}"
+            f"{dbl(sw['image_quality'])} * {dbl(_FIXED_PARTS['image_quality'])}"
+            f" + {dbl(sw['ocr_confidence'])} * {ocr_conf}"
+            f" + {dbl(sw['regex_match'])} * {schema}"
+            f" + {dbl(sw['fuzzy_match'])} * {dbl(_FIXED_PARTS['fuzzy'])}"
+            f" + {dbl(sw['layout_validity'])} * {ocr_conf}"
+            f" + {dbl(sw['kv_match'])} * {dbl(_FIXED_PARTS['kv'])}"
+            f" + {dbl(sw['consistency'])} * {consistency}"
+            f" + {dbl(sw['schema_completeness'])} * {schema}"
+            f" + {dbl(sw['distribution'])} * {dist}"
+            f" + {dbl(sw['spatial_compactness'])} * {dbl(_FIXED_PARTS['spatial'])}"
         )
-        final = f"greatest({_dbl(0.0)}, least({_dbl(1.0)}, ({num}) / {w_total_global}))"
+        final = f"greatest({dbl(0.0)}, least({dbl(1.0)}, ({num}) / {w_total_global}))"
         biz = f"(({crit}) > 0)"
         # conflicting-schema flag: >= 2 distinct normalized core ids of this
         # type (scoring.distinct_core_ids twin; RE2-safe — no lookbehind)
@@ -1457,18 +1480,18 @@ def _score_decide_oracle() -> str:
             f"CASE WHEN NOT ({n_words} > 0) THEN 'reject' "
             f"WHEN NOT TRUE THEN 'reject' "
             f"WHEN NOT ({mandatory}) THEN 'reject' "
-            f"WHEN {nar} > {_dbl(C.MAX_NON_ALPHANUMERIC)} THEN 'reject' "
+            f"WHEN {nar} > {dbl(C.MAX_NON_ALPHANUMERIC)} THEN 'reject' "
             f"WHEN {conflict} THEN 'reject' "
             f"WHEN FALSE THEN 'review' "
-            f"WHEN {final} >= {_dbl(C.ACCEPT_THRESHOLD)} THEN "
+            f"WHEN {final} >= {dbl(C.ACCEPT_THRESHOLD)} THEN "
             f"(CASE WHEN {biz} THEN 'review' ELSE 'accept' END) "
-            f"WHEN {final} >= {_dbl(C.REVIEW_THRESHOLD)} THEN 'review' ELSE 'reject' END"
+            f"WHEN {final} >= {dbl(C.REVIEW_THRESHOLD)} THEN 'review' ELSE 'reject' END"
         )
         hard = (
             f"(NOT ({n_words} > 0)) OR (({n_words} > 0) AND NOT ({mandatory})) "
-            f"OR (({n_words} > 0) AND ({mandatory}) AND {nar} > {_dbl(C.MAX_NON_ALPHANUMERIC)}) "
+            f"OR (({n_words} > 0) AND ({mandatory}) AND {nar} > {dbl(C.MAX_NON_ALPHANUMERIC)}) "
             f"OR (({n_words} > 0) AND ({mandatory}) "
-            f"AND NOT ({nar} > {_dbl(C.MAX_NON_ALPHANUMERIC)}) AND {conflict})"
+            f"AND NOT ({nar} > {dbl(C.MAX_NON_ALPHANUMERIC)}) AND {conflict})"
         )
         selects.append(f"""
         SELECT c.doc_id, '{t}' AS doc_type,
@@ -1635,8 +1658,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doc_quality_oracle() -> str:
-    from ocr_spark.oracle_sql import dbl
-
     n_tok = "len(string_split_regex(trim(text), '\\s+'))"
     stop_ratio = (
         f"(len(list_filter(string_split_regex(trim(text), '\\s+'), "
@@ -1716,8 +1737,6 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _quality_gate_oracle() -> str:
-    from ocr_spark.oracle_sql import dbl
-
     blur = f"(value * {dbl(3.0)})"
     bright = f"(value / {dbl(2.0)})"
     res = f"(value * {dbl(20.0)})"
@@ -2190,20 +2209,14 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_lm_score(_cpu(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-_URL_SQL = """
-    SELECT doc_id,
-           CASE WHEN doc_id % 5 = 0 THEN
-                  'https://www' || CAST(doc_id % 5 AS VARCHAR) || '.site'
-                  || CAST(doc_id % 97 AS VARCHAR) || '.co.in/a/b' || CAST(doc_id % 7 AS VARCHAR) || '?q=1'
-                WHEN doc_id % 5 = 1 THEN
-                  'http://cdn' || CAST(doc_id % 11 AS VARCHAR) || '.example.org:8080/x/y/z'
-                WHEN doc_id % 5 = 2 THEN
-                  'HTTPS://UP' || CAST(doc_id % 13 AS VARCHAR) || '.Example.COM/a'
-                WHEN doc_id % 5 = 3 THEN
-                  'http://[2001:db8::' || CAST(doc_id % 9 AS VARCHAR) || ']:8080/x/y'
-                ELSE 'https://host' || CAST(doc_id % 23 AS VARCHAR) || '.io/' END AS url
-    FROM documents
-"""
+_URL = (
+    ["https://www", 5, ".site", 97, ".co.in/a/b", 7, "?q=1"],
+    ["http://cdn", 11, ".example.org:8080/x/y/z"],
+    ["HTTPS://UP", 13, ".Example.COM/a"],
+    ["http://[2001:db8::", 9, "]:8080/x/y"],
+    ["https://host", 23, ".io/"],
+)
+_URL_SQL = f"SELECT doc_id, {case_sql('doc_id', _URL)} AS url FROM documents"
 
 
 @query(
@@ -2232,20 +2245,8 @@ def q_url_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     and mixed-case hosts, IPv6 bracket literals with ports)."""
     from ocr_spark.functions.curation import url_host_stats
 
-    k = F.col("doc_id")
-    url = (
-        F.when(k % 5 == 0, F.concat(
-            F.lit("https://www"), (k % 5).cast("string"), F.lit(".site"),
-            (k % 97).cast("string"), F.lit(".co.in/a/b"), (k % 7).cast("string"), F.lit("?q=1")))
-        .when(k % 5 == 1, F.concat(
-            F.lit("http://cdn"), (k % 11).cast("string"), F.lit(".example.org:8080/x/y/z")))
-        .when(k % 5 == 2, F.concat(
-            F.lit("HTTPS://UP"), (k % 13).cast("string"), F.lit(".Example.COM/a")))
-        .when(k % 5 == 3, F.concat(
-            F.lit("http://[2001:db8::"), (k % 9).cast("string"), F.lit("]:8080/x/y")))
-        .otherwise(F.concat(F.lit("https://host"), (k % 23).cast("string"), F.lit(".io/")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _URL).alias("url"))
     return url_host_stats(docs, "url")
 
 
@@ -2331,18 +2332,15 @@ def q_corpus_dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cpu(spark, sf_dir, "documents"), "doc_id", "text", n=3, min_docs=2)
 
 
-_MESSY_URL_SQL = """
-    SELECT doc_id,
-           CASE doc_id % 6
-             WHEN 0 THEN 'HTTP://Site' || CAST(doc_id % 7 AS VARCHAR) || '.COM:80/A/b?x=1&utm_source=feed#frag'
-             WHEN 1 THEN 'https://host' || CAST(doc_id % 5 AS VARCHAR) || '.org:443?utm_campaign=a&utm_medium=b'
-             WHEN 2 THEN 'https://h' || CAST(doc_id % 9 AS VARCHAR) || '.net:8443/p?gclid=abc&q=2'
-             WHEN 3 THEN 'http://plain' || CAST(doc_id % 11 AS VARCHAR) || '.io'
-             WHEN 4 THEN 'http://[2001:db8::' || CAST(doc_id % 3 AS VARCHAR) || ']:80/v?fbclid=z'
-             ELSE 'https://ok' || CAST(doc_id % 13 AS VARCHAR) || '.co/path/q?a=1&b=2'
-           END AS url
-    FROM documents
-"""
+_MESSY_URL = (
+    ["HTTP://Site", 7, ".COM:80/A/b?x=1&utm_source=feed#frag"],
+    ["https://host", 5, ".org:443?utm_campaign=a&utm_medium=b"],
+    ["https://h", 9, ".net:8443/p?gclid=abc&q=2"],
+    ["http://plain", 11, ".io"],
+    ["http://[2001:db8::", 3, "]:80/v?fbclid=z"],
+    ["https://ok", 13, ".co/path/q?a=1&b=2"],
+)
+_MESSY_URL_SQL = _docs_sql(_MESSY_URL, "url")
 
 _TRACKING_SQL = "(utm_[a-z0-9]+|fbclid|gclid|msclkid)"
 
@@ -2351,7 +2349,7 @@ _TRACKING_SQL = "(utm_[a-z0-9]+|fbclid|gclid|msclkid)"
     "canonical_urls",
     f"""
     WITH u AS ({_MESSY_URL_SQL}),
-    s1 AS (SELECT doc_id AS doc, url, regexp_replace(url, '#.*', '') AS c FROM u),
+    s1 AS (SELECT doc, url, regexp_replace(url, '#.*', '') AS c FROM u),
     s2 AS (SELECT doc, url,
                   regexp_replace(regexp_replace(
                     lower(regexp_extract(c, '(?i)^([a-z][a-z0-9+.-]*://[^/?#]*)', 1)),
@@ -2379,29 +2377,7 @@ def q_canonical_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     precedes URL-level dedup."""
     from ocr_spark.functions.curation import canonical_url
 
-    k = F.col("doc_id")
-    m = k % 6
-    url = (
-        F.when(m == 0, F.concat(
-            F.lit("HTTP://Site"), (k % 7).cast("string"),
-            F.lit(".COM:80/A/b?x=1&utm_source=feed#frag")))
-        .when(m == 1, F.concat(
-            F.lit("https://host"), (k % 5).cast("string"),
-            F.lit(".org:443?utm_campaign=a&utm_medium=b")))
-        .when(m == 2, F.concat(
-            F.lit("https://h"), (k % 9).cast("string"),
-            F.lit(".net:8443/p?gclid=abc&q=2")))
-        .when(m == 3, F.concat(
-            F.lit("http://plain"), (k % 11).cast("string"), F.lit(".io")))
-        .when(m == 4, F.concat(
-            F.lit("http://[2001:db8::"), (k % 3).cast("string"),
-            F.lit("]:80/v?fbclid=z")))
-        .otherwise(F.concat(
-            F.lit("https://ok"), (k % 13).cast("string"),
-            F.lit(".co/path/q?a=1&b=2")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), url.alias("url"))
+    docs = _docs(spark, sf_dir, _MESSY_URL, "url")
     return docs.select("doc", "url", canonical_url(F.col("url")).alias("canon"))
 
 
@@ -3268,15 +3244,28 @@ def q_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
 
-@query(
-    "snapshot_diff",
-    """
-    WITH newt AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' updated' ELSE text END AS text
+_RECRAWL_TEXT = ([_TEXT, " updated"],) + ([_TEXT],) * 6
+_RECRAWL_SQL = f"""
+      SELECT doc_id, {case_sql('doc_id', _RECRAWL_TEXT)} AS text
       FROM documents WHERE doc_id % 13 != 0
       UNION ALL
-      SELECT doc_id + 500000 AS doc_id, text FROM documents WHERE doc_id % 17 = 0),
+      SELECT doc_id + 500000 AS doc_id, text FROM documents WHERE doc_id % 17 = 0
+"""
+
+
+def _recrawl(old: DataFrame) -> DataFrame:
+    """Spark twin of ``_RECRAWL_SQL``: a perturbed recrawl of ``old``."""
+    k = F.col("doc_id")
+    return old.filter(k % 13 != 0).select(
+        "doc_id", case_col(k, _RECRAWL_TEXT).alias("text"),
+    ).unionByName(
+        old.filter(k % 17 == 0).select((k + 500000).alias("doc_id"), "text"))
+
+
+@query(
+    "snapshot_diff",
+    f"""
+    WITH newt AS ({_RECRAWL_SQL}),
     j AS (SELECT COALESCE(o.doc_id, n.doc_id) AS doc, o.text AS ot, n.text AS nt
           FROM documents o FULL OUTER JOIN newt n ON o.doc_id = n.doc_id)
     SELECT doc,
@@ -3295,27 +3284,13 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import snapshot_diff
 
     old = _t(spark, sf_dir, "documents")
-    k = F.col("doc_id")
-    new = old.filter(k % 13 != 0).select(
-        "doc_id",
-        F.when(k % 7 == 0, F.concat(F.col("text"), F.lit(" updated")))
-        .otherwise(F.col("text")).alias("text"),
-    ).unionByName(
-        old.filter(k % 17 == 0).select(
-            (k + 500000).alias("doc_id"), "text")
-    )
-    return snapshot_diff(old, new, "doc_id", "text")
+    return snapshot_diff(old, _recrawl(old), "doc_id", "text")
 
 
 @query(
     "crawl_merge",
-    """
-    WITH newt AS (
-      SELECT doc_id,
-             CASE WHEN doc_id % 7 = 0 THEN text || ' updated' ELSE text END AS text
-      FROM documents WHERE doc_id % 13 != 0
-      UNION ALL
-      SELECT doc_id + 500000 AS doc_id, text FROM documents WHERE doc_id % 17 = 0),
+    f"""
+    WITH newt AS ({_RECRAWL_SQL}),
     oh AS (SELECT doc_id AS k, md5(text) AS oh FROM documents),
     nh AS (SELECT doc_id AS k, md5(text) AS nh FROM newt),
     j AS (SELECT COALESCE(oh.k, nh.k) AS k, oh.oh, nh.nh
@@ -3336,15 +3311,7 @@ def q_crawl_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import merge_upsert
 
     old = _t(spark, sf_dir, "documents")
-    k = F.col("doc_id")
-    new = old.filter(k % 13 != 0).select(
-        "doc_id",
-        F.when(k % 7 == 0, F.concat(F.col("text"), F.lit(" updated")))
-        .otherwise(F.col("text")).alias("text"),
-    ).unionByName(
-        old.filter(k % 17 == 0).select((k + 500000).alias("doc_id"), "text")
-    )
-    return merge_upsert(old, new, "doc_id", "text")
+    return merge_upsert(old, _recrawl(old), "doc_id", "text")
 
 
 @query(
@@ -4638,12 +4605,9 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end document pipeline on the synth corpus (native Catalyst)."""
-    frames = [_score_decide_frame(spark, sf_dir, m) for m in _MODE_TYPE]
-    out = frames[0]
-    for fr in frames[1:]:
-        out = out.unionByName(fr)
-    return out
+    """End-to-end document pipeline on the synth corpus (native Catalyst):
+    the ``score_and_decide`` query."""
+    return q_score_and_decide(spark, sf_dir)
 
 
 # ===========================================================================
@@ -4654,18 +4618,15 @@ _BLOCKLIST_DOMAINS = [
     "track3.com", "example.org", "bad.co.in", "2001:db8::7", "site.io",
 ]
 
-_BLOCKLIST_URL_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 6
-             WHEN 0 THEN 'https://a.b.track' || CAST(doc_id % 7 AS VARCHAR) || '.com/x'
-             WHEN 1 THEN 'http://example.org/p'
-             WHEN 2 THEN 'HTTPS://CDN' || CAST(doc_id % 11 AS VARCHAR) || '.Example.ORG:8080/q'
-             WHEN 3 THEN 'http://notexample.org/r'
-             WHEN 4 THEN 'http://[2001:db8::' || CAST(doc_id % 9 AS VARCHAR) || ']/v'
-             ELSE 'https://ok' || CAST(doc_id % 13 AS VARCHAR) || '.net/'
-           END AS url
-    FROM documents
-"""
+_BLOCKLIST_URL = (
+    ["https://a.b.track", 7, ".com/x"],
+    ["http://example.org/p"],
+    ["HTTPS://CDN", 11, ".Example.ORG:8080/q"],
+    ["http://notexample.org/r"],
+    ["http://[2001:db8::", 9, "]/v"],
+    ["https://ok", 13, ".net/"],
+)
+_BLOCKLIST_URL_SQL = _docs_sql(_BLOCKLIST_URL, "url")
 
 
 @query(
@@ -4697,25 +4658,19 @@ def q_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 100 TB-shape API — a broadcast dimension, not a literal)."""
     from ocr_spark.functions.curation import blocklist_filter
 
-    k = F.col("doc_id")
-    m = k % 6
-    url = (
-        F.when(m == 0, F.concat(
-            F.lit("https://a.b.track"), (k % 7).cast("string"), F.lit(".com/x")))
-        .when(m == 1, F.lit("http://example.org/p"))
-        .when(m == 2, F.concat(
-            F.lit("HTTPS://CDN"), (k % 11).cast("string"),
-            F.lit(".Example.ORG:8080/q")))
-        .when(m == 3, F.lit("http://notexample.org/r"))
-        .when(m == 4, F.concat(
-            F.lit("http://[2001:db8::"), (k % 9).cast("string"), F.lit("]/v")))
-        .otherwise(F.concat(
-            F.lit("https://ok"), (k % 13).cast("string"), F.lit(".net/")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _BLOCKLIST_URL).alias("url"))
     bl = spark.createDataFrame(
         [(d,) for d in _BLOCKLIST_DOMAINS], "domain string")
     return blocklist_filter(docs, "doc_id", "url", bl)
+
+
+_MOJIBAKE_TEXT = (
+    [_TEXT, " â€œMojibakeâ€¦ hereâ€™s â€“ a test"],
+    ["CafÃ© â€” rÃ©sumÃ© naÃ¯ve? ", _TEXT],
+    [_TEXT, " Â«TÂ° 25Â·5Â»"],
+    [_TEXT],
+)
 
 
 def _mojibake_oracle() -> str:
@@ -4732,11 +4687,7 @@ def _mojibake_oracle() -> str:
     return f"""
     WITH c AS (
       SELECT doc_id AS doc,
-             CASE doc_id % 4
-               WHEN 0 THEN text || ' â€œMojibakeâ€¦ hereâ€™s â€“ a test'
-               WHEN 1 THEN 'CafÃ© â€” rÃ©sumÃ© naÃ¯ve? ' || text
-               WHEN 2 THEN text || ' Â«TÂ° 25Â·5Â»'
-               ELSE text END AS text
+             {case_sql('doc_id', _MOJIBAKE_TEXT)} AS text
       FROM documents),
     f AS (SELECT doc, text, {fixed} AS fixed FROM c)
     SELECT doc, {cnt("text")} AS n_suspect, {cnt("fixed")} AS n_residual,
@@ -4754,17 +4705,8 @@ def q_fix_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_residual; Â-prefixed punctuation; and a clean control class)."""
     from ocr_spark.functions.curation import fix_mojibake
 
-    k = F.col("doc_id")
-    m = k % 4
-    text = F.col("text")
-    corrupt = (
-        F.when(m == 0, F.concat(text, F.lit(" â€œMojibakeâ€¦ hereâ€™s â€“ a test")))
-        .when(m == 1, F.concat(F.lit("CafÃ© â€” rÃ©sumÃ© naÃ¯ve? "), text))
-        .when(m == 2, F.concat(text, F.lit(" Â«TÂ° 25Â·5Â»")))
-        .otherwise(text)
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", corrupt.alias("text"))
+        "doc_id", case_col(F.col("doc_id"), _MOJIBAKE_TEXT).alias("text"))
     return fix_mojibake(docs, "doc_id", "text")
 
 
@@ -4794,35 +4736,21 @@ def q_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness of the shard-then-global decomposition."""
     from ocr_spark.functions.curation import host_cap
 
-    k = F.col("doc_id")
-    url = (
-        F.when(k % 5 == 0, F.concat(
-            F.lit("https://www"), (k % 5).cast("string"), F.lit(".site"),
-            (k % 97).cast("string"), F.lit(".co.in/a/b"), (k % 7).cast("string"), F.lit("?q=1")))
-        .when(k % 5 == 1, F.concat(
-            F.lit("http://cdn"), (k % 11).cast("string"), F.lit(".example.org:8080/x/y/z")))
-        .when(k % 5 == 2, F.concat(
-            F.lit("HTTPS://UP"), (k % 13).cast("string"), F.lit(".Example.COM/a")))
-        .when(k % 5 == 3, F.concat(
-            F.lit("http://[2001:db8::"), (k % 9).cast("string"), F.lit("]:8080/x/y")))
-        .otherwise(F.concat(F.lit("https://host"), (k % 23).cast("string"), F.lit(".io/")))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url"), "n_chars")
+        "doc_id", case_col(F.col("doc_id"), _URL).alias("url"), "n_chars")
     return host_cap(docs, "doc_id", "url", F.col("n_chars"), k=3)
 
 
-_NOINDEX_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN '<html><head><meta name="robots" content="noindex, nofollow"></head><body>' || text
-             WHEN 1 THEN '<HTML><META content="NOINDEX" name="ROBOTS"><body>' || text
-             WHEN 2 THEN '<html><meta name="robots" content="index, follow"><p>noindex in body text' || text
-             WHEN 3 THEN '<html><meta name="googlebot" content="noindex"><body>' || text
-             ELSE '<html><body>' || text
-           END AS html
-    FROM documents
-"""
+_NOINDEX_HTML = (
+    ['<html><head><meta name="robots" content="noindex, '
+     'nofollow"></head><body>', _TEXT],
+    ['<HTML><META content="NOINDEX" name="ROBOTS"><body>', _TEXT],
+    ['<html><meta name="robots" content="index, follow"><p>noindex in body '
+     "text", _TEXT],
+    ['<html><meta name="googlebot" content="noindex"><body>', _TEXT],
+    ["<html><body>", _TEXT],
+)
+_NOINDEX_HTML_SQL = _docs_sql(_NOINDEX_HTML, "html")
 
 
 @query(
@@ -4847,21 +4775,8 @@ def q_noindex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (must NOT trigger), and a no-meta control."""
     from ocr_spark.functions.curation import noindex_filter
 
-    k = F.col("doc_id")
-    m = k % 5
-    text = F.col("text")
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<html><head><meta name="robots" content="noindex, nofollow"></head><body>'), text))
-        .when(m == 1, F.concat(
-            F.lit('<HTML><META content="NOINDEX" name="ROBOTS"><body>'), text))
-        .when(m == 2, F.concat(
-            F.lit('<html><meta name="robots" content="index, follow"><p>noindex in body text'), text))
-        .when(m == 3, F.concat(
-            F.lit('<html><meta name="googlebot" content="noindex"><body>'), text))
-        .otherwise(F.concat(F.lit("<html><body>"), text))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _NOINDEX_HTML).alias("html"))
     return noindex_filter(docs, "doc_id", "html")
 
 
@@ -4877,19 +4792,16 @@ _ROBOTS_RULES = [
     ("tie.com", "/x", 1),
 ]
 
-_ROBOTS_URL_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 7
-             WHEN 0 THEN 'https://example.org/public/page' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'https://example.org/public/private/x'
-             WHEN 2 THEN 'http://example.org/other'
-             WHEN 3 THEN 'https://SITE.io:8080/a/b/c' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 4 THEN 'http://site.io/a/q?y=1'
-             WHEN 5 THEN 'http://tie.com/x' || CAST(doc_id % 4 AS VARCHAR)
-             ELSE 'https://ok' || CAST(doc_id % 13 AS VARCHAR) || '.net'
-           END AS url
-    FROM documents
-"""
+_ROBOTS_URL = (
+    ["https://example.org/public/page", 5],
+    ["https://example.org/public/private/x"],
+    ["http://example.org/other"],
+    ["https://SITE.io:8080/a/b/c", 3],
+    ["http://site.io/a/q?y=1"],
+    ["http://tie.com/x", 4],
+    ["https://ok", 13, ".net"],
+)
+_ROBOTS_URL_SQL = _docs_sql(_ROBOTS_URL, "url")
 
 
 @query(
@@ -4932,21 +4844,8 @@ def q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension."""
     from ocr_spark.functions.curation import robots_gate
 
-    k = F.col("doc_id")
-    m = k % 7
-    url = (
-        F.when(m == 0, F.concat(
-            F.lit("https://example.org/public/page"), (k % 5).cast("string")))
-        .when(m == 1, F.lit("https://example.org/public/private/x"))
-        .when(m == 2, F.lit("http://example.org/other"))
-        .when(m == 3, F.concat(
-            F.lit("https://SITE.io:8080/a/b/c"), (k % 3).cast("string")))
-        .when(m == 4, F.lit("http://site.io/a/q?y=1"))
-        .when(m == 5, F.concat(F.lit("http://tie.com/x"), (k % 4).cast("string")))
-        .otherwise(F.concat(
-            F.lit("https://ok"), (k % 13).cast("string"), F.lit(".net")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", url.alias("url"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _ROBOTS_URL).alias("url"))
     rules = spark.createDataFrame(
         _ROBOTS_RULES, "host string, path_prefix string, allow int")
     return robots_gate(docs, "doc_id", "url", rules)
@@ -5000,19 +4899,14 @@ def q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return resolve_redirects(chain.unionByName(loops), "src", "dst", rounds=6)
 
 
-_ANCHOR_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<p><a href="https://t' || CAST(doc_id % 7 AS VARCHAR)
-                 || '.com/page">Anchor ' || CAST(doc_id % 3 AS VARCHAR)
-                 || '</a> mid <a class="x" href="https://hub.com/">Hub link</a></p>'
-             WHEN 1 THEN '<a href="/local">Local</a> <a href="https://hub.com/">Hub '
-                 || CAST(doc_id % 2 AS VARCHAR) || '</a>'
-             WHEN 2 THEN 'plain text, no links at all'
-             ELSE '<a href="https://t' || CAST(doc_id % 7 AS VARCHAR) || '.com/page"></a>'
-           END AS html
-    FROM documents
-"""
+_ANCHOR_HTML = (
+    ['<p><a href="https://t', 7, '.com/page">Anchor ', 3, "</a> mid <a "
+     'class="x" href="https://hub.com/">Hub link</a></p>'],
+    ['<a href="/local">Local</a> <a href="https://hub.com/">Hub ', 2, "</a>"],
+    ["plain text, no links at all"],
+    ['<a href="https://t', 7, '.com/page"></a>'],
+)
+_ANCHOR_HTML_SQL = _docs_sql(_ANCHOR_HTML, "html")
 
 
 @query(
@@ -5057,21 +4951,8 @@ def q_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's window twin pins exactly."""
     from ocr_spark.functions.curation import anchor_texts
 
-    k = F.col("doc_id")
-    m = k % 4
-    t = F.concat(F.lit("https://t"), (k % 7).cast("string"), F.lit(".com/page"))
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<p><a href="'), t, F.lit('">Anchor '),
-            (k % 3).cast("string"),
-            F.lit('</a> mid <a class="x" href="https://hub.com/">Hub link</a></p>')))
-        .when(m == 1, F.concat(
-            F.lit('<a href="/local">Local</a> <a href="https://hub.com/">Hub '),
-            (k % 2).cast("string"), F.lit("</a>")))
-        .when(m == 2, F.lit("plain text, no links at all"))
-        .otherwise(F.concat(F.lit('<a href="'), t, F.lit('"></a>')))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _ANCHOR_HTML).alias("html"))
     return anchor_texts(docs, "doc_id", "html", top_k=3)
 
 
@@ -5085,19 +4966,22 @@ def _meta_paired_sql(tag: str, key_attr: str, key: str, val_attr: str) -> str:
             f"ELSE regexp_extract(html, '{rev}', 1) END")
 
 
-_META_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 6
-             WHEN 0 THEN '<html lang="en"><head><meta charset="UTF-8"><title>  Page
-  ' || CAST(doc_id % 9 AS VARCHAR) || ' </title><meta name="description" content="Desc ' || CAST(doc_id % 5 AS VARCHAR) || '"><meta property="og:title" content="OG ' || CAST(doc_id % 3 AS VARCHAR) || '"><link rel="canonical" href="https://c.com/p' || CAST(doc_id % 7 AS VARCHAR) || '"></head><body>x'
-             WHEN 1 THEN '<HTML LANG="EN-us"><META charset=utf-8><META CONTENT="RevDesc ' || CAST(doc_id % 4 AS VARCHAR) || '" NAME="description"><LINK HREF="https://c.com/r" REL="canonical"><TITLE>Upper ' || CAST(doc_id % 2 AS VARCHAR) || '</TITLE>'
-             WHEN 2 THEN 'plain text, no head metadata at all ' || CAST(doc_id AS VARCHAR)
-             WHEN 3 THEN '<html><title></title><meta property="og:title" content="Only OG"><body>'
-             WHEN 4 THEN '<html><meta name="keywords" content="not a description"><title>K ' || CAST(doc_id % 3 AS VARCHAR) || '</title>'
-             ELSE '<html LANG="De"><meta charset="iso-8859-1"><title>T' || CAST(doc_id % 4 AS VARCHAR) || '</title>'
-           END AS html
-    FROM documents
-"""
+_META_HTML = (
+    ['<html lang="en"><head><meta charset="UTF-8"><title>  Page\n  ', 9, " "
+     '</title><meta name="description" content="Desc ', 5, '"><meta '
+     'property="og:title" content="OG ', 3, '"><link rel="canonical" '
+     'href="https://c.com/p', 7, '"></head><body>x'],
+    ['<HTML LANG="EN-us"><META charset=utf-8><META CONTENT="RevDesc ', 4,
+     '" NAME="description"><LINK HREF="https://c.com/r" '
+     'REL="canonical"><TITLE>Upper ', 2, "</TITLE>"],
+    ["plain text, no head metadata at all ", _DOC_ID],
+    ['<html><title></title><meta property="og:title" content="Only '
+     'OG"><body>'],
+    ['<html><meta name="keywords" content="not a description"><title>K ', 3,
+     "</title>"],
+    ['<html LANG="De"><meta charset="iso-8859-1"><title>T', 4, "</title>"],
+)
+_META_HTML_SQL = _docs_sql(_META_HTML, "html")
 
 
 @query(
@@ -5124,51 +5008,20 @@ def q_page_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, and a keywords meta that must NOT match description."""
     from ocr_spark.functions.curation import page_metadata
 
-    k = F.col("doc_id")
-    m = k % 6
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<html lang="en"><head><meta charset="UTF-8"><title>  Page\n  '),
-            (k % 9).cast("string"),
-            F.lit(' </title><meta name="description" content="Desc '),
-            (k % 5).cast("string"),
-            F.lit('"><meta property="og:title" content="OG '),
-            (k % 3).cast("string"),
-            F.lit('"><link rel="canonical" href="https://c.com/p'),
-            (k % 7).cast("string"), F.lit('"></head><body>x')))
-        .when(m == 1, F.concat(
-            F.lit('<HTML LANG="EN-us"><META charset=utf-8><META CONTENT="RevDesc '),
-            (k % 4).cast("string"),
-            F.lit('" NAME="description"><LINK HREF="https://c.com/r" REL="canonical"><TITLE>Upper '),
-            (k % 2).cast("string"), F.lit("</TITLE>")))
-        .when(m == 2, F.concat(
-            F.lit("plain text, no head metadata at all "), k.cast("string")))
-        .when(m == 3, F.lit(
-            '<html><title></title><meta property="og:title" content="Only OG"><body>'))
-        .when(m == 4, F.concat(
-            F.lit('<html><meta name="keywords" content="not a description"><title>K '),
-            (k % 3).cast("string"), F.lit("</title>")))
-        .otherwise(F.concat(
-            F.lit('<html LANG="De"><meta charset="iso-8859-1"><title>T'),
-            (k % 4).cast("string"), F.lit("</title>")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _META_HTML).alias("html"))
     return page_metadata(docs, "doc_id", "html")
 
 
-_TABLE_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<table class="x"><tr><th>H1</th><th> H2 </th></tr><tr><td>a' || CAST(doc_id % 3 AS VARCHAR) || '</td><td><b>b' || CAST(doc_id % 5 AS VARCHAR) || '</b></td></tr></table>'
-             WHEN 1 THEN '<TABLE><TR><TD>t1r1c1</TD></TR></TABLE> mid <table><tr><td>x' || CAST(doc_id % 2 AS VARCHAR) || '</td><td></td></tr></table>'
-             WHEN 2 THEN 'no tables here ' || CAST(doc_id AS VARCHAR)
-             ELSE '<table>
-<tr>
-<td> v ' || CAST(doc_id % 7 AS VARCHAR) || ' </td></tr>
-</table>'
-           END AS html
-    FROM documents
-"""
+_TABLE_HTML = (
+    ['<table class="x"><tr><th>H1</th><th> H2 </th></tr><tr><td>a', 3,
+     "</td><td><b>b", 5, "</b></td></tr></table>"],
+    ["<TABLE><TR><TD>t1r1c1</TD></TR></TABLE> mid <table><tr><td>x", 2,
+     "</td><td></td></tr></table>"],
+    ["no tables here ", _DOC_ID],
+    ["<table>\n<tr>\n<td> v ", 7, " </td></tr>\n</table>"],
+)
+_TABLE_HTML_SQL = _docs_sql(_TABLE_HTML, "html")
 
 
 @query(
@@ -5199,22 +5052,8 @@ def q_html_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty cells, multi-line tables, and table-free pages."""
     from ocr_spark.functions.curation import html_tables
 
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<table class="x"><tr><th>H1</th><th> H2 </th></tr><tr><td>a'),
-            (k % 3).cast("string"), F.lit("</td><td><b>b"),
-            (k % 5).cast("string"), F.lit("</b></td></tr></table>")))
-        .when(m == 1, F.concat(
-            F.lit("<TABLE><TR><TD>t1r1c1</TD></TR></TABLE> mid <table><tr><td>x"),
-            (k % 2).cast("string"), F.lit("</td><td></td></tr></table>")))
-        .when(m == 2, F.concat(F.lit("no tables here "), k.cast("string")))
-        .otherwise(F.concat(
-            F.lit("<table>\n<tr>\n<td> v "), (k % 7).cast("string"),
-            F.lit(" </td></tr>\n</table>")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _TABLE_HTML).alias("html"))
     return html_tables(docs, "doc_id", "html")
 
 
@@ -5222,17 +5061,13 @@ _HOST_SQL = ("lower(regexp_replace(regexp_extract(url, "
              "'(?i)^[a-z][a-z0-9+.-]*://(\\[[^\\]]+\\]|[^/:?#]+)', 1), "
              "'^\\[|\\]$', '', 'g'))")
 
-_TEMPLATE_DOCS_SQL = """
-    SELECT doc_id AS doc,
-           'https://h' || CAST(doc_id % 5 AS VARCHAR) || '.com/p' || CAST(doc_id AS VARCHAR) AS url,
-           'Cookie banner h' || CAST(doc_id % 5 AS VARCHAR) ||
-           CASE WHEN doc_id % 2 = 0 THEN '
-NAV Menu ' ELSE '
-' END ||
-           '
-body text ' || CAST(doc_id AS VARCHAR) ||
-           CASE WHEN doc_id % 3 = 0 THEN '
-Footer (c) site' ELSE '' END AS text
+_TEMPLATE_URL = (["https://h", 5, ".com/p", _DOC_ID],)
+_TEMPLATE_TEXT = (["Cookie banner h", 5, (["\nNAV Menu "], ["\n"]),
+                   "\nbody text ", _DOC_ID,
+                   (["\nFooter (c) site"], [""], [""])],)
+_TEMPLATE_DOCS_SQL = f"""
+    SELECT doc_id AS doc, {case_sql('doc_id', _TEMPLATE_URL)} AS url,
+           {case_sql('doc_id', _TEMPLATE_TEXT)} AS text
     FROM documents
 """
 
@@ -5264,16 +5099,9 @@ def q_host_template_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import host_template_lines
 
     k = F.col("doc_id")
-    url = F.concat(F.lit("https://h"), (k % 5).cast("string"),
-                   F.lit(".com/p"), k.cast("string"))
-    text = F.concat(
-        F.lit("Cookie banner h"), (k % 5).cast("string"),
-        F.when(k % 2 == 0, F.lit("\nNAV Menu ")).otherwise(F.lit("\n")),
-        F.lit("\nbody text "), k.cast("string"),
-        F.when(k % 3 == 0, F.lit("\nFooter (c) site")).otherwise(F.lit("")),
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url"), text.alias("text"))
+        "doc_id", case_col(k, _TEMPLATE_URL).alias("url"),
+        case_col(k, _TEMPLATE_TEXT).alias("text"))
     return host_template_lines(docs, "doc_id", "url", "text")
 
 
@@ -5329,13 +5157,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return containment_pairs(docs.unionByName(frag), "doc_id", "text")
 
 
-_SPAN_CORPUS_SQL = """
-    SELECT doc_id AS doc,
-           CASE WHEN doc_id % 3 = 0 THEN 'cookie notice applies here ' ELSE '' END
-           || text ||
-           CASE WHEN doc_id % 4 = 0 THEN ' subscribe to our newsletter today' ELSE '' END AS text
-    FROM documents
-"""
+_SPAN_TEXT = ([(["cookie notice applies here "], [""], [""]), _TEXT,
+               ([" subscribe to our newsletter today"], [""], [""], [""])],)
+_SPAN_CORPUS_SQL = _docs_sql(_SPAN_TEXT, "text")
 
 
 @query(
@@ -5384,13 +5208,8 @@ def q_dup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     own natural duplicate grams are removed; unique prose survives."""
     from ocr_spark.functions.curation import dup_span_removal
 
-    k = F.col("doc_id")
-    text = F.concat(
-        F.when(k % 3 == 0, F.lit("cookie notice applies here ")).otherwise(F.lit("")),
-        F.col("text"),
-        F.when(k % 4 == 0, F.lit(" subscribe to our newsletter today")).otherwise(F.lit("")),
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", text.alias("text"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _SPAN_TEXT).alias("text"))
     return dup_span_removal(docs, "doc_id", "text", n=3, min_docs=2)
 
 
@@ -5452,7 +5271,9 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fingerprint_hamming_pairs(feats, "doc_id", "phash")
 
 
-_WARC_BLOB_SQL = """
+_WARC_REQUEST = (
+    ["WARC/1.0\nWARC-Type: request\n\nGET /p", _DOC_ID, "\n"], [""], [""])
+_WARC_BLOB_SQL = f"""
     SELECT doc_id AS doc,
            'WARC/1.0' || chr(10) || 'WARC-Type: response' || chr(10) ||
            'WARC-Target-URI: https://h' || CAST(doc_id % 7 AS VARCHAR) || '.com/p' || CAST(doc_id AS VARCHAR) || '/0' || chr(10) ||
@@ -5461,10 +5282,7 @@ _WARC_BLOB_SQL = """
            'WARC/1.0' || chr(10) || 'WARC-Type: metadata' || chr(10) ||
            'WARC-Target-URI: https://h' || CAST(doc_id % 7 AS VARCHAR) || '.com/p' || CAST(doc_id AS VARCHAR) || '/1' || chr(10) || chr(10) ||
            'len=' || CAST(length(text) AS VARCHAR) || chr(10) ||
-           CASE WHEN doc_id % 3 = 0 THEN
-             'WARC/1.0' || chr(10) || 'WARC-Type: request' || chr(10) || chr(10) ||
-             'GET /p' || CAST(doc_id AS VARCHAR) || chr(10)
-           ELSE '' END AS blob
+           {case_sql('doc_id', _WARC_REQUEST)} AS blob
     FROM documents
 """
 
@@ -5504,25 +5322,19 @@ def q_warc_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("WARC/1.0\nWARC-Type: metadata\nWARC-Target-URI: "),
         host, F.lit("/1"), F.lit("\n\nlen="),
         F.length("text").cast("string"), nl,
-        F.when(k % 3 == 0, F.concat(
-            F.lit("WARC/1.0\nWARC-Type: request\n\nGET /p"),
-            k.cast("string"), nl)).otherwise(F.lit("")),
+        case_col(k, _WARC_REQUEST),
     )
     docs = _cpu(spark, sf_dir, "documents").select("doc_id", blob.alias("blob"))
     return warc_split(docs, "doc_id", "blob")
 
 
-_HEADING_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<h1>Top ' || CAST(doc_id % 5 AS VARCHAR) || '</h1><p>x</p><h2> Sub <b>' || CAST(doc_id % 3 AS VARCHAR) || '</b> </h2><h3>deep</h3>'
-             WHEN 1 THEN '<H2 class="t">Upper ' || CAST(doc_id % 2 AS VARCHAR) || '</H2>'
-             WHEN 2 THEN 'no headings ' || CAST(doc_id AS VARCHAR)
-             ELSE '<h1>Multi
-line ' || CAST(doc_id % 7 AS VARCHAR) || '</h1>'
-           END AS html
-    FROM documents
-"""
+_HEADING_HTML = (
+    ["<h1>Top ", 5, "</h1><p>x</p><h2> Sub <b>", 3, "</b> </h2><h3>deep</h3>"],
+    ['<H2 class="t">Upper ', 2, "</H2>"],
+    ["no headings ", _DOC_ID],
+    ["<h1>Multi\nline ", 7, "</h1>"],
+)
+_HEADING_HTML_SQL = _docs_sql(_HEADING_HTML, "html")
 
 
 @query(
@@ -5545,33 +5357,18 @@ def q_html_headings(spark: SparkSession, sf_dir: str) -> DataFrame:
     and heading-free pages."""
     from ocr_spark.functions.curation import html_headings
 
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit("<h1>Top "), (k % 5).cast("string"),
-            F.lit("</h1><p>x</p><h2> Sub <b>"), (k % 3).cast("string"),
-            F.lit("</b> </h2><h3>deep</h3>")))
-        .when(m == 1, F.concat(
-            F.lit('<H2 class="t">Upper '), (k % 2).cast("string"), F.lit("</H2>")))
-        .when(m == 2, F.concat(F.lit("no headings "), k.cast("string")))
-        .otherwise(F.concat(
-            F.lit("<h1>Multi\nline "), (k % 7).cast("string"), F.lit("</h1>")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _HEADING_HTML).alias("html"))
     return html_headings(docs, "doc_id", "html")
 
 
-_DEPTH_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<div><p>a<b>x' || CAST(doc_id % 3 AS VARCHAR) || '</b></p><img src="s"><p>b</p></div>'
-             WHEN 1 THEN '<div><div><div>deep ' || CAST(doc_id % 3 AS VARCHAR) || '</div></div></div>'
-             WHEN 2 THEN 'plain ' || CAST(doc_id AS VARCHAR)
-             ELSE '<div><p>unclosed<br/>' || CAST(doc_id % 5 AS VARCHAR)
-           END AS html
-    FROM documents
-"""
+_DEPTH_HTML = (
+    ["<div><p>a<b>x", 3, '</b></p><img src="s"><p>b</p></div>'],
+    ["<div><div><div>deep ", 3, "</div></div></div>"],
+    ["plain ", _DOC_ID],
+    ["<div><p>unclosed<br/>", 5],
+)
+_DEPTH_HTML_SQL = _docs_sql(_DEPTH_HTML, "html")
 
 _NON_NESTING_SQL = ("(?i)^<(br|hr|img|meta|link|input|area|base|col|embed"
                     "|source|track|wbr)\\b|/>$")
@@ -5604,37 +5401,29 @@ def q_html_depth_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal), triple nesting, and tag-free pages."""
     from ocr_spark.functions.curation import html_depth_stats
 
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit("<div><p>a<b>x"), (k % 3).cast("string"),
-            F.lit('</b></p><img src="s"><p>b</p></div>')))
-        .when(m == 1, F.concat(
-            F.lit("<div><div><div>deep "), (k % 3).cast("string"),
-            F.lit("</div></div></div>")))
-        .when(m == 2, F.concat(F.lit("plain "), k.cast("string")))
-        .otherwise(F.concat(
-            F.lit("<div><p>unclosed<br/>"), (k % 5).cast("string")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _DEPTH_HTML).alias("html"))
     return html_depth_stats(docs, "doc_id", "html")
 
 
-_GATE_PAGE_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN 'https://example.org/other' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'https://example.org/public/p' || CAST(doc_id % 4 AS VARCHAR)
-             WHEN 2 THEN 'https://ok' || CAST(doc_id % 13 AS VARCHAR) || '.net/a'
-             WHEN 3 THEN 'https://ok' || CAST(doc_id % 13 AS VARCHAR) || '.net/b'
-             ELSE 'http://tie.com/x' || CAST(doc_id % 4 AS VARCHAR)
-           END AS url,
-           CASE doc_id % 5
-             WHEN 2 THEN '<html><meta name="robots" content="noindex"><body>x'
-             WHEN 4 THEN '<html><body>noindex appears only in body text'
-             ELSE '<html><body>clean page ' || CAST(doc_id AS VARCHAR)
-           END AS html
+_CLEAN_PAGE = ["<html><body>clean page ", _DOC_ID]
+_GATE_PAGE_URL = (
+    ["https://example.org/other", 3],
+    ["https://example.org/public/p", 4],
+    ["https://ok", 13, ".net/a"],
+    ["https://ok", 13, ".net/b"],
+    ["http://tie.com/x", 4],
+)
+_GATE_PAGE_HTML = (
+    _CLEAN_PAGE,
+    _CLEAN_PAGE,
+    ['<html><meta name="robots" content="noindex"><body>x'],
+    _CLEAN_PAGE,
+    ["<html><body>noindex appears only in body text"],
+)
+_GATE_PAGE_SQL = f"""
+    SELECT doc_id AS doc, {case_sql('doc_id', _GATE_PAGE_URL)} AS url,
+           {case_sql('doc_id', _GATE_PAGE_HTML)} AS html
     FROM documents
 """
 
@@ -5697,27 +5486,9 @@ def q_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import crawl_gate
 
     k = F.col("doc_id")
-    m = k % 5
-    url = (
-        F.when(m == 0, F.concat(
-            F.lit("https://example.org/other"), (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("https://example.org/public/p"), (k % 4).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("https://ok"), (k % 13).cast("string"), F.lit(".net/a")))
-        .when(m == 3, F.concat(
-            F.lit("https://ok"), (k % 13).cast("string"), F.lit(".net/b")))
-        .otherwise(F.concat(F.lit("http://tie.com/x"), (k % 4).cast("string")))
-    )
-    html = (
-        F.when(m == 2, F.lit(
-            '<html><meta name="robots" content="noindex"><body>x'))
-        .when(m == 4, F.lit("<html><body>noindex appears only in body text"))
-        .otherwise(F.concat(
-            F.lit("<html><body>clean page "), k.cast("string")))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", url.alias("url"), html.alias("html"))
+        "doc_id", case_col(k, _GATE_PAGE_URL).alias("url"),
+        case_col(k, _GATE_PAGE_HTML).alias("html"))
     rules = spark.createDataFrame(
         _ROBOTS_RULES, "host string, path_prefix string, allow int")
     bl = spark.createDataFrame(
@@ -5725,14 +5496,17 @@ def q_crawl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return crawl_gate(docs, "doc_id", "url", "html", rules, bl)
 
 
-_ROBOTS_BODY_SQL = """
-    SELECT 'h' || CAST(doc_id AS VARCHAR) || '.example' AS host,
-           CASE doc_id % 4
-             WHEN 0 THEN 'User-agent: *' || chr(10) || 'Disallow: /private' || chr(10) || 'Allow: /private/pub # comment' || chr(10) || chr(10) || 'User-agent: badbot' || chr(10) || 'Disallow: /'
-             WHEN 1 THEN 'User-agent: googlebot' || chr(10) || 'User-agent: *' || chr(10) || 'Disallow: /tmp' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'User-agent: badbot' || chr(10) || 'Disallow: /all'
-             ELSE 'Disallow: /orphan' || chr(10) || 'User-agent: *' || chr(10) || 'Disallow:' || chr(10) || 'Allow: /a' || CAST(doc_id % 3 AS VARCHAR)
-           END AS body
+_EXAMPLE_HOST = (["h", _DOC_ID, ".example"],)
+_ROBOTS_BODY = (
+    ["User-agent: *\nDisallow: /private\nAllow: /private/pub # comment\n\n"
+     "User-agent: badbot\nDisallow: /"],
+    ["User-agent: googlebot\nUser-agent: *\nDisallow: /tmp", 5],
+    ["User-agent: badbot\nDisallow: /all"],
+    ["Disallow: /orphan\nUser-agent: *\nDisallow:\nAllow: /a", 3],
+)
+_ROBOTS_BODY_SQL = f"""
+    SELECT {case_sql('doc_id', _EXAMPLE_HOST)} AS host,
+           {case_sql('doc_id', _ROBOTS_BODY)} AS body
     FROM documents
 """
 
@@ -5782,25 +5556,9 @@ def q_parse_robots(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import parse_robots
 
     k = F.col("doc_id")
-    m = k % 4
-    body = (
-        F.when(m == 0, F.lit(
-            "User-agent: *\nDisallow: /private\n"
-            "Allow: /private/pub # comment\n\n"
-            "User-agent: badbot\nDisallow: /"))
-        .when(m == 1, F.concat(
-            F.lit("User-agent: googlebot\nUser-agent: *\nDisallow: /tmp"),
-            (k % 5).cast("string")))
-        .when(m == 2, F.lit("User-agent: badbot\nDisallow: /all"))
-        .otherwise(F.concat(
-            F.lit("Disallow: /orphan\nUser-agent: *\nDisallow:\nAllow: /a"),
-            (k % 3).cast("string")))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        F.concat(F.lit("h"), F.col("doc_id").cast("string"),
-                 F.lit(".example")).alias("host"),
-        body.alias("body"),
-    )
+        case_col(k, _EXAMPLE_HOST).alias("host"),
+        case_col(k, _ROBOTS_BODY).alias("body"))
     return parse_robots(docs, "host", "body")
 
 
@@ -6006,16 +5764,18 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh_recall_eval(sample, "doc_id", "text")
 
 
-_JSONLD_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<html><script type="application/ld+json">{"@type":"Article","headline":"H' || CAST(doc_id % 5 AS VARCHAR) || '","datePublished":"2026-01-0' || CAST(1 + doc_id % 9 AS VARCHAR) || '","author":{"name":"A' || CAST(doc_id % 3 AS VARCHAR) || '"}}</script><body>x'
-             WHEN 1 THEN '<SCRIPT type="application/ld+json">{"headline":"Only ' || CAST(doc_id % 7 AS VARCHAR) || '"}</SCRIPT>'
-             WHEN 2 THEN '<html><body>no structured data ' || CAST(doc_id AS VARCHAR)
-             ELSE '<script type="application/ld+json">{broken json ' || CAST(doc_id AS VARCHAR) || '</script>'
-           END AS html
-    FROM documents
-"""
+_JSONLD_HTML = (
+    ["<html><script "
+     'type="application/ld+json">{"@type":"Article","headline":"H', 5,
+     '","datePublished":"2026-01-0', ("mod", 9, 1), '","author":{"name":"A',
+     3, '"}}</script><body>x'],
+    ['<SCRIPT type="application/ld+json">{"headline":"Only ', 7,
+     '"}</SCRIPT>'],
+    ["<html><body>no structured data ", _DOC_ID],
+    ['<script type="application/ld+json">{broken json ', _DOC_ID,
+     "</script>"],
+)
+_JSONLD_HTML_SQL = _docs_sql(_JSONLD_HTML, "html")
 
 
 @query(
@@ -6047,28 +5807,8 @@ def q_jsonld_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     must degrade to '' fields instead of erroring."""
     from ocr_spark.functions.curation import jsonld_extract
 
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<html><script type="application/ld+json">'
-                  '{"@type":"Article","headline":"H'),
-            (k % 5).cast("string"),
-            F.lit('","datePublished":"2026-01-0'),
-            (1 + k % 9).cast("string"),
-            F.lit('","author":{"name":"A'),
-            (k % 3).cast("string"),
-            F.lit('"}}</script><body>x')))
-        .when(m == 1, F.concat(
-            F.lit('<SCRIPT type="application/ld+json">{"headline":"Only '),
-            (k % 7).cast("string"), F.lit('"}</SCRIPT>')))
-        .when(m == 2, F.concat(
-            F.lit("<html><body>no structured data "), k.cast("string")))
-        .otherwise(F.concat(
-            F.lit('<script type="application/ld+json">{broken json '),
-            k.cast("string"), F.lit("</script>")))
-    )
-    docs = _cpu(spark, sf_dir, "documents").select("doc_id", html.alias("html"))
+    docs = _cpu(spark, sf_dir, "documents").select(
+        "doc_id", case_col(F.col("doc_id"), _JSONLD_HTML).alias("html"))
     return jsonld_extract(docs, "doc_id", "html")
 
 
@@ -6128,22 +5868,22 @@ def q_mime_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mime_sniff(docs, "doc_id", "payload")
 
 
-_SITEMAP_XML_SQL = """
-    SELECT 'h' || CAST(doc_id AS VARCHAR) || '.example' AS host,
-           CASE doc_id % 4
-             WHEN 0 THEN '<?xml version="1.0"?><urlset><url><loc>https://h'
-               || CAST(doc_id AS VARCHAR) || '.example/a</loc><lastmod>2026-01-0'
-               || CAST(1 + doc_id % 9 AS VARCHAR) || '</lastmod><priority>0.'
-               || CAST(doc_id % 10 AS VARCHAR) || '</priority></url><url><loc>https://h'
-               || CAST(doc_id AS VARCHAR) || '.example/b</loc></url></urlset>'
-             WHEN 1 THEN '<sitemapindex><sitemap><loc>https://h'
-               || CAST(doc_id AS VARCHAR) || '.example/s1.xml</loc><lastmod>2025-12-3'
-               || CAST(doc_id % 2 AS VARCHAR) || '</lastmod></sitemap><sitemap><loc>https://h'
-               || CAST(doc_id AS VARCHAR) || '.example/s2.xml</loc></sitemap></sitemapindex>'
-             WHEN 2 THEN '<URLSET><URL><LOC>  https://h'
-               || CAST(doc_id AS VARCHAR) || '.example/c  </LOC></URL><url><loc></loc></url></URLSET>'
-             ELSE '<html>not a sitemap at all ' || CAST(doc_id AS VARCHAR) || '</html>'
-           END AS xml
+_SITEMAP_XML = (
+    ['<?xml version="1.0"?><urlset><url><loc>https://h', _DOC_ID,
+     ".example/a</loc><lastmod>2026-01-0", ("mod", 9, 1),
+     "</lastmod><priority>0.", 10, "</priority></url><url><loc>https://h",
+     _DOC_ID, ".example/b</loc></url></urlset>"],
+    ["<sitemapindex><sitemap><loc>https://h", _DOC_ID,
+     ".example/s1.xml</loc><lastmod>2025-12-3", 2,
+     "</lastmod></sitemap><sitemap><loc>https://h", _DOC_ID,
+     ".example/s2.xml</loc></sitemap></sitemapindex>"],
+    ["<URLSET><URL><LOC>  https://h", _DOC_ID,
+     ".example/c  </LOC></URL><url><loc></loc></url></URLSET>"],
+    ["<html>not a sitemap at all ", _DOC_ID, "</html>"],
+)
+_SITEMAP_XML_SQL = f"""
+    SELECT {case_sql('doc_id', _EXAMPLE_HOST)} AS host,
+           {case_sql('doc_id', _SITEMAP_XML)} AS xml
     FROM documents
 """
 
@@ -6185,36 +5925,23 @@ def q_sitemap_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import sitemap_parse
 
     k = F.col("doc_id")
-    m = k % 4
-    ks = k.cast("string")
-    xml = (
-        F.when(m == 0, F.concat(
-            F.lit('<?xml version="1.0"?><urlset><url><loc>https://h'), ks,
-            F.lit(".example/a</loc><lastmod>2026-01-0"),
-            (k % 9 + 1).cast("string"),
-            F.lit("</lastmod><priority>0."), (k % 10).cast("string"),
-            F.lit("</priority></url><url><loc>https://h"), ks,
-            F.lit(".example/b</loc></url></urlset>")))
-        .when(m == 1, F.concat(
-            F.lit("<sitemapindex><sitemap><loc>https://h"), ks,
-            F.lit(".example/s1.xml</loc><lastmod>2025-12-3"),
-            (k % 2).cast("string"),
-            F.lit("</lastmod></sitemap><sitemap><loc>https://h"), ks,
-            F.lit(".example/s2.xml</loc></sitemap></sitemapindex>")))
-        .when(m == 2, F.concat(
-            F.lit("<URLSET><URL><LOC>  https://h"), ks,
-            F.lit(".example/c  </LOC></URL><url><loc></loc></url></URLSET>")))
-        .otherwise(F.concat(
-            F.lit("<html>not a sitemap at all "), ks, F.lit("</html>")))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        F.concat(F.lit("h"), ks, F.lit(".example")).alias("host"),
-        xml.alias("xml"),
-    )
+        case_col(k, _EXAMPLE_HOST).alias("host"),
+        case_col(k, _SITEMAP_XML).alias("xml"))
     return sitemap_parse(docs, "host", "xml")
 
 
-_CHARSET_PAYLOAD_SQL = """
+_NO_DECL = ["<html><body>no declaration ", _DOC_ID]
+_CHARSET_HTML = (
+    _NO_DECL,
+    ['<html><meta charset="UTF-8"><body>bom beats me'],
+    _NO_DECL,
+    ['<html><meta charset="ISO-8859-1"><body>x'],
+    ['<html><meta http-equiv="Content-Type" '
+     'content="text/html; charset=utf8"><body>y'],
+    _NO_DECL,
+)
+_CHARSET_PAYLOAD_SQL = f"""
     SELECT doc_id,
            unhex(CASE doc_id % 6
              WHEN 0 THEN 'EFBBBF' || substr(sha256(text), 1, 16)
@@ -6222,12 +5949,7 @@ _CHARSET_PAYLOAD_SQL = """
              WHEN 2 THEN 'FEFF' || substr(sha256(text), 1, 16)
              ELSE substr(sha256(text), 1, 32)
            END) AS payload,
-           CASE doc_id % 6
-             WHEN 1 THEN '<html><meta charset="UTF-8"><body>bom beats me'
-             WHEN 3 THEN '<html><meta charset="ISO-8859-1"><body>x'
-             WHEN 4 THEN '<html><meta http-equiv="Content-Type" content="text/html; charset=utf8"><body>y'
-             ELSE '<html><body>no declaration ' || CAST(doc_id AS VARCHAR)
-           END AS html
+           {case_sql('doc_id', _CHARSET_HTML)} AS html
     FROM documents
 """
 
@@ -6285,18 +6007,9 @@ def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(m == 2, F.concat(F.lit("FEFF"), sh))
         .otherwise(F.substring(F.sha2("text", 256), 1, 32))
     )
-    html = (
-        F.when(m == 1, F.lit(
-            '<html><meta charset="UTF-8"><body>bom beats me'))
-        .when(m == 3, F.lit('<html><meta charset="ISO-8859-1"><body>x'))
-        .when(m == 4, F.lit(
-            '<html><meta http-equiv="Content-Type" '
-            'content="text/html; charset=utf8"><body>y'))
-        .otherwise(F.concat(
-            F.lit("<html><body>no declaration "), k.cast("string")))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", F.unhex(hexpayload).alias("payload"), html.alias("html"))
+        "doc_id", F.unhex(hexpayload).alias("payload"),
+        case_col(k, _CHARSET_HTML).alias("html"))
     return charset_detect(docs, "doc_id", "payload", "html")
 
 
@@ -6356,6 +6069,21 @@ def _dot_sql(expr: str, depth: int = 8) -> str:
     return expr
 
 
+_RESOLVE_DEEP = ["https://h", 7, ".example/a/b/c.html?old=1#frag"]
+_RESOLVE_BASE = (_RESOLVE_DEEP,) * 5 + (
+    ["https://h", 7, ".example"], _RESOLVE_DEEP, ["garbage-not-a-url"])
+_RESOLVE_REF = (
+    ["https://other.org/abs#x"],
+    ["//cdn", 3, ".example/lib.js"],
+    ["/root/../img", 4, ".png"],
+    ["#section"],
+    ["?q=", 9],
+    ["sub/page", 5, ".html"],
+    ["../up/./x", 6, ".html"],
+    ["x/y.html"],
+)
+
+
 def _resolve_oracle() -> str:
     path_part = _dot_sql("regexp_extract(s, '^([^?]*)', 1)")
     pq = path_part + " || regexp_extract(s, '(\\?.*)$', 1)"
@@ -6363,21 +6091,8 @@ def _resolve_oracle() -> str:
     path_query_merged = pq.replace("(s, ", "(base_dir || ref, ")
     return f"""
     WITH raw AS (
-      SELECT CASE doc_id % 8
-               WHEN 5 THEN 'https://h' || CAST(doc_id % 7 AS VARCHAR) || '.example'
-               WHEN 7 THEN 'garbage-not-a-url'
-               ELSE 'https://h' || CAST(doc_id % 7 AS VARCHAR) || '.example/a/b/c.html?old=1#frag'
-             END AS base0,
-             CASE doc_id % 8
-               WHEN 0 THEN 'https://other.org/abs#x'
-               WHEN 1 THEN '//cdn' || CAST(doc_id % 3 AS VARCHAR) || '.example/lib.js'
-               WHEN 2 THEN '/root/../img' || CAST(doc_id % 4 AS VARCHAR) || '.png'
-               WHEN 3 THEN CASE WHEN doc_id % 2 = 0 THEN '' ELSE '#section' END
-               WHEN 4 THEN '?q=' || CAST(doc_id % 9 AS VARCHAR)
-               WHEN 5 THEN 'sub/page' || CAST(doc_id % 5 AS VARCHAR) || '.html'
-               WHEN 6 THEN '../up/./x' || CAST(doc_id % 6 AS VARCHAR) || '.html'
-               ELSE 'x/y.html'
-             END AS ref0
+      SELECT {case_sql('doc_id', _RESOLVE_BASE)} AS base0,
+             {case_sql('doc_id', _RESOLVE_REF)} AS ref0
       FROM documents),
     c AS (
       SELECT base0 AS base_out, ref0 AS ref_out,
@@ -6424,31 +6139,9 @@ def q_resolve_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import resolve_urls
 
     k = F.col("doc_id")
-    m = k % 8
-    base = (
-        F.when(m == 5, F.concat(
-            F.lit("https://h"), (k % 7).cast("string"), F.lit(".example")))
-        .when(m == 7, F.lit("garbage-not-a-url"))
-        .otherwise(F.concat(
-            F.lit("https://h"), (k % 7).cast("string"),
-            F.lit(".example/a/b/c.html?old=1#frag")))
-    )
-    ref = (
-        F.when(m == 0, F.lit("https://other.org/abs#x"))
-        .when(m == 1, F.concat(
-            F.lit("//cdn"), (k % 3).cast("string"), F.lit(".example/lib.js")))
-        .when(m == 2, F.concat(
-            F.lit("/root/../img"), (k % 4).cast("string"), F.lit(".png")))
-        .when(m == 3, F.when(k % 2 == 0, F.lit("")).otherwise(F.lit("#section")))
-        .when(m == 4, F.concat(F.lit("?q="), (k % 9).cast("string")))
-        .when(m == 5, F.concat(
-            F.lit("sub/page"), (k % 5).cast("string"), F.lit(".html")))
-        .when(m == 6, F.concat(
-            F.lit("../up/./x"), (k % 6).cast("string"), F.lit(".html")))
-        .otherwise(F.lit("x/y.html"))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        base.alias("base0"), ref.alias("ref0"))
+        case_col(k, _RESOLVE_BASE).alias("base0"),
+        case_col(k, _RESOLVE_REF).alias("ref0"))
     return resolve_urls(docs, "base0", "ref0")
 
 
@@ -7078,6 +6771,16 @@ _SURT_SQL = r"""
 """
 
 
+_CDX_URL = (
+    ["https://WWW.Site", 11, ".com/P/", 7, "?b=2&a=1"],
+    ["https://site", 11, ".com/p/", 7, "?a=1&b=2"],
+    ["http://[2001:db8::", 5, "]:8080/idx"],
+    ["HTTP://Host", 13, ".org"],
+)
+_RECAPTURE_TEXT = ([_TEXT], [_TEXT, "~"],
+                   [_TEXT, "~"])
+
+
 @query(
     "cdx_index",
     r"""
@@ -7087,20 +6790,11 @@ _SURT_SQL = r"""
       UNION ALL
       SELECT doc_id * 2 + 1 AS capture, CAST(doc_id + 1000000 AS BIGINT) AS ts,
              doc_id AS k,
-             CASE WHEN doc_id % 3 = 0 THEN text ELSE text || '~' END AS text
+             {recapture} AS text
       FROM documents),
     u AS (
       SELECT capture, ts, text,
-             CASE WHEN k % 4 = 0 THEN
-                    'https://WWW.Site' || CAST(k % 11 AS VARCHAR) || '.com/P/'
-                      || CAST(k % 7 AS VARCHAR) || '?b=2&a=1'
-                  WHEN k % 4 = 1 THEN
-                    'https://site' || CAST(k % 11 AS VARCHAR) || '.com/p/'
-                      || CAST(k % 7 AS VARCHAR) || '?a=1&b=2'
-                  WHEN k % 4 = 2 THEN
-                    'http://[2001:db8::' || CAST(k % 5 AS VARCHAR) || ']:8080/idx'
-                  ELSE 'HTTP://Host' || CAST(k % 13 AS VARCHAR) || '.org'
-             END AS url
+             {url} AS url
       FROM caps),
     s AS (
       SELECT capture, ts, text,
@@ -7131,7 +6825,9 @@ _SURT_SQL = r"""
            CAST(CASE WHEN MIN(ts) OVER (PARTITION BY urlkey, digest) < ts
                      THEN 1 ELSE 0 END AS BIGINT) AS is_revisit
     FROM base
-    """.replace("{surt}", _SURT_SQL.format(u="url")),
+    """.replace("{surt}", _SURT_SQL.format(u="url"))
+    .replace("{recapture}", case_sql("doc_id", _RECAPTURE_TEXT))
+    .replace("{url}", case_sql("k", _CDX_URL)),
 )
 def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDX-style capture index over a two-visit recrawl fixture: every
@@ -7145,19 +6841,7 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _cpu(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    url = (
-        F.when(k % 4 == 0, F.concat(
-            F.lit("https://WWW.Site"), (k % 11).cast("string"),
-            F.lit(".com/P/"), (k % 7).cast("string"), F.lit("?b=2&a=1")))
-        .when(k % 4 == 1, F.concat(
-            F.lit("https://site"), (k % 11).cast("string"),
-            F.lit(".com/p/"), (k % 7).cast("string"), F.lit("?a=1&b=2")))
-        .when(k % 4 == 2, F.concat(
-            F.lit("http://[2001:db8::"), (k % 5).cast("string"),
-            F.lit("]:8080/idx")))
-        .otherwise(F.concat(
-            F.lit("HTTP://Host"), (k % 13).cast("string"), F.lit(".org")))
-    )
+    url = case_col(k, _CDX_URL)
     caps = (
         d.select((k * 2).alias("capture"), k.cast("bigint").alias("ts"),
                  url.alias("url"), F.col("text"))
@@ -7166,8 +6850,7 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (k * 2 + 1).alias("capture"),
                 (k + 1000000).cast("bigint").alias("ts"),
                 url.alias("url"),
-                F.when(k % 3 == 0, F.col("text"))
-                .otherwise(F.concat(F.col("text"), F.lit("~"))).alias("text"),
+                case_col(k, _RECAPTURE_TEXT).alias("text"),
             ))
     )
     out = cdx_index(caps, "capture", "url", "ts", "text")
@@ -7544,11 +7227,10 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_novelty(_cpu(spark, sf_dir, "documents"), "doc_id", "text", 3)
 
 
-_SKEW_HOST_SQL = """
-      SELECT doc_id,
-             CASE WHEN doc_id % 10 < 4 THEN 'mega.example'
-                  ELSE 'h' || CAST(doc_id % 37 AS VARCHAR) || '.example'
-             END AS host
+# 40% of docs on one host
+_SKEW_HOST = (["mega.example"],) * 4 + (["h", 37, ".example"],) * 6
+_SKEW_HOST_SQL = f"""
+      SELECT doc_id, {case_sql('doc_id', _SKEW_HOST)} AS host
       FROM documents
 """
 
@@ -7588,11 +7270,8 @@ def q_salt_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout. See functions/curation.salt_skew_audit."""
     from ocr_spark.functions.curation import salt_skew_audit
 
-    k = F.col("doc_id")
-    host = F.when(k % 10 < 4, F.lit("mega.example")).otherwise(
-        F.concat(F.lit("h"), (k % 37).cast("string"), F.lit(".example")))
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", host.alias("host"))
+        "doc_id", case_col(F.col("doc_id"), _SKEW_HOST).alias("host"))
     return salt_skew_audit(docs, "host", "doc_id", n_buckets=16, n_salts=8)
 
 
@@ -8676,15 +8355,17 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cpu(spark, sf_dir, "documents"), "doc_id", "text", mask=8)
 
 
+# decomposed e + U+0301, then precomposed U+00E9
+_NFC_SUFFIX = ([" cafe\u0301"], [" caf\u00e9"], [""])
+
+
 @query(
     "nfc_audit",
-    """
+    f"""
     WITH synth AS (
       SELECT source,
              substr(text, 1, 30)
-             || CASE WHEN doc_id % 3 = 0 THEN ' cafe' || chr(769)
-                     WHEN doc_id % 3 = 1 THEN ' caf' || chr(233)
-                     ELSE '' END AS t
+             || {case_sql('doc_id', _NFC_SUFFIX)} AS t
       FROM documents)
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -8706,9 +8387,7 @@ def q_nfc_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.concat(
             F.substring("text", 1, 30),
-            F.when(F.col("doc_id") % 3 == 0, F.lit(" café"))
-            .when(F.col("doc_id") % 3 == 1, F.lit(" café"))
-            .otherwise(F.lit("")),
+            case_col(F.col("doc_id"), _NFC_SUFFIX),
         ).alias("t"),
     )
     return nfc_audit(synth, "source", "t")
@@ -8785,31 +8464,27 @@ def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"), "source", "lang")
 
 
+_FEED_HOST = (["h", 5],)
+_FEED_XML = (
+    ['<feed xmlns="http://www.w3.org/2005/Atom"><entry><title>A', _DOC_ID,
+     '</title><link href="http://a/', _DOC_ID, '"/><published>2026-01-0',
+     ("mod", 9, 1), "</published></entry><entry><title>B", _DOC_ID,
+     '</title><link href="http://b/', _DOC_ID, '"/><updated>2026-02-0',
+     ("mod", 9, 1), "</updated></entry></feed>"],
+    ['<rss version="2.0"><channel><item><title>R', _DOC_ID,
+     "</title><link> http://r/", _DOC_ID, " </link><pubDate>Tue 0",
+     ("mod", 9, 1), " Jan</pubDate></item><ITEM><TITLE>S", _DOC_ID,
+     "</TITLE></ITEM></channel></rss>"],
+    ["<html>not a feed ", _DOC_ID, "</html>"],
+)
+
+
 @query(
     "feed_parse",
-    """
+    f"""
     WITH synth AS (
-      SELECT 'h' || CAST(doc_id % 5 AS VARCHAR) AS host,
-             CASE WHEN doc_id % 3 = 0 THEN
-               '<feed xmlns="http://www.w3.org/2005/Atom">'
-               || '<entry><title>A' || CAST(doc_id AS VARCHAR)
-               || '</title><link href="http://a/' || CAST(doc_id AS VARCHAR)
-               || '"/><published>2026-01-0' || CAST(doc_id % 9 + 1 AS VARCHAR)
-               || '</published></entry>'
-               || '<entry><title>B' || CAST(doc_id AS VARCHAR)
-               || '</title><link href="http://b/' || CAST(doc_id AS VARCHAR)
-               || '"/><updated>2026-02-0' || CAST(doc_id % 9 + 1 AS VARCHAR)
-               || '</updated></entry></feed>'
-             WHEN doc_id % 3 = 1 THEN
-               '<rss version="2.0"><channel>'
-               || '<item><title>R' || CAST(doc_id AS VARCHAR)
-               || '</title><link> http://r/' || CAST(doc_id AS VARCHAR)
-               || ' </link><pubDate>Tue 0' || CAST(doc_id % 9 + 1 AS VARCHAR)
-               || ' Jan</pubDate></item>'
-               || '<ITEM><TITLE>S' || CAST(doc_id AS VARCHAR)
-               || '</TITLE></ITEM></channel></rss>'
-             ELSE '<html>not a feed ' || CAST(doc_id AS VARCHAR) || '</html>'
-             END AS xml
+      SELECT {case_sql('doc_id', _FEED_HOST)} AS host,
+             {case_sql('doc_id', _FEED_XML)} AS xml
       FROM documents),
     blocks AS (
       SELECT host,
@@ -8826,7 +8501,7 @@ def q_source_lang_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT host, kind, u.pos, u.block FROM (
         SELECT host, kind,
                list_transform(generate_series(0, len(bs) - 1),
-                 i -> {'pos': i, 'block': bs[i + 1]}) AS pairs
+                 i -> {{'pos': i, 'block': bs[i + 1]}}) AS pairs
         FROM blocks),
       LATERAL unnest(pairs) AS t(u))
     SELECT host, CAST(pos AS BIGINT) AS pos, kind,
@@ -8861,30 +8536,9 @@ def q_feed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import feed_parse
 
     k = F.col("doc_id")
-    ks = k.cast("string")
-    xml = (
-        F.when(k % 3 == 0, F.concat(
-            F.lit('<feed xmlns="http://www.w3.org/2005/Atom">'
-                  "<entry><title>A"), ks,
-            F.lit('</title><link href="http://a/'), ks,
-            F.lit('"/><published>2026-01-0'), (k % 9 + 1).cast("string"),
-            F.lit("</published></entry><entry><title>B"), ks,
-            F.lit('</title><link href="http://b/'), ks,
-            F.lit('"/><updated>2026-02-0'), (k % 9 + 1).cast("string"),
-            F.lit("</updated></entry></feed>")))
-        .when(k % 3 == 1, F.concat(
-            F.lit('<rss version="2.0"><channel><item><title>R'), ks,
-            F.lit("</title><link> http://r/"), ks,
-            F.lit(" </link><pubDate>Tue 0"), (k % 9 + 1).cast("string"),
-            F.lit(" Jan</pubDate></item><ITEM><TITLE>S"), ks,
-            F.lit("</TITLE></ITEM></channel></rss>")))
-        .otherwise(F.concat(F.lit("<html>not a feed "), ks,
-                            F.lit("</html>")))
-    )
     docs = _cpu(spark, sf_dir, "documents").select(
-        F.concat(F.lit("h"), (k % 5).cast("string")).alias("host"),
-        xml.alias("xml"),
-    )
+        case_col(k, _FEED_HOST).alias("host"),
+        case_col(k, _FEED_XML).alias("xml"))
     return feed_parse(docs, "host", "xml")
 
 
@@ -9132,14 +8786,16 @@ def q_script_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_TOK_HOST = (["h", 11],)
+_TOK = (["p", _DOC_ID],) * 3 + (["p", 5],) * 8
+
+
 @query(
     "url_token_entropy",
-    """
+    f"""
     WITH toks AS (
-      SELECT 'h' || CAST(doc_id % 11 AS VARCHAR) AS host,
-             CASE WHEN doc_id % 11 < 3
-                  THEN 'p' || CAST(doc_id AS VARCHAR)
-                  ELSE 'p' || CAST(doc_id % 5 AS VARCHAR) END AS tok
+      SELECT {case_sql('doc_id', _TOK_HOST)} AS host,
+             {case_sql('doc_id', _TOK)} AS tok
       FROM documents),
     counts AS (
       SELECT host AS g, tok AS k, COUNT(*) AS c FROM toks GROUP BY 1, 2),
@@ -9166,11 +8822,7 @@ def q_url_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     k = F.col("doc_id")
     toks = _t(spark, sf_dir, "documents").select(
-        F.concat(F.lit("h"), (k % 11).cast("string")).alias("host"),
-        F.when(k % 11 < 3, F.concat(F.lit("p"), k.cast("string")))
-        .otherwise(F.concat(F.lit("p"), (k % 5).cast("string")))
-        .alias("tok"),
-    )
+        case_col(k, _TOK_HOST).alias("host"), case_col(k, _TOK).alias("tok"))
     return group_entropy(toks, "host", "tok")
 
 
@@ -10003,17 +9655,18 @@ def q_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_NAV_HOST = (["h", 9],)
+# a third of each host's pages add a section crumb to the nav template
+_NAV_TEXT = (["NAV h", 9, " | home | about | ",
+              (["section ", 4, " | "],) * 3 + ([""],) * 6, _TEXT],)
+
+
 @query(
     "host_common_prefix",
-    """
+    f"""
     WITH pages AS (
-      SELECT 'h' || CAST(doc_id % 9 AS VARCHAR) AS host,
-             'NAV h' || CAST(doc_id % 9 AS VARCHAR)
-             || ' | home | about | '
-             || CASE WHEN doc_id % 9 < 3
-                     THEN 'section ' || CAST(doc_id % 4 AS VARCHAR) || ' | '
-                     ELSE '' END
-             || text AS t
+      SELECT {case_sql('doc_id', _NAV_HOST)} AS host,
+             {case_sql('doc_id', _NAV_TEXT)} AS t
       FROM documents),
     mm AS (
       SELECT host, COUNT(*) AS n_pages,
@@ -10048,16 +9701,7 @@ def q_host_common_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     only (host-sized, not corpus-sized)."""
     k = F.col("doc_id")
     pages = _cpu(spark, sf_dir, "documents").select(
-        F.concat(F.lit("h"), (k % 9).cast("string")).alias("host"),
-        F.concat(
-            F.lit("NAV h"), (k % 9).cast("string"),
-            F.lit(" | home | about | "),
-            F.when(k % 9 < 3,
-                   F.concat(F.lit("section "), (k % 4).cast("string"),
-                            F.lit(" | "))).otherwise(F.lit("")),
-            F.col("text"),
-        ).alias("t"),
-    )
+        case_col(k, _NAV_HOST).alias("host"), case_col(k, _NAV_TEXT).alias("t"))
     mm = pages.groupBy("host").agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.min("t").alias("lo"),
@@ -10088,14 +9732,10 @@ def q_host_common_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CENSUS_SUFFIX_SQL = (
-    "CASE WHEN doc_id % 3 = 0 THEN"
-    " ' mail a' || CAST(doc_id AS VARCHAR) || '@h.example now'"
-    " WHEN doc_id % 3 = 1 THEN"
-    " ' call +91 98765 43210 or visit http://h' ||"
-    " CAST(doc_id % 7 AS VARCHAR) || '.example/p'"
-    " ELSE ' ip 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.1 ref"
-    " 2345 6789 0123' END"
+_CENSUS_TEXT = (
+    [_TEXT, " mail a", _DOC_ID, "@h.example now"],
+    [_TEXT, " call +91 98765 43210 or visit http://h", 7, ".example/p"],
+    [_TEXT, " ip 10.0.", 256, ".1 ref 2345 6789 0123"],
 )
 
 _CENSUS_PATTERNS = [
@@ -10111,7 +9751,7 @@ _CENSUS_PATTERNS = [
     "entity_census",
     f"""
     WITH src AS (
-      SELECT source, text || {_CENSUS_SUFFIX_SQL} AS t FROM documents)
+      SELECT source, {case_sql('doc_id', _CENSUS_TEXT)} AS t FROM documents)
     SELECT source,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            {", ".join(
@@ -10127,11 +9767,7 @@ def q_entity_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the counting complement of pii_scrub's redaction). One codegen'd
     regexp projection + one source agg."""
     docs = _t(spark, sf_dir, "documents").select(
-        "source",
-        F.concat(F.col("text"),
-                 F.expr(_CENSUS_SUFFIX_SQL.replace("VARCHAR", "STRING")))
-        .alias("t"),
-    )
+        "source", case_col(F.col("doc_id"), _CENSUS_TEXT).alias("t"))
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n_docs")]
     for name, pat in _CENSUS_PATTERNS:
         aggs.append(
@@ -10946,20 +10582,15 @@ def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PDF_SYNTH_SQL = (
-    "CASE WHEN doc_id % 6 = 0 THEN"
-    " 'stream BT /F1 12 Tf 72 700 Td (Doc ' || CAST(doc_id AS VARCHAR)"
-    " || ') Tj 0 -14 Td (body line) Tj ET endstream'"
-    " WHEN doc_id % 6 = 1 THEN"
-    " 'stream BT [(Sp)(lit)-250(doc ' || CAST(doc_id AS VARCHAR)"
-    " || ')-50(x)] TJ ET BT (tail \\(esc\\)) Tj ET'"
-    " WHEN doc_id % 6 = 2 THEN"
-    " 'stream BT <4865> Tj ET'"
-    " WHEN doc_id % 6 = 3 THEN"
-    " 'stream BT [(He)<6c6c6f>-250(x)] TJ ET'"
-    " WHEN doc_id % 6 = 4 THEN"
-    " 'stream BT (oct \\065three) Tj ET'"
-    " ELSE '%PDF no text operators ' || CAST(doc_id AS VARCHAR) END"
+_PDF_SYNTH = (
+    ["stream BT /F1 12 Tf 72 700 Td (Doc ", _DOC_ID,
+     ") Tj 0 -14 Td (body line) Tj ET endstream"],
+    ["stream BT [(Sp)(lit)-250(doc ", _DOC_ID,
+     ")-50(x)] TJ ET BT (tail \\(esc\\)) Tj ET"],
+    ["stream BT <4865> Tj ET"],
+    ["stream BT [(He)<6c6c6f>-250(x)] TJ ET"],
+    ["stream BT (oct \\065three) Tj ET"],
+    ["%PDF no text operators ", _DOC_ID],
 )
 
 
@@ -10977,7 +10608,7 @@ def _pdf_oracle() -> str:
     part_strip = strip.format(X="x")
     return f"""
     WITH synth AS (
-      SELECT doc_id, {_PDF_SYNTH_SQL} AS pdf FROM documents),
+      SELECT doc_id, {case_sql('doc_id', _PDF_SYNTH)} AS pdf FROM documents),
     marked AS (
       SELECT doc_id, pdf,
              CAST(regexp_matches(pdf, '(?s)BT.*<[0-9A-Fa-f\\s]*>\\s*Tj')
@@ -11026,15 +10657,8 @@ def q_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     See extraction/pdf_text.py."""
     from ocr_spark.extraction.pdf_text import pdf_text_extract
 
-    # Spark SQL string literals process backslash escapes (DuckDB's do
-    # not), so backslash sequences need doubling on this side only.
-    spark_synth = (_PDF_SYNTH_SQL.replace("VARCHAR", "STRING")
-                   .replace("\\(", "\\\\(").replace("\\)", "\\\\)")
-                   .replace("\\0", "\\\\0"))
     synth = _cpu(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.expr(spark_synth).alias("pdf"),
-    )
+        "doc_id", case_col(F.col("doc_id"), _PDF_SYNTH).alias("pdf"))
     out = pdf_text_extract(synth, "doc_id", "pdf")
     return out.select(F.col("doc").alias("doc_id"), "n_blocks", "n_runs",
                       "text", "rejected")
@@ -11505,21 +11129,16 @@ def q_kv_from_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DOC_DATE_SYNTH = (
-    "'published 2026-0' || CAST(doc_id % 9 + 1 AS VARCHAR)"
-    " || '-1' || CAST(doc_id % 9 AS VARCHAR)"
-    " || ' updated 2026-0' || CAST(doc_id % 9 + 1 AS VARCHAR)"
-    " || '-1' || CAST(doc_id % 9 AS VARCHAR)"
-    " || CASE WHEN doc_id % 3 = 0"
-    "         THEN ' ref 1999-12-31' ELSE '' END || ' ' "
-)
+_DOC_DATE = (["published 2026-0", ("mod", 9, 1), "-1", 9,
+              " updated 2026-0", ("mod", 9, 1), "-1", 9,
+              ([" ref 1999-12-31"], [""], [""]), " ", _TEXT],)
 
 
 @query(
     "doc_date_infer",
     f"""
     WITH synth AS (
-      SELECT doc_id, {_DOC_DATE_SYNTH} || text AS t FROM documents),
+      SELECT doc_id, {case_sql('doc_id', _DOC_DATE)} AS t FROM documents),
     dates AS (
       SELECT doc_id,
              unnest(regexp_extract_all(t,
@@ -11550,10 +11169,7 @@ def q_doc_date_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, date) agg + one argmax window."""
     k = F.col("doc_id")
     synth = _cpu(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(F.expr(_DOC_DATE_SYNTH.replace("VARCHAR", "STRING")),
-                 F.col("text")).alias("t"),
-    )
+        "doc_id", case_col(k, _DOC_DATE).alias("t"))
     dates = synth.select(
         "doc_id",
         F.explode(F.regexp_extract_all(
@@ -11752,20 +11368,23 @@ def q_verhoeff_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_CARD_TEXT = (
+    [_TEXT, " card 4111111111111111 ok"],
+    [_TEXT, " ref 4111111111111112 no"],
+    [_TEXT, " none"],
+)
+
+
 @query(
     "luhn_pii",
-    """
+    f"""
     WITH synth AS (
       SELECT source, doc_id,
-             text || CASE WHEN doc_id % 3 = 0
-                     THEN ' card 4111111111111111 ok'
-                     WHEN doc_id % 3 = 1
-                     THEN ' ref 4111111111111112 no'
-                     ELSE ' none' END AS t
+             {case_sql('doc_id', _CARD_TEXT)} AS t
       FROM documents),
     hits AS (
       SELECT source, doc_id,
-             unnest(regexp_extract_all(t, '[0-9]{16}', 0)) AS num
+             unnest(regexp_extract_all(t, '[0-9]{{16}}', 0)) AS num
       FROM synth),
     checked AS (
       SELECT source, num,
@@ -11793,16 +11412,8 @@ def q_luhn_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     destroys legitimate identifiers 10x more often). Spark's native
     luhn_check runs in codegen; the oracle unrolls the double-every-
     second-digit sum. One regexp explode + source agg."""
-    k = F.col("doc_id")
     synth = _t(spark, sf_dir, "documents").select(
-        "source",
-        F.concat(
-            F.col("text"),
-            F.when(k % 3 == 0, F.lit(" card 4111111111111111 ok"))
-            .when(k % 3 == 1, F.lit(" ref 4111111111111112 no"))
-            .otherwise(F.lit(" none")),
-        ).alias("t"),
-    )
+        "source", case_col(F.col("doc_id"), _CARD_TEXT).alias("t"))
     hits = synth.select(
         "source",
         F.explode(F.regexp_extract_all(
@@ -12489,20 +12100,15 @@ def q_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cpu(spark, sf_dir, "documents"), "doc_id", "text")
 
 
-_PDF_INFO_SYNTH_SQL = (
-    "CASE WHEN doc_id % 5 = 0 THEN"
-    " '%PDF-1.4 << /Title (Report ' || CAST(doc_id AS VARCHAR)"
-    " || ') /Author (Crawler Bot) /Producer (ocrspark 1.0)"
-    " /CreationDate (D:20240115093045) >>'"
-    " WHEN doc_id % 5 = 1 THEN"
-    " '%PDF-1.4 << /Title (Esc \\(draft\\) ' || CAST(doc_id AS VARCHAR)"
-    " || ') /CreationDate (D:20231201) >>'"
-    " WHEN doc_id % 5 = 2 THEN"
-    " '%PDF-1.4 << /Author (Anon) /CreationDate (D:2022) >>'"
-    " WHEN doc_id % 5 = 3 THEN"
-    " '%PDF-1.4 << /Title (T' || CAST(doc_id AS VARCHAR)"
-    " || ') /CreationDate (D:20240301120000+05''30'') >>'"
-    " ELSE '%PDF-1.4 no info dict' END"
+_PDF_INFO_SYNTH = (
+    ["%PDF-1.4 << /Title (Report ", _DOC_ID, ") /Author (Crawler Bot) "
+     "/Producer (ocrspark 1.0) /CreationDate (D:20240115093045) >>"],
+    ["%PDF-1.4 << /Title (Esc \\(draft\\) ", _DOC_ID,
+     ") /CreationDate (D:20231201) >>"],
+    ["%PDF-1.4 << /Author (Anon) /CreationDate (D:2022) >>"],
+    ["%PDF-1.4 << /Title (T", _DOC_ID,
+     ") /CreationDate (D:20240301120000+05'30') >>"],
+    ["%PDF-1.4 no info dict"],
 )
 
 
@@ -12528,7 +12134,8 @@ def _pdf_info_oracle() -> str:
                 f" ELSE '{dflt}' END")
     return f"""
     WITH synth AS (
-      SELECT doc_id, {_PDF_INFO_SYNTH_SQL} AS pdf FROM documents),
+      SELECT doc_id, {case_sql('doc_id', _PDF_INFO_SYNTH)} AS pdf
+      FROM documents),
     dd AS (
       SELECT doc_id, pdf,
              regexp_extract(pdf,
@@ -12557,10 +12164,8 @@ def q_pdf_info_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     See extraction/pdf_text.pdf_info_metadata."""
     from ocr_spark.extraction.pdf_text import pdf_info_metadata
 
-    spark_synth = (_PDF_INFO_SYNTH_SQL.replace("VARCHAR", "STRING")
-                   .replace("\\(", "\\\\(").replace("\\)", "\\\\)"))
     synth = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(spark_synth).alias("pdf"))
+        "doc_id", case_col(F.col("doc_id"), _PDF_INFO_SYNTH).alias("pdf"))
     return pdf_info_metadata(synth, "doc_id", "pdf")
 
 
@@ -13141,16 +12746,17 @@ _CONFUSABLE_FROM = "аеорсхукіѕАЕОРСХКВМНТοαν"
 _CONFUSABLE_TO = "aeopcxykisAEOPCXKBMHToav"
 
 
+# Cyrillic look-alikes: 'p\u0430yp\u0430l account', '\u0441r\u0443pto wallet'
+_HOMOGLYPH_TEXT = (
+    [_TEXT, " pаypаl account"], [_TEXT, " сrуpto wallet"], [_TEXT], [_TEXT])
+
+
 @query(
     "homoglyph_fold",
     f"""
     WITH u AS (
       SELECT doc_id,
-             CASE doc_id % 4
-               WHEN 0 THEN text || ' pаypаl account'
-               WHEN 1 THEN text || ' сrуpto wallet'
-               ELSE text
-             END AS text
+             {case_sql('doc_id', _HOMOGLYPH_TEXT)} AS text
       FROM documents),
     toks AS (
       SELECT doc_id,
@@ -13183,12 +12789,7 @@ def q_homoglyph_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOF filter, no Python, no shuffle."""
     docs = _cpu(spark, sf_dir, "documents").select(
         "doc_id",
-        F.when(F.col("doc_id") % 4 == 0,
-               F.concat("text", F.lit(" pаypаl account")))
-        .when(F.col("doc_id") % 4 == 1,
-              F.concat("text", F.lit(" сrуpto wallet")))
-        .otherwise(F.col("text"))
-        .alias("text"),
+        case_col(F.col("doc_id"), _HOMOGLYPH_TEXT).alias("text"),
     )
     words = F.filter(
         F.split(F.trim(F.col("text")), r"\s+"), lambda w: w != "")
@@ -13304,24 +12905,17 @@ _BIDI_CHARS = "".join(chr(c) for c in range(0x202A, 0x202F)) + "".join(
 _ZW_CHARS = "​‌‍﻿"
 
 
-def _invisible_synth(engine: str) -> str:
-    cat = "||" if engine == "duck" else "||"
-    bidi_pair = chr(0x202E) + "live" + chr(0x202C)
-    zw_word = "wa" + chr(0x200B) + "tch " + chr(0xFEFF)
-    return f"""
-      CASE doc_id % 5
-        WHEN 0 THEN text {cat} ' {bidi_pair}'
-        WHEN 1 THEN text {cat} ' {zw_word}'
-        ELSE text
-      END
-    """
+# an RLO..PDF bidi pair; a zero-width-split word plus a BOM
+_INVISIBLE_TEXT = ([_TEXT, " \u202elive\u202c"],
+                   [_TEXT, " wa\u200btch \ufeff"], [_TEXT], [_TEXT], [_TEXT])
 
 
 @query(
     "invisible_chars_audit",
     f"""
     WITH u AS (
-      SELECT doc_id, {_invisible_synth("duck")} AS text FROM documents)
+      SELECT doc_id, {case_sql('doc_id', _INVISIBLE_TEXT)} AS text
+      FROM documents)
     SELECT doc_id,
            CAST(length(text)
                 - length(regexp_replace(text, '[{_BIDI_CHARS}]', '', 'g'))
@@ -13346,7 +12940,7 @@ def q_invisible_chars_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     reorder tokens. Planted per doc_id class (an RLO..PDF pair, a
     zero-width-split word + BOM). One zero-shuffle regexp projection."""
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", F.expr(_invisible_synth("spark")).alias("text"))
+        "doc_id", case_col(F.col("doc_id"), _INVISIBLE_TEXT).alias("text"))
     bidi = f"[{_BIDI_CHARS}]"
     zw = f"[{_ZW_CHARS}]"
     both = f"[{_BIDI_CHARS}{_ZW_CHARS}]"
@@ -14101,31 +13695,13 @@ def q_supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
 # redirects, responsive-image srcset resolution, truncation detection.
 # ===========================================================================
 
-_LISTS_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<ul><li>alpha ' || CAST(doc_id % 3 AS VARCHAR) || '</li><li>beta</li></ul><ol><li>one</li></ol>'
-             WHEN 1 THEN '<UL class="nav"><LI> spaced item </LI></UL>'
-             WHEN 2 THEN 'no lists here ' || CAST(doc_id AS VARCHAR)
-             ELSE '<ol start="3"><li><b>bold</b> tail</li><li>plain ' || CAST(doc_id % 2 AS VARCHAR) || '</li></ol>'
-           END AS html
-    FROM documents
-"""
-
-
-def _lists_html_spark() -> Column:
-    k = F.col("doc_id")
-    m = k % 4
-    return (
-        F.when(m == 0, F.concat(
-            F.lit("<ul><li>alpha "), (k % 3).cast("string"),
-            F.lit("</li><li>beta</li></ul><ol><li>one</li></ol>")))
-        .when(m == 1, F.lit('<UL class="nav"><LI> spaced item </LI></UL>'))
-        .when(m == 2, F.concat(F.lit("no lists here "), k.cast("string")))
-        .otherwise(F.concat(
-            F.lit('<ol start="3"><li><b>bold</b> tail</li><li>plain '),
-            (k % 2).cast("string"), F.lit("</li></ol>")))
-    )
+_LISTS_HTML = (
+    ["<ul><li>alpha ", 3, "</li><li>beta</li></ul><ol><li>one</li></ol>"],
+    ['<UL class="nav"><LI> spaced item </LI></UL>'],
+    ["no lists here ", _DOC_ID],
+    ['<ol start="3"><li><b>bold</b> tail</li><li>plain ', 2, "</li></ol>"],
+)
+_LISTS_HTML_SQL = _docs_sql(_LISTS_HTML, "html")
 
 
 @query(
@@ -14155,34 +13731,17 @@ def q_html_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import html_lists
 
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", _lists_html_spark().alias("html"))
+        "doc_id", case_col(F.col("doc_id"), _LISTS_HTML).alias("html"))
     return html_lists(docs, "doc_id", "html")
 
 
-_REFRESH_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<meta http-equiv="refresh" content="5; url=https://next.com/p' || CAST(doc_id % 3 AS VARCHAR) || '">'
-             WHEN 1 THEN '<META CONTENT="0;URL=https://r.example/x" HTTP-EQUIV="Refresh">'
-             WHEN 2 THEN '<meta http-equiv="refresh" content="30">'
-             ELSE '<meta name="viewport" content="width=1">'
-           END AS html
-    FROM documents
-"""
-
-
-def _refresh_html_spark() -> Column:
-    k = F.col("doc_id")
-    m = k % 4
-    return (
-        F.when(m == 0, F.concat(
-            F.lit('<meta http-equiv="refresh" content="5; url=https://next.com/p'),
-            (k % 3).cast("string"), F.lit('">')))
-        .when(m == 1, F.lit(
-            '<META CONTENT="0;URL=https://r.example/x" HTTP-EQUIV="Refresh">'))
-        .when(m == 2, F.lit('<meta http-equiv="refresh" content="30">'))
-        .otherwise(F.lit('<meta name="viewport" content="width=1">'))
-    )
+_REFRESH_HTML = (
+    ['<meta http-equiv="refresh" content="5; url=https://next.com/p', 3, '">'],
+    ['<META CONTENT="0;URL=https://r.example/x" HTTP-EQUIV="Refresh">'],
+    ['<meta http-equiv="refresh" content="30">'],
+    ['<meta name="viewport" content="width=1">'],
+)
+_REFRESH_HTML_SQL = _docs_sql(_REFRESH_HTML, "html")
 
 
 @query(
@@ -14211,42 +13770,20 @@ def q_meta_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import meta_refresh
 
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", _refresh_html_spark().alias("html"))
+        "doc_id", case_col(F.col("doc_id"), _REFRESH_HTML).alias("html"))
     return meta_refresh(docs, "doc_id", "html")
 
 
-_SRCSET_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN '<img srcset="https://i.com/a' || CAST(doc_id % 7 AS VARCHAR) || '.jpg 480w, https://i.com/b' || CAST(doc_id % 7 AS VARCHAR) || '.jpg 800w" src="x.jpg">'
-             WHEN 1 THEN '<img srcset="https://i.com/c' || CAST(doc_id % 3 AS VARCHAR) || '.jpg 320w">'
-             WHEN 2 THEN '<img src="plain.jpg">'
-             WHEN 3 THEN '<img srcset="https://i.com/d.jpg 1x, https://i.com/e.jpg 2x">'
-             ELSE '<IMG SRCSET="https://i.com/f' || CAST(doc_id % 2 AS VARCHAR) || '.jpg 100w, https://i.com/g' || CAST(doc_id % 2 AS VARCHAR) || '.jpg 1600w, https://i.com/h.jpg 2x">'
-           END AS html
-    FROM documents
-"""
-
-
-def _srcset_html_spark() -> Column:
-    k = F.col("doc_id")
-    m = k % 5
-    return (
-        F.when(m == 0, F.concat(
-            F.lit('<img srcset="https://i.com/a'), (k % 7).cast("string"),
-            F.lit(".jpg 480w, https://i.com/b"), (k % 7).cast("string"),
-            F.lit('.jpg 800w" src="x.jpg">')))
-        .when(m == 1, F.concat(
-            F.lit('<img srcset="https://i.com/c'), (k % 3).cast("string"),
-            F.lit('.jpg 320w">')))
-        .when(m == 2, F.lit('<img src="plain.jpg">'))
-        .when(m == 3, F.lit(
-            '<img srcset="https://i.com/d.jpg 1x, https://i.com/e.jpg 2x">'))
-        .otherwise(F.concat(
-            F.lit('<IMG SRCSET="https://i.com/f'), (k % 2).cast("string"),
-            F.lit(".jpg 100w, https://i.com/g"), (k % 2).cast("string"),
-            F.lit('.jpg 1600w, https://i.com/h.jpg 2x">')))
-    )
+_SRCSET_HTML = (
+    ['<img srcset="https://i.com/a', 7, ".jpg 480w, https://i.com/b", 7,
+     '.jpg 800w" src="x.jpg">'],
+    ['<img srcset="https://i.com/c', 3, '.jpg 320w">'],
+    ['<img src="plain.jpg">'],
+    ['<img srcset="https://i.com/d.jpg 1x, https://i.com/e.jpg 2x">'],
+    ['<IMG SRCSET="https://i.com/f', 2, ".jpg 100w, https://i.com/g", 2,
+     '.jpg 1600w, https://i.com/h.jpg 2x">'],
+)
+_SRCSET_HTML_SQL = _docs_sql(_SRCSET_HTML, "html")
 
 
 @query(
@@ -14281,21 +13818,18 @@ def q_srcset_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ocr_spark.functions.curation import srcset_best
 
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", _srcset_html_spark().alias("html"))
+        "doc_id", case_col(F.col("doc_id"), _SRCSET_HTML).alias("html"))
     return srcset_best(docs, "doc_id", "html")
 
 
-_TRUNC_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           text || CASE doc_id % 5
-             WHEN 0 THEN ' truncated mid sent'
-             WHEN 1 THEN ' done...'
-             WHEN 2 THEN ' finished.'
-             WHEN 3 THEN ' stop!'
-             ELSE ' sent to the'
-           END AS text
-    FROM documents
-"""
+_TRUNC_TEXT = (
+    [_TEXT, " truncated mid sent"],
+    [_TEXT, " done..."],
+    [_TEXT, " finished."],
+    [_TEXT, " stop!"],
+    [_TEXT, " sent to the"],
+)
+_TRUNC_TEXT_SQL = _docs_sql(_TRUNC_TEXT, "text")
 
 
 @query(
@@ -14324,17 +13858,8 @@ def q_truncation_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     trailing ellipsis, or a dangling function word all flag the doc.
     Planted suffixes exercise all branches deterministically. One
     zero-shuffle regexp projection."""
-    k = F.col("doc_id")
-    m = k % 5
-    text = F.concat(
-        F.col("text"),
-        F.when(m == 0, F.lit(" truncated mid sent"))
-        .when(m == 1, F.lit(" done..."))
-        .when(m == 2, F.lit(" finished."))
-        .when(m == 3, F.lit(" stop!"))
-        .otherwise(F.lit(" sent to the")))
     docs = _cpu(spark, sf_dir, "documents").select(
-        "doc_id", text.alias("text"))
+        "doc_id", case_col(F.col("doc_id"), _TRUNC_TEXT).alias("text"))
     terminal = F.col("text").rlike("[.!?\"')\\]]\\s*$")
     ellipsis = F.col("text").rlike("(\\.\\.\\.|…)\\s*$")
     dangling = F.col("text").rlike(
@@ -14425,17 +13950,14 @@ def q_pagination_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_OBFUSCATED_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN 'contact alice' || CAST(doc_id % 3 AS VARCHAR) || ' [at] example [dot] com for info'
-             WHEN 1 THEN 'mail bob(at)site' || CAST(doc_id % 2 AS VARCHAR) || '(dot)org today'
-             WHEN 2 THEN 'write carol AT corp DOT net please'
-             WHEN 3 THEN 'already plain dave@real.io here'
-             ELSE 'no contact info at all'
-           END AS text
-    FROM documents
-"""
+_OBFUSCATED = (
+    ["contact alice", 3, " [at] example [dot] com for info"],
+    ["mail bob(at)site", 2, "(dot)org today"],
+    ["write carol AT corp DOT net please"],
+    ["already plain dave@real.io here"],
+    ["no contact info at all"],
+)
+_OBFUSCATED_SQL = _docs_sql(_OBFUSCATED, "text")
 
 _AT_PAT = (r"([A-Za-z0-9._%+-]+)\s*"
            r"(?:\[\s*at\s*\]|\(\s*at\s*\)|\s+AT\s+)\s*"
@@ -14469,20 +13991,7 @@ def q_email_deobfuscate(spark: SparkSession, sf_dir: str) -> DataFrame:
     leaks the PII it was built to remove. Normalizes [at]/(at)/AT and
     [dot]/(dot)/DOT forms to canonical addresses; plain addresses pass
     through with was_obfuscated=0. Zero-shuffle regexp projection."""
-    k = F.col("doc_id")
-    m = k % 5
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("contact alice"), (k % 3).cast("string"),
-            F.lit(" [at] example [dot] com for info")))
-        .when(m == 1, F.concat(
-            F.lit("mail bob(at)site"), (k % 2).cast("string"),
-            F.lit("(dot)org today")))
-        .when(m == 2, F.lit("write carol AT corp DOT net please"))
-        .when(m == 3, F.lit("already plain dave@real.io here"))
-        .otherwise(F.lit("no contact info at all")))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _OBFUSCATED, "text")
     user = F.regexp_extract("text", _AT_PAT, 1)
     rebuilt = F.concat(user, F.lit("@"),
                        F.regexp_extract("text", _AT_PAT, 2), F.lit("."),
@@ -14496,17 +14005,13 @@ def q_email_deobfuscate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMMENT_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<p>keep ' || CAST(doc_id % 3 AS VARCHAR) || '</p><!-- secret note --><p>also keep</p>'
-             WHEN 1 THEN 'before<!-- multi
-line comment -->after<!-- second -->'
-             WHEN 2 THEN '<!--[if IE]><p>ie only</p><![endif]-->content'
-             ELSE 'no comments ' || CAST(doc_id AS VARCHAR)
-           END AS html
-    FROM documents
-"""
+_COMMENT_HTML = (
+    ["<p>keep ", 3, "</p><!-- secret note --><p>also keep</p>"],
+    ["before<!-- multi\nline comment -->after<!-- second -->"],
+    ["<!--[if IE]><p>ie only</p><![endif]-->content"],
+    ["no comments ", _DOC_ID],
+)
+_COMMENT_HTML_SQL = _docs_sql(_COMMENT_HTML, "html")
 
 
 @query(
@@ -14531,18 +14036,7 @@ def q_html_comment_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     text; this is the pre-pass count + strip with conditional-comment
     detection. Non-greedy dotall regexp so adjacent comments never merge
     across the gap. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit("<p>keep "), (k % 3).cast("string"),
-            F.lit("</p><!-- secret note --><p>also keep</p>")))
-        .when(m == 1, F.lit(
-            "before<!-- multi\nline comment -->after<!-- second -->"))
-        .when(m == 2, F.lit("<!--[if IE]><p>ie only</p><![endif]-->content"))
-        .otherwise(F.concat(F.lit("no comments "), k.cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _COMMENT_HTML, "html")
     pat = r"(?s)<!--.*?-->"
     stripped = F.regexp_replace("html", pat, "")
     return docs.select(
@@ -14557,16 +14051,15 @@ def q_html_comment_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AMP_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<html><link rel="amphtml" href="https://m.site/amp/' || CAST(doc_id % 5 AS VARCHAR) || '"><body>canonical page'
-             WHEN 1 THEN '<html amp><link rel="canonical" href="https://site/p' || CAST(doc_id % 3 AS VARCHAR) || '"><body>amp page'
-             WHEN 2 THEN '<html ⚡><body>emoji amp page'
-             ELSE '<html><body>ordinary page ' || CAST(doc_id AS VARCHAR)
-           END AS html
-    FROM documents
-"""
+_AMP_HTML = (
+    ['<html><link rel="amphtml" href="https://m.site/amp/', 5,
+     '"><body>canonical page'],
+    ['<html amp><link rel="canonical" href="https://site/p', 3,
+     '"><body>amp page'],
+    ["<html ⚡><body>emoji amp page"],
+    ["<html><body>ordinary page ", _DOC_ID],
+)
+_AMP_HTML_SQL = _docs_sql(_AMP_HTML, "html")
 
 
 @query(
@@ -14592,20 +14085,7 @@ def q_amp_variant_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides dedup needs to pair them. Zero-shuffle projection."""
     from ocr_spark.functions.curation import _paired_attr
 
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<html><link rel="amphtml" href="https://m.site/amp/'),
-            (k % 5).cast("string"), F.lit('"><body>canonical page')))
-        .when(m == 1, F.concat(
-            F.lit('<html amp><link rel="canonical" href="https://site/p'),
-            (k % 3).cast("string"), F.lit('"><body>amp page')))
-        .when(m == 2, F.lit("<html ⚡><body>emoji amp page"))
-        .otherwise(F.concat(
-            F.lit("<html><body>ordinary page "), k.cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _AMP_HTML, "html")
     h = F.col("html")
     return docs.select(
         "doc",
@@ -14697,23 +14177,14 @@ def q_streaming_click_attribution(spark: SparkSession,
 # Poisson crawl-change-rate estimation.
 # ===========================================================================
 
-_MD_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN '<h2>Title ' || CAST(doc_id % 7 AS VARCHAR)
-                         || '</h2><p>Intro paragraph.</p>'
-             WHEN 1 THEN '<h3>Sub</h3><ul><li>alpha</li><li>beta '
-                         || CAST(doc_id % 3 AS VARCHAR) || '</li></ul>'
-             WHEN 2 THEN '<p>see <a href="https://ex.org/p'
-                         || CAST(doc_id % 9 AS VARCHAR) || '">page '
-                         || CAST(doc_id % 9 AS VARCHAR) || '</a> now</p>'
-             WHEN 3 THEN '<pre><code>x = ' || CAST(doc_id % 4 AS VARCHAR)
-                         || CHR(10) || 'print(x)</code></pre><p>tail</p>'
-             ELSE '<blockquote>wise words '
-                  || CAST(doc_id % 6 AS VARCHAR) || '</blockquote>'
-           END AS html
-    FROM documents
-"""
+_MD_HTML = (
+    ["<h2>Title ", 7, "</h2><p>Intro paragraph.</p>"],
+    ["<h3>Sub</h3><ul><li>alpha</li><li>beta ", 3, "</li></ul>"],
+    ['<p>see <a href="https://ex.org/p', 9, '">page ', 9, "</a> now</p>"],
+    ["<pre><code>x = ", 4, "\nprint(x)</code></pre><p>tail</p>"],
+    ["<blockquote>wise words ", 6, "</blockquote>"],
+)
+_MD_HTML_SQL = _docs_sql(_MD_HTML, "html")
 
 
 @query(
@@ -14760,28 +14231,7 @@ def q_html_to_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; at 100 TB this runs scan-local exactly like the
     boilerplate pass (SURVEY §2.2 G-family analog, composition layer
     over the html_lists / headings extractors)."""
-    k = F.col("doc_id")
-    m = k % 5
-    nl = "\n"
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit("<h2>Title "), (k % 7).cast("string"),
-            F.lit("</h2><p>Intro paragraph.</p>")))
-        .when(m == 1, F.concat(
-            F.lit("<h3>Sub</h3><ul><li>alpha</li><li>beta "),
-            (k % 3).cast("string"), F.lit("</li></ul>")))
-        .when(m == 2, F.concat(
-            F.lit('<p>see <a href="https://ex.org/p'),
-            (k % 9).cast("string"), F.lit('">page '),
-            (k % 9).cast("string"), F.lit("</a> now</p>")))
-        .when(m == 3, F.concat(
-            F.lit("<pre><code>x = "), (k % 4).cast("string"),
-            F.lit(nl + "print(x)</code></pre><p>tail</p>")))
-        .otherwise(F.concat(
-            F.lit("<blockquote>wise words "), (k % 6).cast("string"),
-            F.lit("</blockquote>"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _MD_HTML, "html")
     return docs.withColumn("markdown_raw", _md_chain(F.col("html"))).select(
         "doc",
         F.expr("trim(BOTH ' \n' FROM markdown_raw)").alias("markdown"),
@@ -14960,22 +14410,19 @@ def q_crawl_change_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("slow").alias("revisit_tier"))
 
 
-_PAYWALL_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN '<script type="application/ld+json">{"isAccessibleForFree": false}</script><p>Article intro '
-                         || CAST(doc_id % 7 AS VARCHAR)
-                         || '</p><div class="paywall">Subscribe to continue reading</div>'
-             WHEN 1 THEN '<p>free article body ' || CAST(doc_id % 9 AS VARCHAR) || '</p>'
-             WHEN 2 THEN '<div class="subscribe-wall">Already a subscriber? Log in</div><p>teaser '
-                         || CAST(doc_id % 4 AS VARCHAR) || '</p>'
-             WHEN 3 THEN '<script type="application/ld+json">{"isAccessibleForFree": true}</script><p>open news '
-                         || CAST(doc_id % 6 AS VARCHAR) || '</p>'
-             ELSE '<p>Sign up for our newsletter</p><p>content '
-                  || CAST(doc_id AS VARCHAR) || '</p>'
-           END AS html
-    FROM documents
-"""
+_PAYWALL_HTML = (
+    ['<script type="application/ld+json">{"isAccessibleForFree": '
+     "false}</script><p>Article intro ", 7, "</p><div "
+     'class="paywall">Subscribe to continue reading</div>'],
+    ["<p>free article body ", 9, "</p>"],
+    ['<div class="subscribe-wall">Already a subscriber? Log '
+     "in</div><p>teaser ", 4, "</p>"],
+    ['<script type="application/ld+json">{"isAccessibleForFree": '
+     "true}</script><p>open news ", 6, "</p>"],
+    ["<p>Sign up for our newsletter</p><p>content ", _DOC_ID,
+     "</p>"],
+)
+_PAYWALL_HTML_SQL = _docs_sql(_PAYWALL_HTML, "html")
 
 
 @query(
@@ -15011,31 +14458,7 @@ def q_paywall_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel), wall-container CSS classes, and call-to-action phrases;
     a newsletter CTA (the common false-positive) trips none of them.
     Zero-shuffle projection over the page scan."""
-    k = F.col("doc_id")
-    m = k % 5
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"isAccessibleForFree": false}</script><p>Article intro '),
-            (k % 7).cast("string"),
-            F.lit('</p><div class="paywall">Subscribe to continue reading'
-                  '</div>')))
-        .when(m == 1, F.concat(
-            F.lit("<p>free article body "), (k % 9).cast("string"),
-            F.lit("</p>")))
-        .when(m == 2, F.concat(
-            F.lit('<div class="subscribe-wall">Already a subscriber? Log in'
-                  '</div><p>teaser '), (k % 4).cast("string"),
-            F.lit("</p>")))
-        .when(m == 3, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"isAccessibleForFree": true}</script><p>open news '),
-            (k % 6).cast("string"), F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit("<p>Sign up for our newsletter</p><p>content "),
-            k.cast("string"), F.lit("</p>"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _PAYWALL_HTML, "html")
     not_free = F.col("html").rlike(r'"isAccessibleForFree"\s*:\s*false')
     wall = F.col("html").rlike(
         'class="[^"]*(paywall|subscribe-wall|meteredContent)')
@@ -15048,23 +14471,14 @@ def q_paywall_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         (not_free | wall | cta).cast("int").alias("paywalled"))
 
 
-_CODE_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'def f(x):' || CHR(10) || '    return x + '
-                         || CAST(doc_id % 5 AS VARCHAR) || CHR(10)
-                         || CHR(10) || 'class A:' || CHR(10) || '    pass'
-             WHEN 1 THEN 'The quick brown fox jumps over the lazy dog '
-                         || CAST(doc_id % 8 AS VARCHAR)
-                         || '. It was a bright cold day in April.'
-             WHEN 2 THEN 'function add(a, b) { return a + b; }' || CHR(10)
-                         || 'const x = add(1, ' || CAST(doc_id % 3 AS VARCHAR)
-                         || ');'
-             ELSE 'Mixed prose where x = 1 denotes assignment, case '
-                  || CAST(doc_id % 6 AS VARCHAR) || '.'
-           END AS text
-    FROM documents
-"""
+_CODE_TEXT = (
+    ["def f(x):\n    return x + ", 5, "\n\nclass A:\n    pass"],
+    ["The quick brown fox jumps over the lazy dog ", 8, ". It was a bright "
+     "cold day in April."],
+    ["function add(a, b) { return a + b; }\nconst x = add(1, ", 3, ");"],
+    ["Mixed prose where x = 1 denotes assignment, case ", 6, "."],
+)
+_CODE_TEXT_SQL = _docs_sql(_CODE_TEXT, "text")
 
 
 @query(
@@ -15102,27 +14516,7 @@ def q_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-regex-backtracking pattern), reserved-word hits, and indented
     lines; the gate needs BOTH density and keywords so symbol-heavy
     prose (case 3) stays prose. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    nl = "\n"
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("def f(x):" + nl + "    return x + "),
-            (k % 5).cast("string"),
-            F.lit(nl + nl + "class A:" + nl + "    pass")))
-        .when(m == 1, F.concat(
-            F.lit("The quick brown fox jumps over the lazy dog "),
-            (k % 8).cast("string"),
-            F.lit(". It was a bright cold day in April.")))
-        .when(m == 2, F.concat(
-            F.lit("function add(a, b) { return a + b; }" + nl
-                  + "const x = add(1, "), (k % 3).cast("string"),
-            F.lit(");")))
-        .otherwise(F.concat(
-            F.lit("Mixed prose where x = 1 denotes assignment, case "),
-            (k % 6).cast("string"), F.lit("."))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _CODE_TEXT, "text")
     sym = F.length(F.regexp_replace("text", r"[^{}();=<>\[\]]", ""))
     kw = F.size(F.regexp_extract_all(
         "text", F.lit(r"\b(def|function|class|import|return|const|var)\b"),
@@ -15143,23 +14537,15 @@ def q_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((sym_bp >= 300) & (kw >= 2)).cast("int").alias("is_code"))
 
 
-_CITED_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Fact one.[1] Fact two.[2] More on this topic.[1] '
-                         || 'Tail ' || CAST(doc_id % 5 AS VARCHAR)
-                         || CHR(10) || 'References' || CHR(10)
-                         || '[1] Source A' || CHR(10) || '[2] Source B'
-             WHEN 1 THEN 'Plain paragraph without citations '
-                         || CAST(doc_id % 7 AS VARCHAR) || '.'
-             WHEN 2 THEN 'Claim.[12] Another claim.[3] And a third.[12] '
-                         || CAST(doc_id % 3 AS VARCHAR) || CHR(10)
-                         || 'Bibliography' || CHR(10) || '[3] Paper X'
-             ELSE 'Text mentioning a [TODO] placeholder '
-                  || CAST(doc_id % 9 AS VARCHAR) || '.'
-           END AS text
-    FROM documents
-"""
+_CITED_TEXT = (
+    ["Fact one.[1] Fact two.[2] More on this topic.[1] Tail ", 5, "\n"
+     "References\n[1] Source A\n[2] Source B"],
+    ["Plain paragraph without citations ", 7, "."],
+    ["Claim.[12] Another claim.[3] And a third.[12] ", 3, "\nBibliography\n"
+     "[3] Paper X"],
+    ["Text mentioning a [TODO] placeholder ", 9, "."],
+)
+_CITED_TEXT_SQL = _docs_sql(_CITED_TEXT, "text")
 
 
 @query(
@@ -15192,27 +14578,7 @@ def q_citation_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     section is cut BEFORE counting so its own [n] labels don't inflate
     the density; non-numeric brackets ([TODO]) never count. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    nl = "\n"
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Fact one.[1] Fact two.[2] More on this topic.[1] Tail "),
-            (k % 5).cast("string"),
-            F.lit(nl + "References" + nl + "[1] Source A" + nl
-                  + "[2] Source B")))
-        .when(m == 1, F.concat(
-            F.lit("Plain paragraph without citations "),
-            (k % 7).cast("string"), F.lit(".")))
-        .when(m == 2, F.concat(
-            F.lit("Claim.[12] Another claim.[3] And a third.[12] "),
-            (k % 3).cast("string"),
-            F.lit(nl + "Bibliography" + nl + "[3] Paper X")))
-        .otherwise(F.concat(
-            F.lit("Text mentioning a [TODO] placeholder "),
-            (k % 9).cast("string"), F.lit("."))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _CITED_TEXT, "text")
     body = F.regexp_replace(
         "text", r"(?s)(?m)^(References|Bibliography)$.*", "")
     cite_pat = r"\[[0-9]{1,3}\]"
@@ -15234,20 +14600,20 @@ def q_citation_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("citations_per_kword"))
 
 
-_LICENSE_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 6
-             WHEN 0 THEN '<a rel="license" href="https://creativecommons.org/licenses/by/4.0/">CC BY 4.0</a><p>article '
-                         || CAST(doc_id % 5 AS VARCHAR) || '</p>'
-             WHEN 1 THEN '<a rel="license" href="https://creativecommons.org/licenses/by-nc-nd/3.0/">some rights reserved</a>'
-             WHEN 2 THEN '<p>Copyright 2024 Example Corp. All rights reserved.</p>'
-             WHEN 3 THEN '// SPDX-License-Identifier: MIT' || CHR(10)
-                         || 'code body ' || CAST(doc_id % 7 AS VARCHAR)
-             WHEN 4 THEN '<p>Dedicated to the public domain.</p><a rel="license" href="https://creativecommons.org/publicdomain/zero/1.0/">CC0</a>'
-             ELSE '<p>no license info ' || CAST(doc_id AS VARCHAR) || '</p>'
-           END AS html
-    FROM documents
-"""
+_LICENSE_HTML = (
+    ['<a rel="license" '
+     'href="https://creativecommons.org/licenses/by/4.0/">CC BY '
+     "4.0</a><p>article ", 5, "</p>"],
+    ['<a rel="license" '
+     'href="https://creativecommons.org/licenses/by-nc-nd/3.0/">some rights '
+     "reserved</a>"],
+    ["<p>Copyright 2024 Example Corp. All rights reserved.</p>"],
+    ["// SPDX-License-Identifier: MIT\ncode body ", 7],
+    ['<p>Dedicated to the public domain.</p><a rel="license" '
+     'href="https://creativecommons.org/publicdomain/zero/1.0/">CC0</a>'],
+    ["<p>no license info ", _DOC_ID, "</p>"],
+)
+_LICENSE_HTML_SQL = _docs_sql(_LICENSE_HTML, "html")
 
 
 @query(
@@ -15281,30 +14647,7 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the code-corpus channel), and the all-rights-reserved text marker.
     Zero-shuffle projection; the variant slug — not the page — is what
     downstream policy joins on."""
-    k = F.col("doc_id")
-    m = k % 6
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<a rel="license" href="https://creativecommons.org/'
-                  'licenses/by/4.0/">CC BY 4.0</a><p>article '),
-            (k % 5).cast("string"), F.lit("</p>")))
-        .when(m == 1, F.lit(
-            '<a rel="license" href="https://creativecommons.org/licenses/'
-            'by-nc-nd/3.0/">some rights reserved</a>'))
-        .when(m == 2, F.lit(
-            "<p>Copyright 2024 Example Corp. All rights reserved.</p>"))
-        .when(m == 3, F.concat(
-            F.lit("// SPDX-License-Identifier: MIT\ncode body "),
-            (k % 7).cast("string")))
-        .when(m == 4, F.lit(
-            '<p>Dedicated to the public domain.</p><a rel="license" '
-            'href="https://creativecommons.org/publicdomain/zero/1.0/">'
-            "CC0</a>"))
-        .otherwise(F.concat(
-            F.lit("<p>no license info "), k.cast("string"),
-            F.lit("</p>"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _LICENSE_HTML, "html")
     cc = F.nullif(F.regexp_extract(
         "html", r"creativecommons\.org/(licenses|publicdomain)/([a-z-]+)/",
         2), F.lit(""))
@@ -15324,20 +14667,14 @@ def q_license_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("redistributable"))
 
 
-_IMG_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<img src="/a' || CAST(doc_id % 5 AS VARCHAR)
-                         || '.jpg" alt="A red fox in the snow"><p>text</p>'
-                         || '<img src="/b.png" alt="Chart of results">'
-             WHEN 1 THEN '<img src="/spacer.gif" alt=""><img src="/logo.svg">'
-             WHEN 2 THEN '<p>no images here ' || CAST(doc_id AS VARCHAR)
-                         || '</p>'
-             ELSE '<img alt="Portrait of the author" src="/p'
-                  || CAST(doc_id % 3 AS VARCHAR) || '.webp">'
-           END AS html
-    FROM documents
-"""
+_IMG_HTML = (
+    ['<img src="/a', 5, '.jpg" alt="A red fox in the snow"><p>text</p><img '
+     'src="/b.png" alt="Chart of results">'],
+    ['<img src="/spacer.gif" alt=""><img src="/logo.svg">'],
+    ["<p>no images here ", _DOC_ID, "</p>"],
+    ['<img alt="Portrait of the author" src="/p', 3, '.webp">'],
+)
+_IMG_HTML_SQL = _docs_sql(_IMG_HTML, "html")
 
 
 @query(
@@ -15367,22 +14704,7 @@ def q_img_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     puts alt before src) and empty/missing alts drop. One explode per
     page bounded by its img count; downstream joins on src to the fetch
     table. Per-pair caption word count feeds the alt-quality filter."""
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<img src="/a'), (k % 5).cast("string"),
-            F.lit('.jpg" alt="A red fox in the snow"><p>text</p>'
-                  '<img src="/b.png" alt="Chart of results">')))
-        .when(m == 1, F.lit(
-            '<img src="/spacer.gif" alt=""><img src="/logo.svg">'))
-        .when(m == 2, F.concat(
-            F.lit("<p>no images here "), k.cast("string"), F.lit("</p>")))
-        .otherwise(F.concat(
-            F.lit('<img alt="Portrait of the author" src="/p'),
-            (k % 3).cast("string"), F.lit('.webp">'))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _IMG_HTML, "html")
     tags = docs.select(
         "doc",
         F.explode(F.regexp_extract_all(
@@ -15399,20 +14721,13 @@ def q_img_alt_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("alt_words"))
 
 
-_TOX_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'What the hell is this damn thing doing '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'A perfectly pleasant paragraph about gardens '
-                         || CAST(doc_id % 7 AS VARCHAR) || '.'
-             WHEN 2 THEN 'I hate this stupid broken idiot machine, '
-                         || 'what the hell.'
-             ELSE 'Shell shellfish hello helluva hatering '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_TOX_TEXT = (
+    ["What the hell is this damn thing doing ", 5],
+    ["A perfectly pleasant paragraph about gardens ", 7, "."],
+    ["I hate this stupid broken idiot machine, what the hell."],
+    ["Shell shellfish hello helluva hatering ", 3],
+)
+_TOX_TEXT_SQL = _docs_sql(_TOX_TEXT, "text")
 
 
 @query(
@@ -15444,22 +14759,7 @@ def q_toxicity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     density in hits-per-1000-words gates, not raw counts, so long
     documents aren't penalized for one quote. Zero-shuffle projection;
     the denylist is a stand-in — the real list broadcasts the same way."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("What the hell is this damn thing doing "),
-            (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("A perfectly pleasant paragraph about gardens "),
-            (k % 7).cast("string"), F.lit(".")))
-        .when(m == 2, F.lit(
-            "I hate this stupid broken idiot machine, what the hell."))
-        .otherwise(F.concat(
-            F.lit("Shell shellfish hello helluva hatering "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _TOX_TEXT, "text")
     hits = F.size(F.regexp_extract_all(
         "text", F.lit(r"(?i)\b(damn|hell|idiot|stupid|hate)\b"), F.lit(0)))
     words = F.size(F.regexp_extract_all("text", F.lit("[^ ]+"), F.lit(0)))
@@ -15474,24 +14774,17 @@ def q_toxicity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (per_kw >= 300).cast("int").alias("gated"))
 
 
-_AD_HTML_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<div class="content"><p>real text '
-                         || CAST(doc_id % 5 AS VARCHAR)
-                         || '</p></div><div class="ad-banner">Buy now!</div>'
-                         || '<div id="ads-footer">promo</div>'
-             WHEN 1 THEN '<iframe src="https://adserver.example/slot1">'
-                         || '</iframe><p>short ' || CAST(doc_id % 3 AS VARCHAR)
-                         || '</p>'
-             WHEN 2 THEN '<div class="article"><p>long clean article body '
-                         || CAST(doc_id % 7 AS VARCHAR) || '</p></div>'
-             ELSE '<div class="sponsored">Sponsored content</div>'
-                  || '<script src="https://ads.example/t.js"></script><p>mix '
-                  || CAST(doc_id AS VARCHAR) || '</p>'
-           END AS html
-    FROM documents
-"""
+_AD_HTML = (
+    ['<div class="content"><p>real text ', 5, "</p></div><div "
+     'class="ad-banner">Buy now!</div><div id="ads-footer">promo</div>'],
+    ['<iframe src="https://adserver.example/slot1"></iframe><p>short ', 3,
+     "</p>"],
+    ['<div class="article"><p>long clean article body ', 7, "</p></div>"],
+    ['<div class="sponsored">Sponsored content</div><script '
+     'src="https://ads.example/t.js"></script><p>mix ', _DOC_ID,
+     "</p>"],
+)
+_AD_HTML_SQL = _docs_sql(_AD_HTML, "html")
 
 
 @query(
@@ -15523,26 +14816,7 @@ def q_ad_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags is the deterministic pre-filter before quality models. The
     ad_heavy gate (≥2 independent ad signals) feeds the curation funnel
     next to quality_gate. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<div class="content"><p>real text '),
-            (k % 5).cast("string"),
-            F.lit('</p></div><div class="ad-banner">Buy now!</div>'
-                  '<div id="ads-footer">promo</div>')))
-        .when(m == 1, F.concat(
-            F.lit('<iframe src="https://adserver.example/slot1"></iframe>'
-                  "<p>short "), (k % 3).cast("string"), F.lit("</p>")))
-        .when(m == 2, F.concat(
-            F.lit('<div class="article"><p>long clean article body '),
-            (k % 7).cast("string"), F.lit("</p></div>")))
-        .otherwise(F.concat(
-            F.lit('<div class="sponsored">Sponsored content</div>'
-                  '<script src="https://ads.example/t.js"></script><p>mix '),
-            k.cast("string"), F.lit("</p>"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _AD_HTML, "html")
     containers = F.size(F.regexp_extract_all(
         "html", F.lit('(class|id)="[^"]*(ad-|ads|advert|sponsor|promo)'),
         F.lit(0)))
@@ -15566,24 +14840,14 @@ def q_ad_density(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and the per-type quality filters.
 # ===========================================================================
 
-_CODEQ_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN 'def f(x):' || chr(10) || '    return x + 1'
-                         || chr(10) || '# step ' || CAST(doc_id % 7 AS VARCHAR)
-                         || chr(10) || 'print(f(2))'
-             WHEN 1 THEN '# DO NOT EDIT - generated by protoc' || chr(10)
-                         || 'def g():' || chr(10) || '    pass' || chr(10)
-                         || '# v' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'short line ' || CAST(doc_id % 5 AS VARCHAR)
-                         || chr(10) || repeat('aaaa; ', 30)
-             WHEN 3 THEN 'payload = "' || repeat('QUJD', 16) || '"'
-                         || chr(10) || 'rest = ' || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'This module documents the parser behavior in plain '
-                  || 'prose. ' || CAST(doc_id % 5 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_CODEQ_TEXT = (
+    ["def f(x):\n    return x + 1\n# step ", 7, "\nprint(f(2))"],
+    ["# DO NOT EDIT - generated by protoc\ndef g():\n    pass\n# v", 3],
+    ["short line ", 5, "\n" + "aaaa; " * 30],
+    ['payload = "' + "QUJD" * 16 + '"\nrest = ', 3],
+    ["This module documents the parser behavior in plain prose. ", 5],
+)
+_CODEQ_TEXT_SQL = _docs_sql(_CODEQ_TEXT, "text")
 
 _CODEQ_SQL = (
     "WITH u AS (" + _CODEQ_TEXT_SQL + "),"
@@ -15619,26 +14883,7 @@ def q_code_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     60+-char base64 runs catch embedded binary blobs. All signals are
     in-row array/regex projections over the line split — zero shuffle,
     the shape that survives a 10^12-file corpus."""
-    k = F.col("doc_id")
-    m = k % 5
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("def f(x):\n    return x + 1\n# step "),
-            (k % 7).cast("string"), F.lit("\nprint(f(2))")))
-        .when(m == 1, F.concat(
-            F.lit("# DO NOT EDIT - generated by protoc\ndef g():\n"
-                  "    pass\n# v"), (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("short line "), (k % 5).cast("string"), F.lit("\n"),
-            F.repeat(F.lit("aaaa; "), 30)))
-        .when(m == 3, F.concat(
-            F.lit('payload = "'), F.repeat(F.lit("QUJD"), 16),
-            F.lit('"\nrest = '), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("This module documents the parser behavior in plain "
-                  "prose. "), (k % 5).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _CODEQ_TEXT, "text")
     lines = F.split("text", "\n")
     base = docs.select(
         "doc",
@@ -15658,21 +14903,14 @@ def q_code_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
          & (F.col("max_line_len") <= 120)).cast("int").alias("keep"))
 
 
-_MATH_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'We have $x^2 + y^2 = z^2$ and \\frac{a}{b} with '
-                         || '\\sum_{i=1}^{n} i of order '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'E = m c^2 and 2 + 2 = 4 and 10 / 5 = 2 case '
-                         || CAST(doc_id % 7 AS VARCHAR)
-             WHEN 2 THEN 'The cost is $5 and the budget is $10 for '
-                         || 'supplies batch ' || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'Theorem: let n be an integer. Proof: n times n is n^2. '
-                  || 'QED ' || CAST(doc_id % 5 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_MATH_TEXT = (
+    ["We have $x^2 + y^2 = z^2$ and \\frac{a}{b} with \\sum_{i=1}^{n} i of "
+     "order ", 5],
+    ["E = m c^2 and 2 + 2 = 4 and 10 / 5 = 2 case ", 7],
+    ["The cost is $5 and the budget is $10 for supplies batch ", 3],
+    ["Theorem: let n be an integer. Proof: n times n is n^2. QED ", 5],
+)
+_MATH_TEXT_SQL = _docs_sql(_MATH_TEXT, "text")
 
 _MATH_SQL = (
     "WITH u AS (" + _MATH_TEXT_SQL + "),"
@@ -15709,23 +14947,7 @@ def q_math_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     that gate here route to a math-preserving extractor instead of the
     default boilerplate strip (which destroys equations). Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("We have $x^2 + y^2 = z^2$ and \\frac{a}{b} with "
-                  "\\sum_{i=1}^{n} i of order "), (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("E = m c^2 and 2 + 2 = 4 and 10 / 5 = 2 case "),
-            (k % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The cost is $5 and the budget is $10 for supplies "
-                  "batch "), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Theorem: let n be an integer. Proof: n times n is "
-                  "n^2. QED "), (k % 5).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _MATH_TEXT, "text")
     inline = F.size(F.regexp_extract_all(
         "text", F.lit(r"\$[^$]*(\^|_|\\)[^$]*\$"), F.lit(0)))
     cmds = F.size(F.regexp_extract_all(
@@ -15749,26 +14971,16 @@ def q_math_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("is_math"))
 
 
-_QA_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Q: How do I reset my password?' || chr(10)
-                         || 'A: Click the reset link.' || chr(10)
-                         || 'Q: Where is order '
-                         || CAST(doc_id % 5 AS VARCHAR) || '?' || chr(10)
-                         || 'A: Check the tracking page.'
-             WHEN 1 THEN '<script type="application/ld+json">'
-                         || '{"@type": "FAQPage"}</script><p>Help center '
-                         || CAST(doc_id % 3 AS VARCHAR) || '</p>'
-             WHEN 2 THEN 'Could it be better? Perhaps. We walked home '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'Interviewer: What inspired you?' || chr(10)
-                  || 'Guest: The mountains.' || chr(10)
-                  || 'Interviewer: Why now?' || chr(10)
-                  || 'Guest: Because ' || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_QA_TEXT = (
+    ["Q: How do I reset my password?\nA: Click the reset link.\nQ: Where is "
+     "order ", 5, "?\nA: Check the tracking page."],
+    ['<script type="application/ld+json">{"@type": '
+     '"FAQPage"}</script><p>Help center ', 3, "</p>"],
+    ["Could it be better? Perhaps. We walked home ", 3],
+    ["Interviewer: What inspired you?\nGuest: The mountains.\nInterviewer: "
+     "Why now?\nGuest: Because ", 3],
+)
+_QA_TEXT_SQL = _docs_sql(_QA_TEXT, "text")
 
 _QA_SQL = (
     "WITH u AS (" + _QA_TEXT_SQL + "),"
@@ -15803,26 +15015,7 @@ def q_qa_page_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     ?-terminated lines (exposed but not gating alone: one rhetorical
     question in prose is the false-positive control). Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Q: How do I reset my password?\nA: Click the reset "
-                  "link.\nQ: Where is order "), (k % 5).cast("string"),
-            F.lit("?\nA: Check the tracking page.")))
-        .when(m == 1, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "FAQPage"}</script><p>Help center '),
-            (k % 3).cast("string"), F.lit("</p>")))
-        .when(m == 2, F.concat(
-            F.lit("Could it be better? Perhaps. We walked home "),
-            (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Interviewer: What inspired you?\nGuest: The "
-                  "mountains.\nInterviewer: Why now?\nGuest: Because "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _QA_TEXT, "text")
     nq = F.size(F.regexp_extract_all("text", F.lit("(?m)^Q: "), F.lit(0)))
     na = F.size(F.regexp_extract_all("text", F.lit("(?m)^A: "), F.lit(0)))
     qlines = F.size(F.filter(F.split("text", "\n"),
@@ -15842,27 +15035,15 @@ def q_qa_page_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
          | (F.col("faq_schema") == 1)).cast("int").alias("is_qa"))
 
 
-_TRANS_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '1' || chr(10)
-                         || '00:00:01,000 --> 00:00:04,000' || chr(10)
-                         || 'Hello there' || chr(10) || chr(10) || '2'
-                         || chr(10)
-                         || '00:00:05,000 --> 00:00:08,000' || chr(10)
-                         || 'Welcome back ' || CAST(doc_id % 9 AS VARCHAR)
-             WHEN 1 THEN 'HOST: Welcome to the show '
-                         || CAST(doc_id % 5 AS VARCHAR) || chr(10)
-                         || 'GUEST: Thanks for having me' || chr(10)
-                         || 'HOST: Here we go'
-             WHEN 2 THEN 'The meeting ran from 9:30 to 11:00 and covered '
-                         || 'budgets ' || CAST(doc_id % 3 AS VARCHAR)
-             ELSE '0:01 intro' || chr(10) || '0:45 setup' || chr(10)
-                  || '2:30 main topic' || chr(10) || '5:10 conclusion '
-                  || CAST(doc_id % 7 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_TRANS_TEXT = (
+    ["1\n00:00:01,000 --> 00:00:04,000\nHello there\n\n2\n00:00:05,000 --> "
+     "00:00:08,000\nWelcome back ", 9],
+    ["HOST: Welcome to the show ", 5, "\nGUEST: Thanks for having me\nHOST: "
+     "Here we go"],
+    ["The meeting ran from 9:30 to 11:00 and covered budgets ", 3],
+    ["0:01 intro\n0:45 setup\n2:30 main topic\n5:10 conclusion ", 7],
+)
+_TRANS_TEXT_SQL = _docs_sql(_TRANS_TEXT, "text")
 
 _TRANS_SQL = (
     "WITH u AS (" + _TRANS_TEXT_SQL + "),"
@@ -15896,24 +15077,7 @@ def q_transcript_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     mentions in prose ('ran from 9:30 to 11:00') stay below the
     3-timestamp gate — the false-positive control. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("1\n00:00:01,000 --> 00:00:04,000\nHello there\n\n2\n"
-                  "00:00:05,000 --> 00:00:08,000\nWelcome back "),
-            (k % 9).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("HOST: Welcome to the show "), (k % 5).cast("string"),
-            F.lit("\nGUEST: Thanks for having me\nHOST: Here we go")))
-        .when(m == 2, F.concat(
-            F.lit("The meeting ran from 9:30 to 11:00 and covered "
-                  "budgets "), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("0:01 intro\n0:45 setup\n2:30 main topic\n"
-                  "5:10 conclusion "), (k % 7).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _TRANS_TEXT, "text")
     ts = F.size(F.regexp_extract_all(
         "text", F.lit(r"\b[0-9]{1,2}:[0-9]{2}(:[0-9]{2})?\b"), F.lit(0)))
     arrows = F.size(F.regexp_extract_all("text", F.lit("-->"), F.lit(0)))
@@ -15930,21 +15094,14 @@ def q_transcript_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_transcript"))
 
 
-_QUOTE_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '"We expect growth this quarter," said the '
-                         || 'minister. "The plan is on track," she added. '
-                         || 'Briefing ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'No quoted material appears in this plain '
-                         || 'paragraph at all ' || CAST(doc_id % 7 AS VARCHAR)
-             WHEN 2 THEN 'He wrote "alpha" then "beta" then "gamma" on '
-                         || 'the board ' || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'The sign read "No entry beyond this point" at the '
-                  || 'gate ' || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_QUOTE_TEXT = (
+    ['"We expect growth this quarter," said the minister. "The plan is on '
+     'track," she added. Briefing ', 5],
+    ["No quoted material appears in this plain paragraph at all ", 7],
+    ['He wrote "alpha" then "beta" then "gamma" on the board ', 3],
+    ['The sign read "No entry beyond this point" at the gate ', 3],
+)
+_QUOTE_TEXT_SQL = _docs_sql(_QUOTE_TEXT, "text")
 
 _QUOTE_SQL = (
     "WITH u AS (" + _QUOTE_TEXT_SQL + "),"
@@ -15979,24 +15136,7 @@ def q_quote_density(spark: SparkSession, sf_dir: str) -> DataFrame:
     for corpus mixing. The has_dialog gate needs BOTH repeated quotes
     and an attribution verb, so a single quoted sign ('The sign read
     "..."') never counts as dialog. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit('"We expect growth this quarter," said the minister. '
-                  '"The plan is on track," she added. Briefing '),
-            (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("No quoted material appears in this plain paragraph "
-                  "at all "), (k % 7).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit('He wrote "alpha" then "beta" then "gamma" on the '
-                  "board "), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit('The sign read "No entry beyond this point" at the '
-                  "gate "), (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _QUOTE_TEXT, "text")
     spans = F.regexp_extract_all("text", F.lit('"[^"]+"'), F.lit(0))
     base = docs.select(
         "doc",
@@ -16017,19 +15157,13 @@ def q_quote_density(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("has_dialog"))
 
 
-_SENT_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 3
-             WHEN 0 THEN 'The sky was clear. We walked to the lake '
-                         || CAST(doc_id % 5 AS VARCHAR)
-                         || '. It was a fine day! Was it not? Indeed.'
-             WHEN 1 THEN 'this is a run on line with no punctuation at '
-                         || 'all ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'Yes. No. Maybe. Stop '
-                  || CAST(doc_id % 3 AS VARCHAR) || '.'
-           END AS text
-    FROM documents
-"""
+_SENT_TEXT = (
+    ["The sky was clear. We walked to the lake ", 5, ". It was a fine day! "
+     "Was it not? Indeed."],
+    ["this is a run on line with no punctuation at all ", 7],
+    ["Yes. No. Maybe. Stop ", 3, "."],
+)
+_SENT_TEXT_SQL = _docs_sql(_SENT_TEXT, "text")
 
 _SENT_SQL = (
     "WITH u AS (" + _SENT_TEXT_SQL + "),"
@@ -16065,21 +15199,7 @@ def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     'terminal punctuation' rule), choppy navigation text shows tiny
     sentence lengths. Terminated spans only, so a trailing fragment
     never inflates the count. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 3
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("The sky was clear. We walked to the lake "),
-            (k % 5).cast("string"),
-            F.lit(". It was a fine day! Was it not? Indeed.")))
-        .when(m == 1, F.concat(
-            F.lit("this is a run on line with no punctuation at all "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Yes. No. Maybe. Stop "), (k % 3).cast("string"),
-            F.lit("."))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _SENT_TEXT, "text")
     sents = F.regexp_extract_all("text", F.lit("[^.!?]+[.!?]+"), F.lit(0))
     base = docs.select(
         "doc",
@@ -16098,22 +15218,13 @@ def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("avg_sent_chars"))
 
 
-_BYLINE_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'By Jane Smith' || chr(10)
-                         || 'Markets rallied strongly today in early '
-                         || 'trading ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'LONDON (Reuters) - Markets rose on Tuesday '
-                         || 'session ' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'Updated analysis of quarterly results without '
-                         || 'attribution ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'By Arun Patel | Staff Writer' || chr(10)
-                  || 'The council approved the plan '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_BYLINE_TEXT = (
+    ["By Jane Smith\nMarkets rallied strongly today in early trading ", 5],
+    ["LONDON (Reuters) - Markets rose on Tuesday session ", 3],
+    ["Updated analysis of quarterly results without attribution ", 7],
+    ["By Arun Patel | Staff Writer\nThe council approved the plan ", 3],
+)
+_BYLINE_TEXT_SQL = _docs_sql(_BYLINE_TEXT, "text")
 
 _BYLINE_SQL = (
     "WITH u AS (" + _BYLINE_TEXT_SQL + ")"
@@ -16145,23 +15256,7 @@ def q_byline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     author dedup of syndicated copy). Line-anchored so a mid-sentence
     'By' never extracts; missing fields are NULL, never ''. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("By Jane Smith\nMarkets rallied strongly today in "
-                  "early trading "), (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("LONDON (Reuters) - Markets rose on Tuesday session "),
-            (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("Updated analysis of quarterly results without "
-                  "attribution "), (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("By Arun Patel | Staff Writer\nThe council approved "
-                  "the plan "), (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _BYLINE_TEXT, "text")
     byline = F.nullif(F.regexp_extract(
         "text", r"(?m)^By ([A-Z][a-z]+ [A-Z][a-z]+)", 1), F.lit(""))
     city = F.nullif(F.regexp_extract(
@@ -16175,25 +15270,14 @@ def q_byline_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("has_attribution"))
 
 
-_COMMSEC_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Article body here.' || chr(10) || '42 Comments'
-                         || chr(10) || 'Leave a Reply' || chr(10)
-                         || 'Your email address will not be published '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'Great post! Reply' || chr(10)
-                         || 'Thanks for sharing! Reply' || chr(10)
-                         || 'posted by reader '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'The committee reviewed the findings in detail '
-                         || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'Comments are closed.' || chr(10)
-                  || 'Related posts follow '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_COMMSEC_TEXT = (
+    ["Article body here.\n42 Comments\nLeave a Reply\nYour email address "
+     "will not be published ", 3],
+    ["Great post! Reply\nThanks for sharing! Reply\nposted by reader ", 5],
+    ["The committee reviewed the findings in detail ", 7],
+    ["Comments are closed.\nRelated posts follow ", 3],
+)
+_COMMSEC_TEXT_SQL = _docs_sql(_COMMSEC_TEXT, "text")
 
 _COMMSEC_SQL = (
     "WITH u AS (" + _COMMSEC_TEXT_SQL + "),"
@@ -16223,24 +15307,7 @@ def q_comment_section_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary. Platform chrome phrases count once each; repeated bare
     'Reply' buttons need >=2 hits so one quoted 'Reply' in prose never
     flags. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Article body here.\n42 Comments\nLeave a Reply\n"
-                  "Your email address will not be published "),
-            (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Great post! Reply\nThanks for sharing! Reply\n"
-                  "posted by reader "), (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The committee reviewed the findings in detail "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Comments are closed.\nRelated posts follow "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _COMMSEC_TEXT, "text")
     markers = F.size(F.regexp_extract_all(
         "text",
         F.lit("(?i)([0-9]+ comments?|leave a reply|comments are closed"
@@ -16257,21 +15324,15 @@ def q_comment_section_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("has_comment_section"))
 
 
-_PRODUCT_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Only $19.99 now! Add to cart. SKU: AB-1234. '
-                         || 'In stock units ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN '<script type="application/ld+json">'
-                         || '{"@type": "Product"}</script>Deluxe widget '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'The museum charges $12.50 for adult admission '
-                         || 'on weekdays ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'Free shipping on orders over $50.00! Buy now and '
-                  || 'save. Checkout today ' || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_PRODUCT_TEXT = (
+    ["Only $19.99 now! Add to cart. SKU: AB-1234. In stock units ", 5],
+    ['<script type="application/ld+json">{"@type": '
+     '"Product"}</script>Deluxe widget ', 3],
+    ["The museum charges $12.50 for adult admission on weekdays ", 7],
+    ["Free shipping on orders over $50.00! Buy now and save. Checkout today ",
+     3],
+)
+_PRODUCT_TEXT_SQL = _docs_sql(_PRODUCT_TEXT, "text")
 
 _PRODUCT_SQL = (
     "WITH u AS (" + _PRODUCT_TEXT_SQL + "),"
@@ -16305,24 +15366,7 @@ def q_product_page_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the prose corpus (or into a product-catalog corpus). A lone price
     in prose ('museum charges $12.50') never gates — CTAs must
     co-occur. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Only $19.99 now! Add to cart. SKU: AB-1234. In stock "
-                  "units "), (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Product"}</script>Deluxe widget '),
-            (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The museum charges $12.50 for adult admission on "
-                  "weekdays "), (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Free shipping on orders over $50.00! Buy now and "
-                  "save. Checkout today "), (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _PRODUCT_TEXT, "text")
     prices = F.size(F.regexp_extract_all(
         "text", F.lit(r"\$[0-9]+\.[0-9]{2}\b"), F.lit(0)))
     ctas = F.size(F.regexp_extract_all(
@@ -16342,22 +15386,15 @@ def q_product_page_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("is_product"))
 
 
-_PLACEHOLDER_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Lorem ipsum dolor sit amet, consectetur '
-                         || 'adipiscing elit ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'This is a sample page. Replace this text with '
-                         || 'your content. Under construction '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'The harvest festival drew record crowds this '
-                         || 'year ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'Example Domain. This domain is for use in '
-                  || 'illustrative examples in documents '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_PLACEHOLDER_TEXT = (
+    ["Lorem ipsum dolor sit amet, consectetur adipiscing elit ", 5],
+    ["This is a sample page. Replace this text with your content. Under "
+     "construction ", 3],
+    ["The harvest festival drew record crowds this year ", 7],
+    ["Example Domain. This domain is for use in illustrative examples in "
+     "documents ", 3],
+)
+_PLACEHOLDER_TEXT_SQL = _docs_sql(_PLACEHOLDER_TEXT, "text")
 
 _PLACEHOLDER_SQL = (
     "WITH u AS (" + _PLACEHOLDER_TEXT_SQL + "),"
@@ -16388,24 +15425,7 @@ def q_placeholder_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation (they are well-formed prose). One lorem marker
     suffices; generic phrases need two so a single 'coming soon' in a
     real article never gates. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Lorem ipsum dolor sit amet, consectetur adipiscing "
-                  "elit "), (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("This is a sample page. Replace this text with your "
-                  "content. Under construction "), (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The harvest festival drew record crowds this year "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Example Domain. This domain is for use in "
-                  "illustrative examples in documents "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _PLACEHOLDER_TEXT, "text")
     lorem = F.size(F.regexp_extract_all(
         "text", F.lit("(?i)(lorem ipsum|dolor sit amet|consectetur)"),
         F.lit(0)))
@@ -16423,19 +15443,12 @@ def q_placeholder_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("is_placeholder"))
 
 
-_STUFF_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 3
-             WHEN 0 THEN 'cheap flights cheap flights cheap flights book '
-                         || 'cheap flights today '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'the quick brown fox jumps over one lazy dog '
-                         || 'near the river ' || CAST(doc_id % 5 AS VARCHAR)
-             ELSE 'widget sale widget deals widget prices best widget '
-                  || 'offers ' || CAST(doc_id % 7 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_STUFF_TEXT = (
+    ["cheap flights cheap flights cheap flights book cheap flights today ", 3],
+    ["the quick brown fox jumps over one lazy dog near the river ", 5],
+    ["widget sale widget deals widget prices best widget offers ", 7],
+)
+_STUFF_TEXT_SQL = _docs_sql(_STUFF_TEXT, "text")
 
 _STUFF_SQL = (
     "WITH u AS (" + _STUFF_TEXT_SQL + "),"
@@ -16468,20 +15481,7 @@ def q_keyword_stuffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     so no tokenize-explode shuffle: at corpus scale this is a projection,
     and the O(words x distinct) in-row cost is bounded by the doc-length
     cap upstream. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 3
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("cheap flights cheap flights cheap flights book cheap "
-                  "flights today "), (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("the quick brown fox jumps over one lazy dog near the "
-                  "river "), (k % 5).cast("string")))
-        .otherwise(F.concat(
-            F.lit("widget sale widget deals widget prices best widget "
-                  "offers "), (k % 7).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _STUFF_TEXT, "text")
     ws = F.split("text", " ")
     base = docs.select(
         "doc",
@@ -16499,26 +15499,15 @@ def q_keyword_stuffing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("stuffed"))
 
 
-_DUMP_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '2024-01-15 12:00:01 INFO request from 10.0.0.1 '
-                         || 'took 23ms' || chr(10)
-                         || '2024-01-15 12:00:02 INFO request from '
-                         || '192.168.1.100 took 41ms case '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'row 550e8400-e29b-41d4-a716-446655440000 and '
-                         || '6ba7b810-9dad-11d1-80b4-00c04fd430c8 and '
-                         || 'hash deadbeefcafe1234 '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'A calm essay about morning walks in the park '
-                         || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'id,value' || chr(10) || '10,2031' || chr(10)
-                  || '22,4172' || chr(10) || '31,8839' || chr(10)
-                  || '44,1207 case ' || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_DUMP_TEXT = (
+    ["2024-01-15 12:00:01 INFO request from 10.0.0.1 took 23ms\n2024-01-15 "
+     "12:00:02 INFO request from 192.168.1.100 took 41ms case ", 5],
+    ["row 550e8400-e29b-41d4-a716-446655440000 and "
+     "6ba7b810-9dad-11d1-80b4-00c04fd430c8 and hash deadbeefcafe1234 ", 3],
+    ["A calm essay about morning walks in the park ", 7],
+    ["id,value\n10,2031\n22,4172\n31,8839\n44,1207 case ", 3],
+)
+_DUMP_TEXT_SQL = _docs_sql(_DUMP_TEXT, "text")
 
 _DUMP_SQL = (
     "WITH u AS (" + _DUMP_TEXT_SQL + "),"
@@ -16559,26 +15548,7 @@ def q_data_dump_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeding one gate), dotted IPs, ISO log timestamps, and overall
     digit-mass basis points; any two structured ids or a 30%+ digit
     ratio gates. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("2024-01-15 12:00:01 INFO request from 10.0.0.1 took "
-                  "23ms\n2024-01-15 12:00:02 INFO request from "
-                  "192.168.1.100 took 41ms case "),
-            (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("row 550e8400-e29b-41d4-a716-446655440000 and "
-                  "6ba7b810-9dad-11d1-80b4-00c04fd430c8 and hash "
-                  "deadbeefcafe1234 "), (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("A calm essay about morning walks in the park "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("id,value\n10,2031\n22,4172\n31,8839\n44,1207 case "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _DUMP_TEXT, "text")
     uuids = F.size(F.regexp_extract_all(
         "text",
         F.lit(r"\b[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}"
@@ -16614,25 +15584,16 @@ def q_data_dump_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_dump"))
 
 
-_RECIPE_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<script type="application/ld+json">'
-                         || '{"@type": "Recipe"}</script>Best pancakes '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'Ingredients:' || chr(10) || '2 cups flour'
-                         || chr(10) || '1 tsp salt' || chr(10)
-                         || '3 tbsp butter' || chr(10) || 'Instructions:'
-                         || chr(10) || '1. Mix the dry items.' || chr(10)
-                         || '2. Add butter ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'The bakery on Main Street expanded its seating '
-                         || 'area ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'Preheat the oven to 350 degrees. Combine 2 cups '
-                  || 'sugar with 1 cup cocoa. Bake for 30 minutes batch '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_RECIPE_TEXT = (
+    ['<script type="application/ld+json">{"@type": "Recipe"}</script>Best '
+     "pancakes ", 3],
+    ["Ingredients:\n2 cups flour\n1 tsp salt\n3 tbsp butter\nInstructions:\n"
+     "1. Mix the dry items.\n2. Add butter ", 5],
+    ["The bakery on Main Street expanded its seating area ", 7],
+    ["Preheat the oven to 350 degrees. Combine 2 cups sugar with 1 cup "
+     "cocoa. Bake for 30 minutes batch ", 3],
+)
+_RECIPE_TEXT_SQL = _docs_sql(_RECIPE_TEXT, "text")
 
 _RECIPE_SQL = (
     "WITH u AS (" + _RECIPE_TEXT_SQL + "),"
@@ -16671,26 +15632,7 @@ def q_recipe_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     routes them to a structured extractor (ingredients/steps) instead of
     prose cleaning; a bakery news story never gates. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Recipe"}</script>Best pancakes '),
-            (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Ingredients:\n2 cups flour\n1 tsp salt\n3 tbsp "
-                  "butter\nInstructions:\n1. Mix the dry items.\n"
-                  "2. Add butter "), (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The bakery on Main Street expanded its seating "
-                  "area "), (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Preheat the oven to 350 degrees. Combine 2 cups "
-                  "sugar with 1 cup cocoa. Bake for 30 minutes batch "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _RECIPE_TEXT, "text")
     schema = F.col("text").contains('"@type": "Recipe"').cast("int")
     qty_lines = F.size(F.regexp_extract_all(
         "text", F.lit("(?m)^[0-9]+(/[0-9]+)? (cups?|tsp|tbsp|grams?"
@@ -16718,26 +15660,16 @@ def q_recipe_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("is_recipe"))
 
 
-_HOWTO_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<script type="application/ld+json">'
-                         || '{"@type": "HowTo"}</script>Fix a flat tire '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'Step 1: Unplug the router.' || chr(10)
-                         || 'Step 2: Wait ten seconds.' || chr(10)
-                         || 'Step 3: Plug it back in '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN '1. Open the settings menu.' || chr(10)
-                         || '2. Select privacy.' || chr(10)
-                         || '3. Toggle the switch.' || chr(10)
-                         || '4. Restart the app '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'The committee discussed several approaches at '
-                  || 'length ' || CAST(doc_id % 7 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_HOWTO_TEXT = (
+    ['<script type="application/ld+json">{"@type": "HowTo"}</script>Fix a '
+     "flat tire ", 3],
+    ["Step 1: Unplug the router.\nStep 2: Wait ten seconds.\nStep 3: Plug "
+     "it back in ", 5],
+    ["1. Open the settings menu.\n2. Select privacy.\n3. Toggle the "
+     "switch.\n4. Restart the app ", 3],
+    ["The committee discussed several approaches at length ", 7],
+)
+_HOWTO_TEXT_SQL = _docs_sql(_HOWTO_TEXT, "text")
 
 _HOWTO_SQL = (
     "WITH u AS (" + _HOWTO_TEXT_SQL + "),"
@@ -16768,26 +15700,7 @@ def q_howto_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     following data. Thresholds (2 step markers / 3 numbered steps) keep
     a single enumerated aside in prose from gating. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "HowTo"}</script>Fix a flat tire '),
-            (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Step 1: Unplug the router.\nStep 2: Wait ten "
-                  "seconds.\nStep 3: Plug it back in "),
-            (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("1. Open the settings menu.\n2. Select privacy.\n"
-                  "3. Toggle the switch.\n4. Restart the app "),
-            (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("The committee discussed several approaches at "
-                  "length "), (k % 7).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _HOWTO_TEXT, "text")
     schema = F.col("text").contains('"@type": "HowTo"').cast("int")
     markers = F.size(F.regexp_extract_all(
         "text", F.lit("(?m)^Step [0-9]+[:.]"), F.lit(0)))
@@ -16804,22 +15717,15 @@ def q_howto_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_howto"))
 
 
-_REVIEW_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Rated 4.5 out of 5 stars by 230 buyers. Pros: '
-                         || 'light, fast. Cons: pricey. Verified Purchase '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN '★★★★☆ Great value for the money. Would buy '
-                         || 'again ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN '<script type="application/ld+json">'
-                         || '{"@type": "Review"}</script>Editor opinion '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'The committee rated the proposal favorably in its '
-                  || 'report ' || CAST(doc_id % 7 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_REVIEW_TEXT = (
+    ["Rated 4.5 out of 5 stars by 230 buyers. Pros: light, fast. Cons: "
+     "pricey. Verified Purchase ", 3],
+    ["★★★★☆ Great value for the money. Would buy again ", 5],
+    ['<script type="application/ld+json">{"@type": "Review"}</script>Editor '
+     "opinion ", 3],
+    ["The committee rated the proposal favorably in its report ", 7],
+)
+_REVIEW_TEXT_SQL = _docs_sql(_REVIEW_TEXT, "text")
 
 _REVIEW_SQL = (
     "WITH u AS (" + _REVIEW_TEXT_SQL + "),"
@@ -16855,25 +15761,7 @@ def q_review_page_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup of syndicated product reviews. 'The committee rated the
     proposal' has the verb but no rating shape — the false-positive
     control. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Rated 4.5 out of 5 stars by 230 buyers. Pros: "
-                  "light, fast. Cons: pricey. Verified Purchase "),
-            (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("★★★★☆ Great value for the money. Would buy again "),
-            (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit('<script type="application/ld+json">'
-                  '{"@type": "Review"}</script>Editor opinion '),
-            (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("The committee rated the proposal favorably in its "
-                  "report "), (k % 7).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _REVIEW_TEXT, "text")
     ratings = F.size(F.regexp_extract_all(
         "text", F.lit(r"(?i)\b[0-9](\.[0-9])? out of [0-9] stars?\b"),
         F.lit(0)))
@@ -16897,27 +15785,16 @@ def q_review_page_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("is_review"))
 
 
-_LEGAL_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Terms of Service' || chr(10)
-                         || '1.1 The Company shall provide the service. '
-                         || '1.2 The User shall not resell access. '
-                         || 'Liability is limited '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'Privacy Policy' || chr(10)
-                         || 'We collect the following categories of '
-                         || 'personal data. You may opt out at any time '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'This Agreement, hereinafter the Contract, '
-                         || 'shall be governed by the laws of the State. '
-                         || 'The parties hereto agree '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'The hiking club met at dawn for the ridge traverse '
-                  || CAST(doc_id % 7 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_LEGAL_TEXT = (
+    ["Terms of Service\n1.1 The Company shall provide the service. 1.2 The "
+     "User shall not resell access. Liability is limited ", 3],
+    ["Privacy Policy\nWe collect the following categories of personal data. "
+     "You may opt out at any time ", 5],
+    ["This Agreement, hereinafter the Contract, shall be governed by the "
+     "laws of the State. The parties hereto agree ", 3],
+    ["The hiking club met at dawn for the ridge traverse ", 7],
+)
+_LEGAL_TEXT_SQL = _docs_sql(_LEGAL_TEXT, "text")
 
 _LEGAL_SQL = (
     "WITH u AS (" + _LEGAL_TEXT_SQL + "),"
@@ -16954,26 +15831,7 @@ def q_legal_doc_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     before dedup wastes candidate budget. Signals: canonical titles,
     'shall' density with numbered sections, and legalese vocabulary.
     Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Terms of Service\n1.1 The Company shall provide the "
-                  "service. 1.2 The User shall not resell access. "
-                  "Liability is limited "), (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Privacy Policy\nWe collect the following categories "
-                  "of personal data. You may opt out at any time "),
-            (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("This Agreement, hereinafter the Contract, shall be "
-                  "governed by the laws of the State. The parties "
-                  "hereto agree "), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("The hiking club met at dawn for the ridge traverse "),
-            (k % 7).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _LEGAL_TEXT, "text")
     titles = F.size(F.regexp_extract_all(
         "text",
         F.lit(r"(?i)\b(terms of service|privacy policy|end user license"
@@ -16999,28 +15857,16 @@ def q_legal_doc_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int").alias("is_legal"))
 
 
-_DIRLIST_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Index of /pub/files' || chr(10)
-                         || 'Name Last modified Size' || chr(10)
-                         || 'report.pdf 2024-01-05 10:22 1.2M' || chr(10)
-                         || 'data.csv 2024-01-06 11:03 480K' || chr(10)
-                         || 'Parent Directory batch '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'drwxr-xr-x 2 root root 4096 Jan 5 10:22 logs'
-                         || chr(10)
-                         || '-rw-r--r-- 1 root root 1048576 Jan 6 11:03 '
-                         || 'dump.bin case ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'The archive of letters was donated to the '
-                         || 'library ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'README.txt 2024-02-01 09:15 2K' || chr(10)
-                  || 'CHANGELOG.md 2024-02-02 14:40 11K' || chr(10)
-                  || 'setup.sh 2024-02-03 16:05 1K list '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_DIRLIST_TEXT = (
+    ["Index of /pub/files\nName Last modified Size\nreport.pdf 2024-01-05 "
+     "10:22 1.2M\ndata.csv 2024-01-06 11:03 480K\nParent Directory batch ", 3],
+    ["drwxr-xr-x 2 root root 4096 Jan 5 10:22 logs\n-rw-r--r-- 1 root root "
+     "1048576 Jan 6 11:03 dump.bin case ", 5],
+    ["The archive of letters was donated to the library ", 7],
+    ["README.txt 2024-02-01 09:15 2K\nCHANGELOG.md 2024-02-02 14:40 11K\n"
+     "setup.sh 2024-02-03 16:05 1K list ", 3],
+)
+_DIRLIST_TEXT_SQL = _docs_sql(_DIRLIST_TEXT, "text")
 
 _DIRLIST_SQL = (
     "WITH u AS (" + _DIRLIST_TEXT_SQL + "),"
@@ -17053,28 +15899,7 @@ def q_directory_listing_detect(spark: SparkSession,
     counts and poisons dedup shingles with filename tables. Signals:
     the Index-of header, filename + date + size rows, and unix
     permission strings. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Index of /pub/files\nName Last modified Size\n"
-                  "report.pdf 2024-01-05 10:22 1.2M\n"
-                  "data.csv 2024-01-06 11:03 480K\n"
-                  "Parent Directory batch "), (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("drwxr-xr-x 2 root root 4096 Jan 5 10:22 logs\n"
-                  "-rw-r--r-- 1 root root 1048576 Jan 6 11:03 "
-                  "dump.bin case "), (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The archive of letters was donated to the library "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("README.txt 2024-02-01 09:15 2K\n"
-                  "CHANGELOG.md 2024-02-02 14:40 11K\n"
-                  "setup.sh 2024-02-03 16:05 1K list "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _DIRLIST_TEXT, "text")
     header = F.col("text").rlike("(?m)^Index of /").cast("int")
     frows = F.size(F.regexp_extract_all(
         "text",
@@ -17093,28 +15918,16 @@ def q_directory_listing_detect(spark: SparkSession,
         .alias("is_listing"))
 
 
-_FORUM_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Posted by alice on 2024-01-05' || chr(10)
-                         || 'Has anyone tried the new firmware?'
-                         || chr(10) || 'Posted by bob on 2024-01-05'
-                         || chr(10) || 'Yes, works fine for me.'
-                         || chr(10) || 'Posted by alice on 2024-01-06'
-                         || chr(10) || 'Thanks! batch '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'Posted by solo_user on 2024-03-01' || chr(10)
-                         || 'First! case ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'The observatory posted new images of the '
-                         || 'nebula ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'Re: Upgrade question' || chr(10)
-                  || 'Posted by carol on 2024-02-02' || chr(10)
-                  || 'Quoting earlier: it depends.' || chr(10)
-                  || 'Posted by dave on 2024-02-03' || chr(10)
-                  || 'Agreed entirely ' || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_FORUM_TEXT = (
+    ["Posted by alice on 2024-01-05\nHas anyone tried the new firmware?\n"
+     "Posted by bob on 2024-01-05\nYes, works fine for me.\nPosted by alice "
+     "on 2024-01-06\nThanks! batch ", 3],
+    ["Posted by solo_user on 2024-03-01\nFirst! case ", 5],
+    ["The observatory posted new images of the nebula ", 7],
+    ["Re: Upgrade question\nPosted by carol on 2024-02-02\nQuoting earlier: "
+     "it depends.\nPosted by dave on 2024-02-03\nAgreed entirely ", 3],
+)
+_FORUM_TEXT_SQL = _docs_sql(_FORUM_TEXT, "text")
 
 _FORUM_SQL = (
     "WITH u AS (" + _FORUM_TEXT_SQL + "),"
@@ -17146,27 +15959,7 @@ def q_forum_thread_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversational stratum dialogue corpora mine; a single-post page is
     not a thread, and 'The observatory posted ...' prose never counts
     (line-anchored marker). Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Posted by alice on 2024-01-05\nHas anyone tried the "
-                  "new firmware?\nPosted by bob on 2024-01-05\nYes, "
-                  "works fine for me.\nPosted by alice on 2024-01-06\n"
-                  "Thanks! batch "), (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Posted by solo_user on 2024-03-01\nFirst! case "),
-            (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The observatory posted new images of the nebula "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("Re: Upgrade question\nPosted by carol on 2024-02-02"
-                  "\nQuoting earlier: it depends.\nPosted by dave on "
-                  "2024-02-03\nAgreed entirely "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _FORUM_TEXT, "text")
     post_pat = "(?m)^Posted by ([a-z_]+) on [0-9]{4}-[0-9]{2}-[0-9]{2}"
     posts = F.size(F.regexp_extract_all("text", F.lit(post_pat), F.lit(0)))
     authors = F.size(F.array_distinct(
@@ -17181,18 +15974,13 @@ def q_forum_thread_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n_posts") >= 2).cast("int").alias("is_thread"))
 
 
-_JSONL_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '{"title": "Post ' || CAST(doc_id % 5 AS VARCHAR)
-                         || '", "views": ' || CAST(doc_id % 100 AS VARCHAR)
-                         || ', "tags": ["a", "b"]}'
-             WHEN 1 THEN '{"title": "Broken'
-             WHEN 2 THEN '{"views": 7}'
-             ELSE '{"title": "X", "views": "many"}'
-           END AS raw
-    FROM documents
-"""
+_JSONL_TEXT = (
+    ['{"title": "Post ', 5, '", "views": ', 100, ', "tags": ["a", "b"]}'],
+    ['{"title": "Broken'],
+    ['{"views": 7}'],
+    ['{"title": "X", "views": "many"}'],
+)
+_JSONL_TEXT_SQL = _docs_sql(_JSONL_TEXT, "raw")
 
 _JSONL_SQL = (
     "WITH u AS (" + _JSONL_TEXT_SQL + ")"
@@ -17229,18 +16017,7 @@ def q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     a failed job). Missing fields are NULL without flagging. The oracle
     twin reproduces the exact PERMISSIVE semantics via json_valid +
     json_type. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    raw = (
-        F.when(m == 0, F.concat(
-            F.lit('{"title": "Post '), (k % 5).cast("string"),
-            F.lit('", "views": '), (k % 100).cast("string"),
-            F.lit(', "tags": ["a", "b"]}')))
-        .when(m == 1, F.lit('{"title": "Broken'))
-        .when(m == 2, F.lit('{"views": 7}'))
-        .otherwise(F.lit('{"title": "X", "views": "many"}')))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), raw.alias("raw"))
+    docs = _docs(spark, sf_dir, _JSONL_TEXT, "raw")
     parsed = F.from_json(
         "raw",
         "title string, views bigint, tags array<string>, _corrupt string",
@@ -17379,25 +16156,16 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("chi2_contrib"))
 
 
-_FORM_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '<form action="/login" method="post">'
-                         || '<input type="text" name="user">'
-                         || '<input type="password" name="pw"></form> '
-                         || 'page ' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN '<form action="/search">'
-                         || '<input type="search" name="q"></form> '
-                         || 'results ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'An article about coastal erosion and dunes '
-                         || CAST(doc_id % 7 AS VARCHAR)
-             ELSE '<form action="/subscribe">'
-                  || '<input type="email" name="e"></form>'
-                  || '<form action="/vote"><input type="radio"></form> '
-                  || 'footer ' || CAST(doc_id % 3 AS VARCHAR)
-           END AS html
-    FROM documents
-"""
+_FORM_TEXT = (
+    ['<form action="/login" method="post"><input type="text" '
+     'name="user"><input type="password" name="pw"></form> page ', 3],
+    ['<form action="/search"><input type="search" name="q"></form> results ',
+     5],
+    ["An article about coastal erosion and dunes ", 7],
+    ['<form action="/subscribe"><input type="email" name="e"></form><form '
+     'action="/vote"><input type="radio"></form> footer ', 3],
+)
+_FORM_TEXT_SQL = _docs_sql(_FORM_TEXT, "html")
 
 _FORM_SQL = (
     "WITH u AS (" + _FORM_TEXT_SQL + "),"
@@ -17435,28 +16203,7 @@ def q_html_form_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     template duplication) before quality scoring wastes signal on them.
     Priority typing: password > search > email > other. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    html = (
-        F.when(m == 0, F.concat(
-            F.lit('<form action="/login" method="post">'
-                  '<input type="text" name="user">'
-                  '<input type="password" name="pw"></form> page '),
-            (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit('<form action="/search">'
-                  '<input type="search" name="q"></form> results '),
-            (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("An article about coastal erosion and dunes "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit('<form action="/subscribe">'
-                  '<input type="email" name="e"></form>'
-                  '<form action="/vote"><input type="radio"></form> '
-                  "footer "), (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), html.alias("html"))
+    docs = _docs(spark, sf_dir, _FORM_TEXT, "html")
     base = docs.select(
         "doc",
         F.size(F.regexp_extract_all("html", F.lit("<form"), F.lit(0)))
@@ -17878,20 +16625,13 @@ def q_ab_experiment_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.expr(chi2) >= 38415).cast("int").alias("significant"))
 
 
-_ACRO_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'The Central Processing Unit (CPU) runs the '
-                         || 'show case ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'We signed the Free Trade Agreement (FTA) '
-                         || 'today round ' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'The Big Announcement (NASA) surprised '
-                         || 'everyone ' || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'No parenthetical definitions appear here at all '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_ACRO_TEXT = (
+    ["The Central Processing Unit (CPU) runs the show case ", 5],
+    ["We signed the Free Trade Agreement (FTA) today round ", 3],
+    ["The Big Announcement (NASA) surprised everyone ", 7],
+    ["No parenthetical definitions appear here at all ", 3],
+)
+_ACRO_TEXT_SQL = _docs_sql(_ACRO_TEXT, "text")
 
 _ACRO_PAT = "((?:[A-Z][a-z]+ ){1,5})\\(([A-Z]{2,6})\\)"
 
@@ -17936,23 +16676,7 @@ def q_acronym_defs(spark: SparkSession, sf_dir: str) -> DataFrame:
     regex; validation is in-row array slicing + initials concat —
     identical list arithmetic in both engines. No-definition documents
     yield NULLs, never ''. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("The Central Processing Unit (CPU) runs the show "
-                  "case "), (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("We signed the Free Trade Agreement (FTA) today "
-                  "round "), (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The Big Announcement (NASA) surprised everyone "),
-            (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("No parenthetical definitions appear here at all "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _ACRO_TEXT, "text")
     phrase = F.nullif(F.trim(F.regexp_extract("text", _ACRO_PAT, 1)),
                       F.lit(""))
     acro = F.nullif(F.regexp_extract("text", _ACRO_PAT, 2), F.lit(""))
@@ -18400,18 +17124,13 @@ def q_source_cover(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_TITLE_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'Breaking News Markets Rally Today'
-             WHEN 1 THEN 'markets rally today breaking news'
-             WHEN 2 THEN 'Local Team Wins The Cup '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             ELSE 'The Cup Wins Local Team '
-                  || CAST(doc_id % 5 AS VARCHAR)
-           END AS title
-    FROM documents
-"""
+_TITLE_TEXT = (
+    ["Breaking News Markets Rally Today"],
+    ["markets rally today breaking news"],
+    ["Local Team Wins The Cup ", 5],
+    ["The Cup Wins Local Team ", 5],
+)
+_TITLE_TEXT_SQL = _docs_sql(_TITLE_TEXT, "title")
 
 _TITLE_SQL = (
     "WITH u AS (" + _TITLE_TEXT_SQL + "),"
@@ -18441,17 +17160,7 @@ def q_title_signature_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-id keeper. One exact groupBy on the signature — the O(n)
     pre-filter that spares MinHash the easy 90%. Zero-shuffle
     projection + one signature-keyed agg."""
-    k = F.col("doc_id")
-    m = k % 4
-    title = (
-        F.when(m == 0, F.lit("Breaking News Markets Rally Today"))
-        .when(m == 1, F.lit("markets rally today breaking news"))
-        .when(m == 2, F.concat(
-            F.lit("Local Team Wins The Cup "), (k % 5).cast("string")))
-        .otherwise(F.concat(
-            F.lit("The Cup Wins Local Team "), (k % 5).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), title.alias("title"))
+    docs = _docs(spark, sf_dir, _TITLE_TEXT, "title")
     sig = F.array_join(F.array_sort(F.filter(
         F.split(F.lower("title"), " "),
         lambda w: ~w.isin("the", "a", "an"))), " ")
@@ -18463,17 +17172,17 @@ def q_title_signature_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n_docs") >= 2))
 
 
+# a deterministic labeler pair: every 7th doc mispredicts to the next class
+_LABEL = (["x"], ["y"], ["z"])
+_PREDICTED = ([(["y"], ["z"], ["x"])],) + ([_LABEL],) * 6
+
+
 @query(
     "multiclass_prf",
-    """
+    f"""
     WITH lab AS (
-      SELECT CASE doc_id % 3 WHEN 0 THEN 'x' WHEN 1 THEN 'y'
-             ELSE 'z' END AS truth,
-             CASE WHEN doc_id % 7 = 0 THEN
-               CASE doc_id % 3 WHEN 0 THEN 'y' WHEN 1 THEN 'z'
-               ELSE 'x' END
-             ELSE CASE doc_id % 3 WHEN 0 THEN 'x' WHEN 1 THEN 'y'
-                  ELSE 'z' END END AS pred
+      SELECT {case_sql('doc_id', _LABEL)} AS truth,
+             {case_sql('doc_id', _PREDICTED)} AS pred
       FROM documents),
     conf AS (
       SELECT truth, pred, CAST(COUNT(*) AS BIGINT) AS n
@@ -18516,13 +17225,8 @@ def q_multiclass_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the data; F1 is the integer harmonic of the bp values."""
     docs = _t(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    truth = (F.when(k % 3 == 0, "x").when(k % 3 == 1, "y")
-             .otherwise("z"))
-    rotated = (F.when(k % 3 == 0, "y").when(k % 3 == 1, "z")
-               .otherwise("x"))
-    lab = docs.select(
-        truth.alias("truth"),
-        F.when(k % 7 == 0, rotated).otherwise(truth).alias("pred"))
+    lab = docs.select(case_col(k, _LABEL).alias("truth"),
+                      case_col(k, _PREDICTED).alias("pred"))
     conf = lab.groupBy("truth", "pred").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"))
     cls = spark.createDataFrame([("x",), ("y",), ("z",)], ["cls"])
@@ -18935,22 +17639,13 @@ def q_effective_sample_size(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint").alias("ess_ratio_bp"))
 
 
-_SNIFF_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'name,age,city' || chr(10)
-                         || 'alice,30,berlin' || chr(10)
-                         || 'bob,25,paris' || chr(10) || 'carl,41,rome'
-             WHEN 1 THEN 'id' || chr(9) || 'value' || chr(10)
-                         || '1' || chr(9) || '10' || chr(10)
-                         || '2' || chr(9) || '20'
-             WHEN 2 THEN 'a|b|c' || chr(10) || '1|2|3' || chr(10)
-                         || '4|5|6'
-             ELSE 'just a plain sentence without structure '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_SNIFF_TEXT = (
+    ["name,age,city\nalice,30,berlin\nbob,25,paris\ncarl,41,rome"],
+    ["id\tvalue\n1\t10\n2\t20"],
+    ["a|b|c\n1|2|3\n4|5|6"],
+    ["just a plain sentence without structure ", 3],
+)
+_SNIFF_TEXT_SQL = _docs_sql(_SNIFF_TEXT, "text")
 
 
 _SNIFF_SQL = (
@@ -19003,19 +17698,7 @@ def q_delimiter_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     first line over digit-bearing data lines. Routes CSV/TSV payloads
     to a columnar parser instead of the prose pipeline. All in-row
     list arithmetic over the line split — zero shuffle."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.lit(
-            "name,age,city\nalice,30,berlin\nbob,25,paris\n"
-            "carl,41,rome"))
-        .when(m == 1, F.lit("id\tvalue\n1\t10\n2\t20"))
-        .when(m == 2, F.lit("a|b|c\n1|2|3\n4|5|6"))
-        .otherwise(F.concat(
-            F.lit("just a plain sentence without structure "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _SNIFF_TEXT, "text")
     lines = F.split("text", "\n")
 
     def counts(d: str):
@@ -19049,22 +17732,14 @@ def q_delimiter_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
          & (all_digits > 0)).cast("int").alias("has_header"))
 
 
-_UNIT_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN 'The trail is 5 km long segment '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 1 THEN 'A 250 cm plank case '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 2 THEN 'The file is 3 mb in size rev '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 3 THEN 'Weight: 2 kg exactly lot '
-                         || CAST(doc_id % 7 AS VARCHAR)
-             ELSE 'No measurements mentioned here at all '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_UNIT_TEXT = (
+    ["The trail is 5 km long segment ", 3],
+    ["A 250 cm plank case ", 5],
+    ["The file is 3 mb in size rev ", 3],
+    ["Weight: 2 kg exactly lot ", 7],
+    ["No measurements mentioned here at all ", 3],
+)
+_UNIT_TEXT_SQL = _docs_sql(_UNIT_TEXT, "text")
 
 _UNIT_PAT = "\\b([0-9]+) (km|cm|mb|kg|kb|mm|m|g)\\b"
 
@@ -19109,24 +17784,7 @@ def q_unit_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Longest-alternative-first regex so '5 km' never half-matches as
     'm'; no-measurement documents yield NULLs. Zero-shuffle
     projection."""
-    k = F.col("doc_id")
-    m = k % 5
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("The trail is 5 km long segment "),
-            (k % 3).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("A 250 cm plank case "), (k % 5).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The file is 3 mb in size rev "),
-            (k % 3).cast("string")))
-        .when(m == 3, F.concat(
-            F.lit("Weight: 2 kg exactly lot "), (k % 7).cast("string")))
-        .otherwise(F.concat(
-            F.lit("No measurements mentioned here at all "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _UNIT_TEXT, "text")
     qty = F.nullif(F.regexp_extract("text", _UNIT_PAT, 1),
                    F.lit("")).cast("bigint")
     unit = F.nullif(F.regexp_extract("text", _UNIT_PAT, 2), F.lit(""))
@@ -19617,15 +18275,10 @@ def q_skyline_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "cohens_kappa",
-    """
+    f"""
     WITH lab AS (
-      SELECT CASE doc_id % 3 WHEN 0 THEN 'x' WHEN 1 THEN 'y'
-             ELSE 'z' END AS a,
-             CASE WHEN doc_id % 7 = 0 THEN
-               CASE doc_id % 3 WHEN 0 THEN 'y' WHEN 1 THEN 'z'
-               ELSE 'x' END
-             ELSE CASE doc_id % 3 WHEN 0 THEN 'x' WHEN 1 THEN 'y'
-                  ELSE 'z' END END AS b
+      SELECT {case_sql('doc_id', _LABEL)} AS a,
+             {case_sql('doc_id', _PREDICTED)} AS b
       FROM documents),
     conf AS (
       SELECT a, b, CAST(COUNT(*) AS BIGINT) AS n
@@ -19666,10 +18319,8 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the TINY matrix, never a second pass."""
     docs = _t(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    a = (F.when(k % 3 == 0, "x").when(k % 3 == 1, "y").otherwise("z"))
-    rot = (F.when(k % 3 == 0, "y").when(k % 3 == 1, "z").otherwise("x"))
-    lab = docs.select(
-        a.alias("a"), F.when(k % 7 == 0, rot).otherwise(a).alias("b"))
+    lab = docs.select(case_col(k, _LABEL).alias("a"),
+                      case_col(k, _PREDICTED).alias("b"))
     conf = lab.groupBy("a", "b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"))
     marg = conf.agg(
@@ -19781,18 +18432,12 @@ def q_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_r").cast("bigint").alias("n_right"))
 
 
-_ENTCO_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 3
-             WHEN 0 THEN 'Alice met Bob in Paris while Bob visited '
-                         || 'Carol ' || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'Paris and Berlin signed the accord with '
-                         || 'Alice ' || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'the quick brown fox ignored everyone '
-                  || CAST(doc_id % 7 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_ENTCO_TEXT = (
+    ["Alice met Bob in Paris while Bob visited Carol ", 5],
+    ["Paris and Berlin signed the accord with Alice ", 3],
+    ["the quick brown fox ignored everyone ", 7],
+)
+_ENTCO_TEXT_SQL = _docs_sql(_ENTCO_TEXT, "text")
 
 _ENTCO_SQL = (
     "WITH u AS (" + _ENTCO_TEXT_SQL + "),"
@@ -19821,20 +18466,7 @@ def q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     by entities-per-doc, never a corpus self-join), then one pair-keyed
     count with a support floor. The oracle twin runs the doc-keyed
     self-join."""
-    k = F.col("doc_id")
-    m = k % 3
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Alice met Bob in Paris while Bob visited Carol "),
-            (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Paris and Berlin signed the accord with Alice "),
-            (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("the quick brown fox ignored everyone "),
-            (k % 7).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _ENTCO_TEXT, "text")
     ents = F.array_sort(F.array_distinct(F.regexp_extract_all(
         "text", F.lit(r"\b[A-Z][a-z]+\b"), F.lit(0))))
     arr = docs.select("doc", ents.alias("ents"))
@@ -19849,20 +18481,21 @@ def q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("support") >= 2))
 
 
+_SOURCE = (["crm"], ["web"], ["import"])
+
+
 @query(
     "survivorship_merge",
-    """
+    f"""
     WITH rec AS (
       SELECT doc_id % 50 AS entity,
-             CASE doc_id % 3 WHEN 0 THEN 'crm' WHEN 1 THEN 'web'
-             ELSE 'import' END AS source,
+             {case_sql('doc_id', _SOURCE)} AS source,
              CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 2 ELSE 3 END
                AS prio,
              doc_id AS k,
              CASE WHEN doc_id % 4 <> 0 THEN
                'N' || CAST(doc_id % 50 AS VARCHAR) || '_'
-               || CASE doc_id % 3 WHEN 0 THEN 'crm' WHEN 1 THEN 'web'
-                  ELSE 'import' END
+               || {case_sql('doc_id', _SOURCE)}
              END AS name,
              CASE WHEN doc_id % 5 <> 0 THEN
                'e' || CAST(doc_id AS VARCHAR) || '@x'
@@ -19873,10 +18506,10 @@ def q_entity_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT entity,
              CAST(COUNT(*) AS BIGINT) AS n_records,
              min(CASE WHEN name IS NOT NULL
-                 THEN {'p': prio, 'k': k, 'v': name, 's': source} END)
+                 THEN {{'p': prio, 'k': k, 'v': name, 's': source}} END)
                AS nb,
              max(CASE WHEN email IS NOT NULL
-                 THEN {'d': updated_day, 'k': k, 'v': email} END)
+                 THEN {{'d': updated_day, 'k': k, 'v': email}} END)
                AS eb
       FROM rec GROUP BY entity)
     SELECT CAST(entity AS BIGINT) AS entity, n_records,
@@ -19897,8 +18530,7 @@ def q_survivorship_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     with map-side partials, no window, no self-join."""
     docs = _t(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    src = (F.when(k % 3 == 0, "crm").when(k % 3 == 1, "web")
-           .otherwise("import"))
+    src = case_col(k, _SOURCE)
     prio = (F.when(k % 3 == 0, 1).when(k % 3 == 1, 2).otherwise(3))
     name = F.when(
         k % 4 != 0,
@@ -20561,23 +19193,16 @@ def q_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_runs"))
 
 
-_ALOG_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN '10.0.0.' || CAST(doc_id % 200 AS VARCHAR)
-                         || ' - - [15/Jan/2024:12:00:01 +0000] '
-                         || '"GET /index.html HTTP/1.1" 200 5120'
-             WHEN 1 THEN '192.168.1.' || CAST(doc_id % 200 AS VARCHAR)
-                         || ' - - [15/Jan/2024:12:00:02 +0000] '
-                         || '"POST /api/v1/items HTTP/1.1" 404 512'
-             WHEN 2 THEN 'garbled line without structure '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE '10.1.2.' || CAST(doc_id % 200 AS VARCHAR)
-                  || ' - - [15/Jan/2024:12:00:03 +0000] '
-                  || '"HEAD /health HTTP/1.1" 500 -'
-           END AS line
-    FROM documents
-"""
+_ALOG_TEXT = (
+    ["10.0.0.", 200, ' - - [15/Jan/2024:12:00:01 +0000] "GET /index.html '
+     'HTTP/1.1" 200 5120'],
+    ["192.168.1.", 200, ' - - [15/Jan/2024:12:00:02 +0000] "POST '
+     '/api/v1/items HTTP/1.1" 404 512'],
+    ["garbled line without structure ", 3],
+    ["10.1.2.", 200, ' - - [15/Jan/2024:12:00:03 +0000] "HEAD /health '
+     'HTTP/1.1" 500 -'],
+)
+_ALOG_TEXT_SQL = _docs_sql(_ALOG_TEXT, "line")
 
 _ALOG_PAT = ("^([0-9.]+) - - \\[([^\\]]+)\\] "
              + '"([A-Z]+) ([^ ]+) HTTP/[0-9.]+" ([0-9]{3}) ([0-9-]+)')
@@ -20622,26 +19247,7 @@ def q_apache_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     same never-silent contract as jsonl_ingest. Zero-shuffle
     projection; the downstream rollups (status funnel, bot gap
     analysis) already exist in this suite."""
-    k = F.col("doc_id")
-    m = k % 4
-    line = (
-        F.when(m == 0, F.concat(
-            F.lit("10.0.0."), (k % 200).cast("string"),
-            F.lit(' - - [15/Jan/2024:12:00:01 +0000] '
-                  '"GET /index.html HTTP/1.1" 200 5120')))
-        .when(m == 1, F.concat(
-            F.lit("192.168.1."), (k % 200).cast("string"),
-            F.lit(' - - [15/Jan/2024:12:00:02 +0000] '
-                  '"POST /api/v1/items HTTP/1.1" 404 512')))
-        .when(m == 2, F.concat(
-            F.lit("garbled line without structure "),
-            (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("10.1.2."), (k % 200).cast("string"),
-            F.lit(' - - [15/Jan/2024:12:00:03 +0000] '
-                  '"HEAD /health HTTP/1.1" 500 -'))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), line.alias("line"))
+    docs = _docs(spark, sf_dir, _ALOG_TEXT, "line")
     pat = _ALOG_PAT
 
     def grp(i: int):
@@ -20657,22 +19263,17 @@ def q_apache_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         (~F.col("line").rlike(pat)).cast("int").alias("malformed"))
 
 
-_UA_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 5
-             WHEN 0 THEN 'Mozilla/5.0 (Windows NT 10.0; Win64; x64) '
-                         || 'AppleWebKit/537.36 Chrome/120.0 Safari/537.36'
-             WHEN 1 THEN 'Mozilla/5.0 (iPhone; CPU iPhone OS 17_0 like '
-                         || 'Mac OS X) Version/17.0 Mobile/15E148 Safari'
-             WHEN 2 THEN 'Mozilla/5.0 (compatible; Googlebot/2.1; '
-                         || '+http://www.google.com/bot.html)'
-             WHEN 3 THEN 'curl/8.' || CAST(doc_id % 5 AS VARCHAR)
-                         || '.0'
-             ELSE 'python-requests/2.' || CAST(doc_id % 30 AS VARCHAR)
-                  || '.0'
-           END AS ua
-    FROM documents
-"""
+_UA_TEXT = (
+    ["Mozilla/5.0 (Windows NT 10.0; Win64; x64) AppleWebKit/537.36 "
+     "Chrome/120.0 Safari/537.36"],
+    ["Mozilla/5.0 (iPhone; CPU iPhone OS 17_0 like Mac OS X) Version/17.0 "
+     "Mobile/15E148 Safari"],
+    ["Mozilla/5.0 (compatible; Googlebot/2.1; "
+     "+http://www.google.com/bot.html)"],
+    ["curl/8.", 5, ".0"],
+    ["python-requests/2.", 30, ".0"],
+)
+_UA_TEXT_SQL = _docs_sql(_UA_TEXT, "ua")
 
 _UA_SQL = (
     "WITH u AS (" + _UA_TEXT_SQL + ")"
@@ -20702,25 +19303,7 @@ def q_ua_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     desktop for the rest. Priority matters: Googlebot's UA contains
     'Mozilla/' too, so the bot test runs FIRST — the classic
     misclassification bug. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 5
-    ua = (
-        F.when(m == 0, F.lit(
-            "Mozilla/5.0 (Windows NT 10.0; Win64; x64) "
-            "AppleWebKit/537.36 Chrome/120.0 Safari/537.36"))
-        .when(m == 1, F.lit(
-            "Mozilla/5.0 (iPhone; CPU iPhone OS 17_0 like Mac OS X) "
-            "Version/17.0 Mobile/15E148 Safari"))
-        .when(m == 2, F.lit(
-            "Mozilla/5.0 (compatible; Googlebot/2.1; "
-            "+http://www.google.com/bot.html)"))
-        .when(m == 3, F.concat(
-            F.lit("curl/8."), (k % 5).cast("string"), F.lit(".0")))
-        .otherwise(F.concat(
-            F.lit("python-requests/2."), (k % 30).cast("string"),
-            F.lit(".0"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), ua.alias("ua"))
+    docs = _docs(spark, sf_dir, _UA_TEXT, "ua")
     is_bot = F.col("ua").rlike(
         "(?i)(bot|crawler|spider|curl|python-requests|wget)")
     cls = (
@@ -20735,27 +19318,16 @@ def q_ua_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         is_bot.cast("int").alias("is_bot"))
 
 
-_SECH_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'strict-transport-security: max-age=31536000'
-                         || chr(10) || 'content-security-policy: '
-                         || 'default-src self' || chr(10)
-                         || 'x-frame-options: DENY' || chr(10)
-                         || 'x-content-type-options: nosniff'
-             WHEN 1 THEN 'x-frame-options: SAMEORIGIN' || chr(10)
-                         || 'server: nginx/' || CAST(doc_id % 9 AS VARCHAR)
-             WHEN 2 THEN 'server: apache' || chr(10)
-                         || 'x-powered-by: PHP/5.'
-                         || CAST(doc_id % 6 AS VARCHAR)
-             ELSE 'strict-transport-security: max-age=63072000; '
-                  || 'includeSubDomains' || chr(10)
-                  || 'x-content-type-options: nosniff' || chr(10)
-                  || 'referrer-policy: no-referrer '
-                  || CAST(doc_id % 3 AS VARCHAR)
-           END AS headers
-    FROM documents
-"""
+_SECH_TEXT = (
+    ["strict-transport-security: max-age=31536000\ncontent-security-policy: "
+     "default-src self\nx-frame-options: DENY\nx-content-type-options: "
+     "nosniff"],
+    ["x-frame-options: SAMEORIGIN\nserver: nginx/", 9],
+    ["server: apache\nx-powered-by: PHP/5.", 6],
+    ["strict-transport-security: max-age=63072000; includeSubDomains\n"
+     "x-content-type-options: nosniff\nreferrer-policy: no-referrer ", 3],
+)
+_SECH_TEXT_SQL = _docs_sql(_SECH_TEXT, "headers")
 
 _SECH_SQL = (
     "WITH u AS (" + _SECH_TEXT_SQL + "),"
@@ -20794,26 +19366,7 @@ def q_security_headers_audit(spark: SparkSession,
     hygiene score security dashboards aggregate per host. A bare
     'server: apache' without a version does NOT count as a leak.
     Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 4
-    headers = (
-        F.when(m == 0, F.lit(
-            "strict-transport-security: max-age=31536000\n"
-            "content-security-policy: default-src self\n"
-            "x-frame-options: DENY\nx-content-type-options: nosniff"))
-        .when(m == 1, F.concat(
-            F.lit("x-frame-options: SAMEORIGIN\nserver: nginx/"),
-            (k % 9).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("server: apache\nx-powered-by: PHP/5."),
-            (k % 6).cast("string")))
-        .otherwise(F.concat(
-            F.lit("strict-transport-security: max-age=63072000; "
-                  "includeSubDomains\nx-content-type-options: nosniff"
-                  "\nreferrer-policy: no-referrer "),
-            (k % 3).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), headers.alias("headers"))
+    docs = _docs(spark, sf_dir, _SECH_TEXT, "headers")
 
     def has(s: str):
         return F.col("headers").contains(s).cast("int")
@@ -21613,26 +20166,20 @@ def q_good_turing_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("unseen_mass_bp")))
 
 
-_SOFT404_TEXT_SQL = """
+_SOFT404_TEXT = (
+    ["The harvest festival drew record crowds and the mayor opened the fair ",
+     7],
+    ["Oops! The page you are looking for cannot be found. Error 404. Try the "
+     "homepage ", 3],
+    ["The marathon had 404 runners this year, a record for the city ", 4],
+    ["Page not found. The requested URL was not found on this server ", 3],
+    ["This article no longer exists and has been removed by the editors ", 6],
+)
+_SOFT404_TEXT_SQL = f"""
     SELECT doc_id AS doc,
            CAST(CASE WHEN doc_id % 5 = 3 THEN 404 ELSE 200 END AS INT)
              AS status,
-           CASE doc_id % 5
-             WHEN 0 THEN 'The harvest festival drew record crowds and '
-                         || 'the mayor opened the fair ' ||
-                         CAST(doc_id % 7 AS VARCHAR)
-             WHEN 1 THEN 'Oops! The page you are looking for cannot be '
-                         || 'found. Error 404. Try the homepage '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'The marathon had 404 runners this year, a '
-                         || 'record for the city '
-                         || CAST(doc_id % 4 AS VARCHAR)
-             WHEN 3 THEN 'Page not found. The requested URL was not '
-                         || 'found on this server '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'This article no longer exists and has been removed '
-                  || 'by the editors ' || CAST(doc_id % 6 AS VARCHAR)
-           END AS text
+           {case_sql('doc_id', _SOFT404_TEXT)} AS text
     FROM documents
 """
 
@@ -21672,26 +20219,9 @@ def q_soft404_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = F.col("doc_id")
     m = k % 5
     status = F.when(m == 3, 404).otherwise(200).cast("int")
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("The harvest festival drew record crowds and the "
-                  "mayor opened the fair "), (k % 7).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Oops! The page you are looking for cannot be found. "
-                  "Error 404. Try the homepage "),
-            (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("The marathon had 404 runners this year, a record "
-                  "for the city "), (k % 4).cast("string")))
-        .when(m == 3, F.concat(
-            F.lit("Page not found. The requested URL was not found on "
-                  "this server "), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("This article no longer exists and has been removed "
-                  "by the editors "), (k % 6).cast("string"))))
     docs = _cpu(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("doc"), status.alias("status"),
-        text.alias("text"))
+        case_col(k, _SOFT404_TEXT).alias("text"))
     strong = F.size(F.regexp_extract_all(
         F.col("text"),
         F.lit("(?i)(error 404|404 error|404 not found|page not found)"),
@@ -21709,24 +20239,15 @@ def q_soft404_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("soft404"))
 
 
-_PRICE_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 6
-             WHEN 0 THEN 'Now only $1,299.99 while stocks last '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'Preis: 12,50 € inkl. MwSt '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'Price: Rs. 1,23,456 onwards '
-                         || CAST(doc_id % 4 AS VARCHAR)
-             WHEN 3 THEN 'The subscription costs USD 49 per year '
-                         || CAST(doc_id % 2 AS VARCHAR)
-             WHEN 4 THEN 'Download for free today '
-                         || CAST(doc_id % 3 AS VARCHAR)
-             ELSE 'The committee met at 3,000 feet elevation '
-                  || CAST(doc_id % 4 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_PRICE_TEXT = (
+    ["Now only $1,299.99 while stocks last ", 5],
+    ["Preis: 12,50 € inkl. MwSt ", 3],
+    ["Price: Rs. 1,23,456 onwards ", 4],
+    ["The subscription costs USD 49 per year ", 2],
+    ["Download for free today ", 3],
+    ["The committee met at 3,000 feet elevation ", 4],
+)
+_PRICE_TEXT_SQL = _docs_sql(_PRICE_TEXT, "text")
 
 _PRICE_CENTS_SQL = """
            CASE WHEN raw IS NULL THEN NULL
@@ -21797,28 +20318,7 @@ def q_price_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     currency-adjacent number (bare '3,000 feet', 'free') stay NULL —
     observable, never a silent 0. First-match-wins priority $ > € >
     Rs > code keeps the parse deterministic. Zero-shuffle projection."""
-    k = F.col("doc_id")
-    m = k % 6
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("Now only $1,299.99 while stocks last "),
-            (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("Preis: 12,50 € inkl. MwSt "),
-            (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("Price: Rs. 1,23,456 onwards "),
-            (k % 4).cast("string")))
-        .when(m == 3, F.concat(
-            F.lit("The subscription costs USD 49 per year "),
-            (k % 2).cast("string")))
-        .when(m == 4, F.concat(
-            F.lit("Download for free today "), (k % 3).cast("string")))
-        .otherwise(F.concat(
-            F.lit("The committee met at 3,000 feet elevation "),
-            (k % 4).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _PRICE_TEXT, "text")
     d_amt = F.regexp_extract(
         "text", r"\$\s*([0-9][0-9,]*(\.[0-9]{1,2})?)", 1)
     e_amt = F.regexp_extract(
@@ -22629,20 +21129,13 @@ def q_corpus_growth_curves(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("dup_bp")))
 
 
-_DEHYPH_TEXT_SQL = """
-    SELECT doc_id AS doc,
-           CASE doc_id % 4
-             WHEN 0 THEN 'the exam- ple shows a hyphen- ated line break '
-                         || CAST(doc_id % 5 AS VARCHAR)
-             WHEN 1 THEN 'a state-of-the-art system with well-known '
-                         || 'parts ' || CAST(doc_id % 3 AS VARCHAR)
-             WHEN 2 THEN 'the final score was 3 - 2 in the match '
-                         || CAST(doc_id % 4 AS VARCHAR)
-             ELSE 'plain prose with no broken words at all '
-                  || CAST(doc_id % 6 AS VARCHAR)
-           END AS text
-    FROM documents
-"""
+_DEHYPH_TEXT = (
+    ["the exam- ple shows a hyphen- ated line break ", 5],
+    ["a state-of-the-art system with well-known parts ", 3],
+    ["the final score was 3 - 2 in the match ", 4],
+    ["plain prose with no broken words at all ", 6],
+)
+_DEHYPH_TEXT_SQL = _docs_sql(_DEHYPH_TEXT, "text")
 
 
 @query(
@@ -22668,23 +21161,7 @@ def q_dehyphenate(spark: SparkSession, sf_dir: str) -> DataFrame:
     fix is byte-verifiable. Zero-shuffle projection; the only dialect
     care is the capture-group reference ($1 in Spark, \\\\1 in
     DuckDB/RE2)."""
-    k = F.col("doc_id")
-    m = k % 4
-    text = (
-        F.when(m == 0, F.concat(
-            F.lit("the exam- ple shows a hyphen- ated line break "),
-            (k % 5).cast("string")))
-        .when(m == 1, F.concat(
-            F.lit("a state-of-the-art system with well-known parts "),
-            (k % 3).cast("string")))
-        .when(m == 2, F.concat(
-            F.lit("the final score was 3 - 2 in the match "),
-            (k % 4).cast("string")))
-        .otherwise(F.concat(
-            F.lit("plain prose with no broken words at all "),
-            (k % 6).cast("string"))))
-    docs = _cpu(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("doc"), text.alias("text"))
+    docs = _docs(spark, sf_dir, _DEHYPH_TEXT, "text")
     return docs.select(
         "doc",
         F.size(F.regexp_extract_all(

@@ -389,10 +389,6 @@ def stream_merged_rollup(
     return writer.start()
 
 
-EVENT_SCHEMA = ("event_id long, ts timestamp, user_id long, "
-                "event_type string, value double, props string")
-
-
 def stream_interval_join(
     spark: SparkSession,
     views_dir: str,

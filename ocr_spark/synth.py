@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.casespec import case_col, case_sql, sql_str
+
 Seg = tuple[str, str]  # ('lit', text) | ('var', component-name)
 
 
@@ -43,10 +45,6 @@ def _v(name: str) -> Seg:
     return ("var", name)
 
 
-def _case5(options: list[str]) -> tuple[list[tuple[int, str]], None]:
-    return list(enumerate(options)), None
-
-
 # --- component definitions -------------------------------------------------
 # Each component: (spark_builder(k), duckdb_sql) producing identical strings.
 
@@ -58,20 +56,10 @@ _STATES = ["MH", "DL", "KA", "XX"]
 _SERIES = ["AB", "CD"]
 
 
-def _num(expr_spark: Column) -> Column:
-    return expr_spark.cast("string")
-
-
-def _case_mod(k_spark: Column | None, k_sql: str, options: list[str], mod: int) -> tuple[Column | None, str]:
-    col = None
-    if k_spark is not None:
-        for i, opt in enumerate(options[:-1]):
-            cond = (k_spark % mod) == i
-            col = F.when(cond, F.lit(opt)) if col is None else col.when(cond, F.lit(opt))
-        col = col.otherwise(F.lit(options[-1]))
-    whens = " ".join(f"WHEN {k_sql} % {mod} = {i} THEN '{opt}'" for i, opt in enumerate(options[:-1]))
-    sql = f"(CASE {whens} ELSE '{options[-1]}' END)"
-    return col, sql
+def _case_mod(k_spark: Column | None, k_sql: str, options: list[str]) -> tuple[Column | None, str]:
+    """Option ``k % len(options)``: a casespec of one-literal branches."""
+    spec = [[opt] for opt in options]
+    return (None if k_spark is None else case_col(k_spark, spec)), case_sql(k_sql, spec)
 
 
 def components(k: Column | None, ksql: str = "o_orderkey") -> dict[str, tuple[Column | None, str]]:
@@ -107,12 +95,12 @@ def components(k: Column | None, ksql: str = "o_orderkey") -> dict[str, tuple[Co
     num("reg4b", 1000 + (k * 21 + 3) % 9000, f"1000 + ({ksql} * 21 + 3) % 9000")
     num("seats", 1 + k % 9, f"1 + {ksql} % 9")
     kk = None if isinstance(k, _NoColumn) else k
-    out["name_cap"] = _case_mod(kk, ksql, _NAMES_CAP, 5)
-    out["name_caps"] = _case_mod(kk, ksql, _NAMES_CAPS, 5)
-    out["pan5"] = _case_mod(kk, ksql, _PAN5, 4)
-    out["panl"] = _case_mod(kk, ksql, _PANL, 3)
-    out["state"] = _case_mod(kk, ksql, _STATES, 4)
-    out["series"] = _case_mod(kk, ksql, _SERIES, 2)
+    out["name_cap"] = _case_mod(kk, ksql, _NAMES_CAP)
+    out["name_caps"] = _case_mod(kk, ksql, _NAMES_CAPS)
+    out["pan5"] = _case_mod(kk, ksql, _PAN5)
+    out["panl"] = _case_mod(kk, ksql, _PANL)
+    out["state"] = _case_mod(kk, ksql, _STATES)
+    out["series"] = _case_mod(kk, ksql, _SERIES)
     out["rto"] = (
         _lpad2(1 + k % 99),
         f"lpad(CAST(1 + {ksql} % 99 AS VARCHAR), 2, '0')",
@@ -226,7 +214,7 @@ def synth_text_sql(ksql: str = "o_orderkey") -> str:
         parts = []
         for kind, s in segs:
             if kind == "lit":
-                parts.append("'" + s.replace("'", "''") + "'")
+                parts.append(sql_str(s))
             else:
                 parts.append(comp[s][1])
         whens.append(f"WHEN {ksql} % 3 = {m} AND {ksql} % 4 = {v} THEN " + " || ".join(parts))

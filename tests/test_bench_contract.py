@@ -22,6 +22,11 @@ from __future__ import annotations
 
 SF_DIR = "/root/testdata/sf0.001"
 
+# Job-name prefixes of plan-metadata jobs, which every construction may
+# submit and which are not eager work: ``spark.read.parquet`` runs a 1-task
+# schema-inference job named ``parquet at ...``.
+_METADATA_JOB_PREFIXES = ("parquet at",)
+
 
 def _next_job_id(spark) -> int:
     # private[spark] compiles to public bytecode, so py4j can read the
@@ -32,17 +37,18 @@ def _next_job_id(spark) -> int:
 def _work_jobs_between(spark, lo: int, hi: int) -> list[str]:
     """Names of non-metadata jobs with lo <= jobId < hi.
 
-    Every ``spark.read.parquet`` submits a 1-task schema-inference job
-    named ``parquet at ...`` — that is plan *metadata*, present in every
-    query's construction, not eager work; everything else (localCheckpoint,
-    collect/toPandas, streaming micro-batches, writes) is real execution.
+    Jobs matching ``_METADATA_JOB_PREFIXES`` are plan *metadata*, present
+    in every query's construction, not eager work; everything else
+    (localCheckpoint, collect/toPandas, streaming micro-batches, writes) is
+    real execution.
     """
     store = spark._jsc.sc().statusStore()
     jobs = store.jobsList(None)
     names = []
     for i in range(jobs.size()):
         j = jobs.apply(i)
-        if lo <= j.jobId() < hi and not j.name().startswith("parquet at"):
+        if lo <= j.jobId() < hi and not j.name().startswith(
+                _METADATA_JOB_PREFIXES):
             names.append(j.name())
     return names
 
@@ -50,21 +56,22 @@ def _work_jobs_between(spark, lo: int, hi: int) -> list[str]:
 def test_eager_flag_matches_construction_behavior(spark):
     from ocr_spark.queries import EAGER, QUERIES
 
-    eager_in_fact: set[str] = set()
+    eager_in_fact: dict[str, list[str]] = {}
     for name, fn in QUERIES.items():
         before = _next_job_id(spark)
         df = fn(spark, SF_DIR)
-        if _work_jobs_between(spark, before, _next_job_id(spark)):
-            eager_in_fact.add(name)
+        jobs = _work_jobs_between(spark, before, _next_job_id(spark))
+        if jobs:
+            eager_in_fact[name] = jobs
         del df
 
-    unflagged = eager_in_fact - EAGER
+    unflagged = {n: j for n, j in eager_in_fact.items() if n not in EAGER}
     assert not unflagged, (
         "queries that run Spark jobs during plan construction but are not "
-        f"flagged eager=True at @query (bench would mis-time them): "
-        f"{sorted(unflagged)}"
+        f"flagged eager=True at @query (bench would mis-time them); "
+        f"query -> construction job names: {dict(sorted(unflagged.items()))}"
     )
-    overflagged = EAGER - eager_in_fact
+    overflagged = EAGER - set(eager_in_fact)
     assert not overflagged, (
         "queries flagged eager=True whose construction submitted no Spark "
         f"jobs (flag is stale; bench pays a pointless rebuild): "

@@ -1,0 +1,65 @@
+"""One spec, two engines: every doc_id-residue fixture in
+``ocr_spark.queries`` renders byte-identical text in Spark (``case_col``)
+and DuckDB (``case_sql``), row for row over the sf0.001 documents table."""
+
+from __future__ import annotations
+
+import duckdb
+from pyspark.sql import functions as F
+
+from ocr_spark import queries
+from ocr_spark.casespec import case_col, case_sql, sql_str
+
+SF_DIR = "/root/testdata/sf0.001"
+
+# Literal edge cases: a quote, a newline, a tab, a backslash, Devanagari,
+# the empty string; plus every non-literal part kind, a nested spec and an
+# arm equal to the ELSE.
+_EDGE = (
+    ["it's\na \\ backslash\tदेवनागरी ०१२ ", 3, ""],
+    [("col", "lang"), " '' ", ("mod", 9, 1), ("col", "doc_id")],
+    [""],
+    [(["x", 2], ["y"]), "z"],
+    [""],
+)
+
+
+def _specs() -> dict:
+    specs = {n: v for n, v in vars(queries).items()
+             if isinstance(v, tuple) and v
+             and all(isinstance(b, list) for b in v)}
+    specs["_EDGE"] = _EDGE
+    return specs
+
+
+def test_sql_str_escapes():
+    assert sql_str("") == "''"
+    assert sql_str("it's") == "'it''s'"
+    assert sql_str("a\nb\t") == "'a' || chr(10) || 'b' || chr(9)"
+    assert sql_str("\\d देव") == "'\\d देव'"
+
+
+def test_every_fixture_spec_renders_identically(spark):
+    specs = _specs()
+    assert len(specs) > 60, sorted(specs)
+    k = F.col("doc_id")
+    got = {
+        r["doc_id"]: r
+        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+            "doc_id", *[case_col(k, s).alias(n) for n, s in specs.items()]
+        ).collect()
+    }
+    cols = ", ".join(f'{case_sql("doc_id", s)} AS "{n}"'
+                     for n, s in specs.items())
+    want = duckdb.connect().execute(
+        f"SELECT doc_id, {cols} "
+        f"FROM read_parquet('{SF_DIR}/documents.parquet')").fetchall()
+    assert len(want) == len(got) > 0
+    bad = set()
+    for row in want:
+        for name, text in zip(specs, row[1:]):
+            spark_text = got[row[0]][name]
+            if text is None or spark_text is None \
+                    or text.encode() != spark_text.encode():
+                bad.add(name)
+    assert not bad, sorted(bad)

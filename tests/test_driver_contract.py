@@ -31,6 +31,21 @@ def test_every_query_has_oracle():
         assert isinstance(sql, str) and sql.strip(), name
 
 
+def test_duplicate_query_registration_raises():
+    """The guard is a ValueError, not an assert, so it holds under
+    ``python -O``; a rejected registration leaves the registry as it was."""
+    import pytest
+
+    from ocr_spark.queries import EAGER, ORACLE, QUERIES, query
+
+    name = next(iter(QUERIES))
+    before = (dict(QUERIES), dict(ORACLE), set(EAGER))
+    with pytest.raises(ValueError,
+                       match=f"duplicate query registration: {name}"):
+        query(name, "SELECT 1", eager=True)(lambda spark, sf_dir: None)
+    assert (QUERIES, ORACLE, EAGER) == before
+
+
 def test_no_per_row_python_udfs():
     """No row-at-a-time Python in the engine: no udf( registrations, no
     .rdd escapes outside comments (Arrow-batched ops only)."""
