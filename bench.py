@@ -34,25 +34,57 @@ sys.path.insert(0, REPO)
 # HEADLINE is DERIVED from the query registry so it can never drift from
 # __spark_entry__.queries() again (the round-3 red pytest): every registered
 # query is benched, in registration order.
-from ocr_spark.queries import EAGER  # noqa: E402
 from ocr_spark.queries import QUERIES as _REGISTRY  # noqa: E402
 
 HEADLINE = list(_REGISTRY)
-
-# Queries in ocr_spark.queries.EAGER do (some of) their work during plan
-# CONSTRUCTION (driver-side convergence loops with checkpoint-per-round,
-# eager localCheckpoints, streaming awaitTermination), so the build must sit
-# inside the timed window — timing only the final force would read back a
-# cached result in ~0 s (round-4 verdict item 1: boruvka_msf benched
-# 0.097 s vs its real multi-second cost). The set is declared AT the @query
-# registration and lockstep-verified by tests/test_bench_contract.py, which
-# counts Spark jobs submitted during each query's construction.
-
 
 def _force(df) -> int:
     """Execute the full plan (noop sink computes every column, unlike count)."""
     df.write.format("noop").mode("overwrite").save()
     return 0
+
+
+def construction_jobs(spark, build):
+    """Call ``build()``; return its result and the names of the Spark jobs
+    it submitted, less plan metadata (``spark.read.parquet`` runs a
+    schema job named ``parquet at ...``)."""
+    sc = spark.sparkContext._jsc.sc()
+    # private[spark] compiles to public bytecode, so py4j reads the
+    # DAGScheduler's job-id counter directly; it moves at submission.
+    lo = sc.dagScheduler().nextJobId()
+    result = build()
+    hi = sc.dagScheduler().nextJobId()
+    if hi == lo:
+        return result, []
+    sc.listenerBus().waitUntilEmpty()  # job events reach the status store
+    listed = sc.statusStore().jobsList(None)
+    jobs = [listed.apply(i) for i in range(listed.size())]
+    return result, [j.name() for j in jobs if lo <= j.jobId() < hi
+                    and not j.name().startswith("parquet at")]
+
+
+def time_query(spark, fn, sf_dir: str, reps: int) -> tuple[float, bool]:
+    """Best-of-``reps`` wall seconds of one query (a third run when the
+    first two spread >25%: a host noise spike), and whether it is eager.
+    An eager query's construction runs Spark jobs (convergence loops,
+    eager localCheckpoints, streams), so forcing its DataFrame alone reads
+    back a cached result in ~0 s: it is timed as construction + force.
+    The rest are timed as force only, on a plan built once untimed."""
+    df, jobs = construction_jobs(spark, lambda: fn(spark, sf_dir))
+    # Heap-state isolation: after ~40 queries the shared JVM carries the
+    # previous plans' garbage, and a query that times 2.2 s in isolation
+    # records 6.6 s mid-suite (measured); a full GC first fixes the heap.
+    spark._jvm.System.gc()
+
+    def one_run() -> float:
+        t0 = time.monotonic()
+        _force(fn(spark, sf_dir) if jobs else df)
+        return time.monotonic() - t0
+
+    runs = [one_run() for _ in range(max(1, reps))]
+    if len(runs) >= 2 and max(runs) > 1.25 * min(runs):
+        runs.append(one_run())
+    return min(runs), bool(jobs)
 
 
 def corpus_path(n_pages: int) -> str:
@@ -154,33 +186,8 @@ def main() -> None:
         names = [n for n in (only.split(",") if only else HEADLINE) if n in QUERIES]
         reps = int(os.environ.get("BENCH_REPS", "2"))
         for name in names:
-            # Best-of-N per query (plan built once, executed N times): a
-            # single-shot timing records whatever the co-tenant host was
-            # doing that minute, not the plan cost. A third run is added
-            # only when the first two disagree badly (>25% spread), which
-            # is the signature of a noise spike, not of the query.
-            # Eager-construction queries (see EAGER above) must have the
-            # build inside the timed window — timing only the final force
-            # would read back a cached result in ~0 s.
-            iterative = name in EAGER
-            df = None if iterative else QUERIES[name](spark, sf_dir)
-            # Heap-state isolation: after ~40 queries the shared JVM carries
-            # whatever garbage the previous plans left, and a query that
-            # times 2.2 s in isolation records 6.6 s mid-suite (measured).
-            # A full GC between queries makes each timing start from the
-            # same heap, like the per-query fresh-engine run a fair
-            # comparison assumes.
-            spark._jvm.System.gc()
-
-            def one_run() -> float:
-                t0 = time.monotonic()
-                _force(QUERIES[name](spark, sf_dir) if iterative else df)
-                return time.monotonic() - t0
-
-            runs = [one_run() for _ in range(max(1, reps))]
-            if len(runs) >= 2 and max(runs) > 1.25 * min(runs):
-                runs.append(one_run())
-            timings[name] = round(min(runs), 3)
+            timings[name] = round(
+                time_query(spark, QUERIES[name], sf_dir, reps)[0], 3)
 
     total = round(sum(timings.values()) + extraction["secs"], 3)
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]

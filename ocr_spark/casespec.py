@@ -1,7 +1,8 @@
 """Residue-keyed text from one spec, rendered for both engines.
 
 The operator library's synthetic inputs (``synth.py``'s ID-document
-components, ``queries.py``'s doc_id-residue fixtures) are plain input data.
+components, the doc_id-residue fixtures of the ``queries`` family modules)
+are plain input data.
 Writing them once per engine adds nothing but a way for the two spellings to
 drift, so each is written once, as a spec, and rendered twice:
 

@@ -2544,13 +2544,6 @@ def _remove_dot_segments(path: Column, depth: int = 8) -> Column:
     return p
 
 
-_DOT_SEGMENT_SQL_STEPS = [
-    (r"/\.(/|$)", "/"),
-    (r"/[^/]+/\.\.(/|$)", "/"),
-    (r"^/\.\.(/|$)", "/"),
-]
-
-
 def resolve_urls(df: DataFrame, base_col: str, ref_col: str) -> DataFrame:
     """RFC 3986 §5 reference resolution for the crawl frontier: absolute
     refs pass through, '//host/x' adopts the base scheme, '/x' replaces

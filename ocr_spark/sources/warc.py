@@ -13,8 +13,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DELIM = "WARC/1.0\n"
-
 
 def warc_split(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
     """Split a concatenated WARC blob into records: (doc, rec, warc_type,

@@ -61,8 +61,6 @@ def stream_pages_to_table(
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # Exactly-once layer 1 (O(1) metadata): within one checkpoint
         # lineage the source re-delivers a crashed micro-batch with the SAME
         # batch_id and content, so an already-committed id is a pure replay.
@@ -75,12 +73,16 @@ def stream_pages_to_table(
         # this batch's (bucket, url) envelope — O(audit) metadata work plus
         # a column-pruned scan of just the overlapping runs' files. A feed
         # of fresh urls (disjoint ranges, the steady state) anti-joins
-        # against NOTHING.
+        # against NOTHING. The same job counts the batch, so an empty
+        # micro-batch costs no separate emptiness job.
         stats = batch_df.agg(
+            F.count(F.lit(1)).alias("n"),
             F.min("url").alias("lo"),
             F.max("url").alias("hi"),
             F.collect_set(part_key(F.col("url"), table.n_buckets)).alias("buckets"),
         ).first()
+        if stats["n"] == 0:
+            return
         files = table.candidate_committed_files(
             set(stats["buckets"]), stats["lo"], stats["hi"]
         )

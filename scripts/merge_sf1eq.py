@@ -4,7 +4,8 @@ CORRECTNESS_sf1eq.json with a _meta summary (round-4 verdict item 2).
 The sf1-equivalent (10x) sweep runs as three parallel shards over the registry
 (scripts/check_oracle.py with CHECK_ORACLE_OUT=/tmp/sf1eq10_part{i}.json);
 this folds them into one driver-format file and summarizes pass /
-timeout / fail counts.
+timeout / fail counts and how many entries were carried forward
+(``"seeded": true``) instead of re-run.
 
 Usage: python scripts/merge_sf1eq.py [part files...]
 """
@@ -45,6 +46,9 @@ def main() -> None:
     fails = sorted(k for k, v in record.items()
                    if v.get("err") and "timeout" not in v["err"]
                    and v["err"] != "rows-only (no oracle)")
+    # entries check_oracle.py carried forward from an earlier receipt
+    # rather than re-ran (CHECK_ORACLE_MERGE tags them "seeded": true)
+    seeded = sorted(k for k, v in record.items() if v.get("seeded"))
     meta = {
         "sf_dir": "/tmp/sf_scaled_10x (scripts/make_scaled_sf.py 10 --all "
                   "over /root/testdata/sf0.1; sf1-equivalent, TPC-H row "
@@ -59,13 +63,15 @@ def main() -> None:
         "spark_side_timeouts": spark_timeouts,
         "n_fail_non_timeout": len(fails),
         "fail_queries": fails,
+        "n_seeded": len(seeded),
+        "seeded_queries": seeded,
     }
     record_out = {"_meta": meta, **dict(sorted(record.items()))}
     with open(OUT, "w") as f:
         json.dump(record_out, f, indent=1)
     print(json.dumps({k: meta[k] for k in
                       ("n_queries", "n_hash_green", "n_rows_only",
-                       "n_timeout", "n_fail_non_timeout")}))
+                       "n_timeout", "n_fail_non_timeout", "n_seeded")}))
     if fails:
         print("non-timeout fails:", fails)
 

@@ -21,6 +21,22 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def body_docs(spark, tmp_path):
+    """``body_docs(n)`` writes an sf dir whose ``documents`` table holds n
+    rows (doc_id i, text ``"body i"``) and returns its path; queries whose
+    fixtures key on doc_id alone read it."""
+
+    def make(n):
+        d = str(tmp_path)
+        spark.createDataFrame(
+            [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
+        ).write.parquet(os.path.join(d, "documents.parquet"))
+        return d
+
+    return make
+
+
 @pytest.fixture(scope="session")
 def corpus_dir(tmp_path_factory):
     """The golden corpus (same rows the checked-in goldens were built from)."""

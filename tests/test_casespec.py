@@ -1,8 +1,12 @@
-"""One spec, two engines: every doc_id-residue fixture in
-``ocr_spark.queries`` renders byte-identical text in Spark (``case_col``)
-and DuckDB (``case_sql``), row for row over the sf0.001 documents table."""
+"""One spec, two engines: every doc_id-residue fixture in the
+``ocr_spark.queries`` family modules renders byte-identical text in Spark
+(``case_col``) and DuckDB (``case_sql``), row for row over the sf0.001
+documents table."""
 
 from __future__ import annotations
+
+import importlib
+import pkgutil
 
 import duckdb
 from pyspark.sql import functions as F
@@ -24,11 +28,17 @@ _EDGE = (
 )
 
 
-def _specs() -> dict:
-    specs = {n: v for n, v in vars(queries).items()
-             if isinstance(v, tuple) and v
-             and all(isinstance(b, list) for b in v)}
-    specs["_EDGE"] = _EDGE
+# Module-level fixture specs across the family modules.
+N_FIXTURE_SPECS = 91
+
+
+def _fixture_specs() -> dict:
+    specs = {}
+    for info in pkgutil.iter_modules(queries.__path__):
+        mod = importlib.import_module(f"{queries.__name__}.{info.name}")
+        specs.update({n: v for n, v in vars(mod).items()
+                      if isinstance(v, tuple) and v
+                      and all(isinstance(b, list) for b in v)})
     return specs
 
 
@@ -40,8 +50,9 @@ def test_sql_str_escapes():
 
 
 def test_every_fixture_spec_renders_identically(spark):
-    specs = _specs()
-    assert len(specs) > 60, sorted(specs)
+    fixtures = _fixture_specs()
+    assert len(fixtures) == N_FIXTURE_SPECS, sorted(fixtures)
+    specs = {**fixtures, "_EDGE": _EDGE}
     k = F.col("doc_id")
     got = {
         r["doc_id"]: r

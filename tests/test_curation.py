@@ -615,7 +615,7 @@ def test_hll_distinct_accuracy_and_merge_property(spark):
 
 def test_zorder_locality(spark):
     """Morton keys: known interleavings and quadrant locality."""
-    from ocr_spark.queries import _zorder_expr
+    from ocr_spark.queries.extraction import _zorder_expr
     from pyspark.sql import functions as F
 
     df = spark.createDataFrame(

@@ -36,14 +36,14 @@ def test_duplicate_query_registration_raises():
     ``python -O``; a rejected registration leaves the registry as it was."""
     import pytest
 
-    from ocr_spark.queries import EAGER, ORACLE, QUERIES, query
+    from ocr_spark.queries import ORACLE, QUERIES, query
 
     name = next(iter(QUERIES))
-    before = (dict(QUERIES), dict(ORACLE), set(EAGER))
+    before = (dict(QUERIES), dict(ORACLE))
     with pytest.raises(ValueError,
                        match=f"duplicate query registration: {name}"):
-        query(name, "SELECT 1", eager=True)(lambda spark, sf_dir: None)
-    assert (QUERIES, ORACLE, EAGER) == before
+        query(name, "SELECT 1")(lambda spark, sf_dir: None)
+    assert (QUERIES, ORACLE) == before
 
 
 def test_no_per_row_python_udfs():

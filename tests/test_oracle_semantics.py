@@ -194,7 +194,8 @@ def test_anchor_gate_substring_decidable():
 
     from ocr_spark import config as C
     from ocr_spark.functions.fuzzy import token_sort_gate
-    from ocr_spark.queries import SYNTH_CORPUS_SQL, _classify_oracle
+    from ocr_spark.queries.extraction import _classify_oracle
+    from ocr_spark.synth import SYNTH_CORPUS_SQL
 
     sf = "/root/testdata/sf0.001"
     if not os.path.isdir(sf):

@@ -3,22 +3,12 @@ normalization."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestDelimiterSniff:
-    def test_all_formats(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_formats(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["delimiter_sniff"](spark, d).collect()}
         # CSV: 3 columns, 4 rows, digit-free header over digit rows
@@ -43,8 +33,8 @@ class TestDelimiterSniff:
 
 
 class TestUnitNormalize:
-    def test_canonical_bases(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 5)
+    def test_canonical_bases(self, spark, body_docs):
+        d = body_docs(5)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["unit_normalize"](spark, d).collect()}
         # '5 km' never half-matches as 'm'

@@ -3,22 +3,12 @@ survivorship golden-record merge."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestEntityCooccurrence:
-    def test_pairs_and_support(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 6)
+    def test_pairs_and_support(self, spark, body_docs):
+        d = body_docs(6)
         out = {(r["e1"], r["e2"]): r["support"]
                for r in QUERIES["entity_cooccurrence"](spark, d)
                .collect()}
@@ -35,10 +25,10 @@ class TestEntityCooccurrence:
 
 
 class TestSurvivorshipMerge:
-    def test_field_level_rules(self, spark, tmp_path):
+    def test_field_level_rules(self, spark, body_docs):
         # 150 docs -> each entity 0..49 has records from doc ids
         # e, e+50, e+100 (sources crm/web/import rotate by id % 3)
-        d = _docs(spark, tmp_path, 150)
+        d = body_docs(150)
         out = {r["entity"]: r.asDict()
                for r in QUERIES["survivorship_merge"](spark, d)
                .collect()}

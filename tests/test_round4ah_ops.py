@@ -6,17 +6,7 @@ cases)."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
-
-
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
 
 
 def _toks(doc_id: int) -> frozenset[str]:
@@ -41,13 +31,13 @@ def _brute_force(n: int) -> dict[tuple[int, int], tuple[int, int, int]]:
 
 
 class TestPrefixFilterJoin:
-    def test_exact_vs_bruteforce_semantics(self, spark, tmp_path):
+    def test_exact_vs_bruteforce_semantics(self, spark, body_docs):
         # 40 docs: one div-250 cluster, two dropped-token variants
         # (doc//20 % 4 = 0 or 1), seven noise tokens — every qualifying
         # pair (identical 10000bp, one-sided 7777bp, boundary 6000bp)
         # must be found with exact integer stats: the prefix filter's
         # no-false-negative guarantee checked pair-for-pair.
-        d = _docs(spark, tmp_path, 40)
+        d = body_docs(40)
         rows = QUERIES["prefix_filter_join"](spark, d).collect()
         got = {(r["d1"], r["d2"]): (r["inter"], r["union_sz"],
                                     r["jaccard_bp"]) for r in rows}
@@ -58,11 +48,11 @@ class TestPrefixFilterJoin:
         # different noise -> inter 6, union 10, exactly 6000 bp
         assert (0, 22) in expected and expected[(0, 22)] == (6, 10, 6000)
 
-    def test_multi_cluster_no_cross_pairs(self, spark, tmp_path):
+    def test_multi_cluster_no_cross_pairs(self, spark, body_docs):
         # 300 docs spans clusters 0 and 1 (div 250): no pair may cross
         # the cluster boundary (disjoint cluster tokens cap jaccard at
         # 1/15), and completeness must hold per cluster.
-        d = _docs(spark, tmp_path, 300)
+        d = body_docs(300)
         rows = QUERIES["prefix_filter_join"](spark, d).collect()
         got = {(r["d1"], r["d2"]) for r in rows}
         assert got == set(_brute_force(300))

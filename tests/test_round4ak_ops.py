@@ -8,19 +8,11 @@ import os
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestSyndicatedPaths:
-    def test_host_spread(self, spark, tmp_path):
+    def test_host_spread(self, spark, body_docs):
         # 100 docs: path = doc%23, host = doc%17. Path '/p/0' carries
         # docs 0, 23, 46, 69, 92 -> hosts 0, 6, 12, 1, 7 -> 5 hosts
-        d = _docs(spark, tmp_path, 100)
+        d = body_docs(100)
         out = {r["path"]: r.asDict()
                for r in QUERIES["syndicated_paths"](spark, d).collect()}
         assert out["/p/0"]["n_docs"] == 5

@@ -3,22 +3,12 @@ security-header audit."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestApacheLogParse:
-    def test_fields_and_malformed_lane(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_fields_and_malformed_lane(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["apache_log_parse"](spark, d).collect()}
         assert out[0]["ip"] == "10.0.0.0"
@@ -38,8 +28,8 @@ class TestApacheLogParse:
 
 
 class TestUaClassify:
-    def test_priority_order(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 5)
+    def test_priority_order(self, spark, body_docs):
+        d = body_docs(5)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["ua_classify"](spark, d).collect()}
         assert out[0]["ua_class"] == "desktop"
@@ -51,8 +41,8 @@ class TestUaClassify:
 
 
 class TestSecurityHeadersAudit:
-    def test_scoring(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_scoring(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["security_headers_audit"](spark, d)
                .collect()}

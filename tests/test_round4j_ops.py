@@ -3,23 +3,13 @@ email de-obfuscation, comment stripping, AMP variant detection."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestPaginationChains:
-    def test_heads_and_chain_membership(self, spark, tmp_path):
+    def test_heads_and_chain_membership(self, spark, body_docs):
         # 8 docs -> two 4-page articles a0 (p0..p3) and a1 (p0..p3)
-        d = _docs(spark, tmp_path, 8)
+        d = body_docs(8)
         out = {r["url"]: r.asDict()
                for r in QUERIES["pagination_chains"](spark, d).collect()}
         assert len(out) == 8
@@ -31,10 +21,10 @@ class TestPaginationChains:
                 assert row["chain_len"] == 4
                 assert row["is_head"] == (1 if p == 0 else 0)
 
-    def test_partial_article_is_own_chain(self, spark, tmp_path):
+    def test_partial_article_is_own_chain(self, spark, body_docs):
         # 5 docs: article a0 complete, a1 has only p0 (links to a
         # nonexistent p1 -> p0 both head and sole member)
-        d = _docs(spark, tmp_path, 5)
+        d = body_docs(5)
         out = {r["url"]: r.asDict()
                for r in QUERIES["pagination_chains"](spark, d).collect()}
         # the dangling next target p1 of a1 never exists as a page row
@@ -44,8 +34,8 @@ class TestPaginationChains:
 
 
 class TestEmailDeobfuscate:
-    def test_all_forms(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 5)
+    def test_all_forms(self, spark, body_docs):
+        d = body_docs(5)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["email_deobfuscate"](spark, d).collect()}
         assert out[0]["email"] == "alice0@example.com"
@@ -58,8 +48,8 @@ class TestEmailDeobfuscate:
 
 
 class TestHtmlCommentStrip:
-    def test_nongreedy_and_conditional(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_nongreedy_and_conditional(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["html_comment_strip"](spark, d).collect()}
         assert out[0]["n_comments"] == 1
@@ -74,8 +64,8 @@ class TestHtmlCommentStrip:
 
 
 class TestAmpVariantDetect:
-    def test_both_sides_of_the_pair(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_both_sides_of_the_pair(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["amp_variant_detect"](spark, d).collect()}
         # canonical page pointing at its AMP twin

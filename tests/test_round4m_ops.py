@@ -3,22 +3,12 @@ detection, and citation-density scoring."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestPaywallDetect:
-    def test_all_five_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 5)
+    def test_all_five_branches(self, spark, body_docs):
+        d = body_docs(5)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["paywall_detect"](spark, d).collect()}
         # 0: JSON-LD false + wall class + CTA -> all three signals
@@ -40,8 +30,8 @@ class TestPaywallDetect:
 
 
 class TestCodeDetect:
-    def test_gate_needs_density_and_keywords(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_gate_needs_density_and_keywords(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["code_detect"](spark, d).collect()}
         # 0: python snippet -> def/return/class keywords + paren density
@@ -61,8 +51,8 @@ class TestCodeDetect:
 
 
 class TestCitationDensity:
-    def test_counts_and_refs_cut(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_counts_and_refs_cut(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["citation_density"](spark, d).collect()}
         # 0: three markers in body ([1] x2, [2]); the References section's
@@ -81,8 +71,8 @@ class TestCitationDensity:
         # 3: [TODO] is not a numeric citation
         assert out[3]["n_citations"] == 0
 
-    def test_density_is_per_kword(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 1)
+    def test_density_is_per_kword(self, spark, body_docs):
+        d = body_docs(1)
         row = QUERIES["citation_density"](spark, d).collect()[0]
         # body of doc 0 has 10 words ('Fact one.[1] ... Tail 0' — markers
         # attach to words) and 3 citations -> 300 per kword

@@ -3,22 +3,12 @@ pairs, toxicity wordlist gate, and ad-density scoring."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestLicenseDetect:
-    def test_all_six_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 6)
+    def test_all_six_branches(self, spark, body_docs):
+        d = body_docs(6)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["license_detect"](spark, d).collect()}
         assert out[0]["cc_variant"] == "by"
@@ -39,8 +29,8 @@ class TestLicenseDetect:
 
 
 class TestImgAltPairs:
-    def test_pairs_and_filtering(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_pairs_and_filtering(self, spark, body_docs):
+        d = body_docs(4)
         rows = QUERIES["img_alt_pairs"](spark, d).collect()
         by_doc = {}
         for r in rows:
@@ -60,8 +50,8 @@ class TestImgAltPairs:
 
 
 class TestToxicityGate:
-    def test_word_boundaries_and_density(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_word_boundaries_and_density(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["toxicity_gate"](spark, d).collect()}
         # doc 0: hell + damn = 2 hits / 8 words -> 250 per kword, not gated
@@ -78,8 +68,8 @@ class TestToxicityGate:
 
 
 class TestAdDensity:
-    def test_signals_and_gate(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_signals_and_gate(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["ad_density"](spark, d).collect()}
         # doc 0: ad-banner class + ads- id -> 2 containers, heavy

@@ -3,22 +3,12 @@ Q&A / transcript detection, quote density, sentence segmentation."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestCodeQuality:
-    def test_all_five_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 5)
+    def test_all_five_branches(self, spark, body_docs):
+        d = body_docs(5)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["code_quality"](spark, d).collect()}
         # doc 0: clean short-lined code keeps
@@ -40,8 +30,8 @@ class TestCodeQuality:
 
 
 class TestMathDetect:
-    def test_branches_and_price_negative(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_branches_and_price_negative(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["math_detect"](spark, d).collect()}
         # doc 0: $...$ with ^ inside + \frac + \sum
@@ -60,8 +50,8 @@ class TestMathDetect:
 
 
 class TestQaPageDetect:
-    def test_pairing_and_rhetorical_negative(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_pairing_and_rhetorical_negative(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["qa_page_detect"](spark, d).collect()}
         # doc 0: two Q:/A: pairs, both question lines end with ?
@@ -83,8 +73,8 @@ class TestQaPageDetect:
 
 
 class TestTranscriptDetect:
-    def test_branches_and_clock_negative(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_branches_and_clock_negative(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["transcript_detect"](spark, d).collect()}
         # doc 0: SRT arrows + 4 cue timestamps
@@ -103,8 +93,8 @@ class TestTranscriptDetect:
 
 
 class TestQuoteDensity:
-    def test_attribution_gate(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_attribution_gate(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["quote_density"](spark, d).collect()}
         # doc 0: two attributed quotes -> dialog
@@ -126,8 +116,8 @@ class TestQuoteDensity:
 
 
 class TestSentenceStats:
-    def test_terminated_only_and_runon(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 3)
+    def test_terminated_only_and_runon(self, spark, body_docs):
+        d = body_docs(3)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["sentence_stats"](spark, d).collect()}
         # doc 0: five terminated sentences, ends with '.'

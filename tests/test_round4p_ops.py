@@ -4,22 +4,12 @@ stuffing."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestBylineExtract:
-    def test_all_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_branches(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["byline_extract"](spark, d).collect()}
         assert out[0]["byline"] == "Jane Smith"
@@ -36,8 +26,8 @@ class TestBylineExtract:
 
 
 class TestCommentSectionDetect:
-    def test_markers_and_reply_threshold(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_markers_and_reply_threshold(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["comment_section_detect"](spark, d)
                .collect()}
@@ -56,8 +46,8 @@ class TestCommentSectionDetect:
 
 
 class TestProductPageDetect:
-    def test_cta_co_occurrence(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_cta_co_occurrence(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["product_page_detect"](spark, d).collect()}
         # doc 0: price + 2 CTAs + SKU
@@ -78,8 +68,8 @@ class TestProductPageDetect:
 
 
 class TestPlaceholderDetect:
-    def test_lorem_and_phrase_threshold(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_lorem_and_phrase_threshold(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["placeholder_detect"](spark, d).collect()}
         assert out[0]["lorem_hits"] == 3
@@ -93,8 +83,8 @@ class TestPlaceholderDetect:
 
 
 class TestKeywordStuffing:
-    def test_share_gate(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 3)
+    def test_share_gate(self, spark, body_docs):
+        d = body_docs(3)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["keyword_stuffing"](spark, d).collect()}
         # doc 0: 'cheap' 4/11 words = 3636 bp -> stuffed
@@ -110,8 +100,8 @@ class TestKeywordStuffing:
 
 
 class TestDataDumpDetect:
-    def test_all_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_branches(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["data_dump_detect"](spark, d).collect()}
         # doc 0: server log — 2 IPs + 2 ISO timestamps

@@ -3,22 +3,12 @@ directory-listing detection and forum-thread parsing."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestRecipeDetect:
-    def test_all_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_branches(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["recipe_detect"](spark, d).collect()}
         assert out[0]["recipe_schema"] == 1
@@ -36,8 +26,8 @@ class TestRecipeDetect:
 
 
 class TestHowtoDetect:
-    def test_all_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_branches(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["howto_detect"](spark, d).collect()}
         assert out[0]["howto_schema"] == 1
@@ -50,8 +40,8 @@ class TestHowtoDetect:
 
 
 class TestReviewPageDetect:
-    def test_rating_shapes(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_rating_shapes(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["review_page_detect"](spark, d).collect()}
         assert out[0]["n_rating_phrases"] == 1
@@ -66,8 +56,8 @@ class TestReviewPageDetect:
 
 
 class TestLegalDocDetect:
-    def test_all_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_branches(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["legal_doc_detect"](spark, d).collect()}
         assert out[0]["n_legal_titles"] == 1
@@ -83,8 +73,8 @@ class TestLegalDocDetect:
 
 
 class TestDirectoryListingDetect:
-    def test_all_branches(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_all_branches(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["directory_listing_detect"](spark, d)
                .collect()}
@@ -100,8 +90,8 @@ class TestDirectoryListingDetect:
 
 
 class TestForumThreadParse:
-    def test_posts_authors_and_prose_negative(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_posts_authors_and_prose_negative(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["forum_thread_parse"](spark, d).collect()}
         # doc 0: 3 posts, 2 distinct authors

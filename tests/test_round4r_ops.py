@@ -9,17 +9,9 @@ import os
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestJsonlIngest:
-    def test_permissive_semantics(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_permissive_semantics(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["jsonl_ingest"](spark, d).collect()}
         # doc 0: fully valid
@@ -118,8 +110,8 @@ class TestBenfordAudit:
 
 
 class TestHtmlFormDetect:
-    def test_priority_typing(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_priority_typing(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["html_form_detect"](spark, d).collect()}
         assert out[0]["form_type"] == "login"

@@ -9,14 +9,6 @@ import os
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestIntervalMerge:
     def test_islands_and_umbrella(self, spark, tmp_path):
         d = str(tmp_path)
@@ -87,8 +79,8 @@ class TestAbExperimentChi2:
 
 
 class TestAcronymDefs:
-    def test_validation(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 4)
+    def test_validation(self, spark, body_docs):
+        d = body_docs(4)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["acronym_defs"](spark, d).collect()}
         assert out[0]["acronym"] == "CPU"

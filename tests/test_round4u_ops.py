@@ -10,21 +10,13 @@ import os
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
 class TestBrokenLinks:
-    def test_half_dead_by_construction(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 10)
+    def test_half_dead_by_construction(self, spark, body_docs):
+        d = body_docs(10)
         out = {r["doc"]: r.asDict()
                for r in QUERIES["broken_links"](spark, d).collect()}
         # doc 0 -> targets 0,1 both exist

@@ -3,23 +3,13 @@ rendezvous shard assignment."""
 
 from __future__ import annotations
 
-import os
-
 from ocr_spark.queries import QUERIES
 
 
-def _docs(spark, tmp_path, n):
-    d = str(tmp_path)
-    spark.createDataFrame(
-        [(i, f"body {i}") for i in range(n)], ["doc_id", "text"]
-    ).write.parquet(os.path.join(d, "documents.parquet"))
-    return d
-
-
 class TestCategoryRollup:
-    def test_subtree_sums_ternary_tree(self, spark, tmp_path):
+    def test_subtree_sums_ternary_tree(self, spark, body_docs):
         # 80 docs -> categories 0..39 get exactly 2 docs each
-        d = _docs(spark, tmp_path, 80)
+        d = body_docs(80)
         out = {r["category"]: r.asDict()
                for r in QUERIES["category_rollup"](spark, d).collect()}
         assert len(out) == 40
@@ -41,8 +31,8 @@ class TestCategoryRollup:
         # parent subtree always >= child subtree
         assert out[12]["subtree_cnt"] > out[39]["subtree_cnt"]
 
-    def test_depth_partitions_sum(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 40)
+    def test_depth_partitions_sum(self, spark, body_docs):
+        d = body_docs(40)
         out = {r["category"]: r.asDict()
                for r in QUERIES["category_rollup"](spark, d).collect()}
         # level sums: root's children 1,2,3 partition all non-root docs
@@ -51,8 +41,8 @@ class TestCategoryRollup:
 
 
 class TestRendezvousAssign:
-    def test_minimal_movement_property(self, spark, tmp_path):
-        d = _docs(spark, tmp_path, 1000)
+    def test_minimal_movement_property(self, spark, body_docs):
+        d = body_docs(1000)
         out = {r["node"]: r.asDict()
                for r in QUERIES["rendezvous_assign"](spark, d).collect()}
         assert set(out) == {0, 1, 2, 3, 4, 5}

@@ -137,7 +137,7 @@ def test_box_page_density_is_bounded(spark):
     # finding at 10x). Density must hold at every sf.
     from pyspark.sql import functions as F
 
-    from ocr_spark.queries import _boxes
+    from ocr_spark.queries.extraction import _boxes
 
     per_page = (_boxes(spark, "/root/testdata/sf0.01")
                 .groupBy("page").count().agg(F.max("count")).collect()[0][0])

@@ -53,6 +53,24 @@ def test_streaming_ingestion_commits_snapshots(spark, paged_corpus, tmp_path):
     assert table.read(spark).count() == total
 
 
+def test_empty_micro_batch_commits_nothing(spark, corpus_dir, tmp_path):
+    """A zero-row drop file still triggers a micro-batch; it must land no
+    snapshot."""
+    from ocr_spark.io.tableio import SnapshotTable
+    from ocr_spark.streaming.incremental import stream_pages_to_table
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    empty = pq.read_table(os.path.join(corpus_dir, "pages.parquet")).slice(0, 0)
+    pq.write_table(empty, str(feed / "drop-0.parquet"))
+    table = SnapshotTable(str(tmp_path / "out"), n_buckets=16)
+    q = stream_pages_to_table(spark, str(feed), table, str(tmp_path / "ckpt"),
+                              available_now=True)
+    assert q.awaitTermination(300)
+    assert [p["numInputRows"] for p in q.recentProgress] == [0]
+    assert table.current_snapshot()["snapshot_id"] == 0
+
+
 def test_windowed_event_counts_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
