@@ -287,13 +287,6 @@ RECOGNIZER_MIN_CONF = 0.60
 # Skew-defusing salt partition count multiplier (shuffle width = cores * this).
 SALT_PARTITIONS_PER_CORE = 2
 
-# Payload-join broadcast guard: broadcast the stage-B (OCR payload) side only
-# when its row count is known and at most this. OCR text rows run ~1 KB, so
-# 500k rows bounds the broadcast build at ~0.5 GB; anything larger goes
-# through a shuffled (or storage-bucketed) join instead of OOMing the driver
-# during broadcast build.
-PAYLOAD_BROADCAST_MAX_ROWS = 500_000
-
 # Conflicting-schema detection (text analog of spatial_validator.py:150-187
 # field-cluster spread): >= 2 DISTINCT core document ids on one page = two
 # documents of the same schema side by side -> hard reject. Patterns are

@@ -24,10 +24,8 @@ from ocr_spark import config as C
 # Tags whose entire subtree is dropped before block segmentation
 # (graft analog of script/style/comment noise removal, reference
 # preprocessing/corrections.py:166-189 noise removal stage).
-_DROP_SUBTREE_RE = re.compile(
-    r"<(script|style|svg|noscript)\b[^>]*>.*?</\1\s*>",
-    re.IGNORECASE | re.DOTALL,
-)
+_DROP_OPEN_RE = re.compile(r"<(script|style|svg|noscript)\b[^>]*>", re.IGNORECASE)
+_DROP_CLOSE_RE = re.compile(r"</(script|style|svg|noscript)\s*>", re.IGNORECASE)
 _COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
 
 # Block-level elements: entering or leaving one flushes the current text block.
@@ -97,6 +95,51 @@ def _flush(blocks: list[Block], cur: Block) -> Block:
     return Block()
 
 
+def _fold(name: str) -> str:
+    # The case-insensitive backreference equality of Python's re: per-char
+    # simple lowercase. It differs from str.lower() only on U+0130, the one
+    # such char that matches a letter of the drop-tag names.
+    return name.replace("\u0130", "i").lower()
+
+
+def _next_closer(s: str, key: str, pos: int) -> re.Match | None:
+    m = _DROP_CLOSE_RE.search(s, pos)
+    while m is not None and _fold(m.group(1)) != key:
+        m = _DROP_CLOSE_RE.search(s, m.end())
+    return m
+
+
+def _drop_subtrees(s: str) -> str:
+    r"""Replace each ``<name ...>...</name>`` subtree (name one of the drop
+    tags, any case) by one space — the output of
+    ``re.sub(r"<(script|style|svg|noscript)\b[^>]*>.*?</\1\s*>", " ", s,
+    flags=re.I | re.S)`` in linear time.
+
+    The regex rescans to the end of the page for every unclosed opener. Here
+    each name's next closer (or the fact that it has none) is cached: opener
+    ends never decrease, so a cached closer at or past the opener's end is
+    still the first one. On a miss the scan resumes at the opener's start + 1,
+    because an opener can sit inside another opener's ``[^>]*``."""
+    out: list[str] = []
+    last = pos = 0
+    closers: dict[str, re.Match | None] = {}
+    while (m := _DROP_OPEN_RE.search(s, pos)) is not None:
+        key = _fold(m.group(1))
+        if key not in closers or (closers[key] is not None
+                                  and closers[key].start() < m.end()):
+            closers[key] = _next_closer(s, key, m.end())
+        c = closers[key]
+        if c is None:
+            pos = m.start() + 1
+            continue
+        out += (s[last:m.start()], " ")
+        last = pos = c.end()
+    if not out:
+        return s
+    out.append(s[last:])
+    return "".join(out)
+
+
 def extract_page(html_bytes: bytes) -> PageExtract:
     """Extract main-content text and page statistics from raw html bytes."""
     if not html_bytes:
@@ -106,7 +149,7 @@ def extract_page(html_bytes: bytes) -> PageExtract:
     payload_ids = _PAYLOAD_RE.findall(raw)
 
     cleaned = _COMMENT_RE.sub(" ", raw)
-    cleaned = _DROP_SUBTREE_RE.sub(" ", cleaned)
+    cleaned = _drop_subtrees(cleaned)
 
     blocks: list[Block] = []
     cur = Block()

@@ -1,10 +1,11 @@
 """From-scratch fuzzy string scoring (rapidfuzz is not available here).
 
 Reimplements the scoring surface the reference uses from rapidfuzz
-(validation/anchors.py:54 `fuzz.partial_token_sort_ratio`): sort the tokens of
-both strings, then take the best local-alignment similarity of the shorter
-against the longer, scaled to 0-100. Pure deterministic Python — shared by the
-golden oracle (per document) and the Spark pandas UDF (per Arrow batch).
+(validation/anchors.py:54 `fuzz.partial_token_sort_ratio(...) >= threshold`):
+sort the tokens of both strings, then decide whether some same-length window
+of the longer matches the shorter with similarity >= threshold on a 0-100
+scale. Pure deterministic Python — shared by the golden oracle (per document)
+and the Spark pandas UDF (per Arrow batch).
 """
 
 from __future__ import annotations
@@ -14,33 +15,6 @@ from difflib import SequenceMatcher
 
 def _token_sort(s: str) -> str:
     return " ".join(sorted(s.split()))
-
-
-def partial_ratio(short: str, long: str) -> float:
-    """Best SequenceMatcher ratio of `short` against any same-length window of
-    `long`, scaled to 0-100. Windows advance by whole characters."""
-    if not short or not long:
-        return 0.0
-    if len(short) > len(long):
-        short, long = long, short
-    n = len(short)
-    best = 0.0
-    sm = SequenceMatcher(a=short, autojunk=False)
-    # Slide over candidate windows anchored at block matches to stay O(n·m/n).
-    step = max(1, n // 4)
-    for start in range(0, len(long) - n + 1, step):
-        sm.set_seq2(long[start : start + n])
-        r = sm.ratio()
-        if r > best:
-            best = r
-            if best == 1.0:
-                break
-    return best * 100.0
-
-
-def partial_token_sort_ratio(s1: str, s2: str) -> float:
-    """Token-sorted partial ratio, 0-100."""
-    return partial_ratio(_token_sort(s1.lower()), _token_sort(s2.lower()))
 
 
 _ANCHOR_HIST_CACHE: dict[str, tuple] = {}
@@ -128,9 +102,9 @@ def partial_ratio_at_least(short: str, long: str, threshold: float) -> bool:
 
 
 def token_sort_gate(anchor: str, token_sorted_text: str, threshold: float) -> bool:
-    """``partial_token_sort_ratio(anchor, text) >= threshold`` given the
-    text's token-sorted form precomputed once per document (the sort is the
-    other per-anchor cost worth hoisting)."""
+    """rapidfuzz's ``partial_token_sort_ratio(anchor, text) >= threshold``
+    given the text's token-sorted form precomputed once per document (the
+    sort is the other per-anchor cost worth hoisting)."""
     return partial_ratio_at_least(_token_sort(anchor.lower()), token_sorted_text, threshold)
 
 

@@ -49,11 +49,9 @@ def _anchor_score_udf(text: pd.Series, doc_type: pd.Series) -> pd.Series:
             continue
         low = t.lower()
         # token-sort + per-char window histograms once per doc; per-anchor
-        # matching uses the thresholded gate over that shared state. NOTE:
-        # the gate checks EVERY window offset (an intentional behavior
-        # change from the older partial_ratio, which strode windows by
-        # n//4 — ~0.2% of random inputs flip, and all-offsets is closer to
-        # rapidfuzz). Upper-bound pruning: fuzzy.WindowGate.
+        # matching uses the thresholded gate over that shared state. The
+        # gate checks every window offset, which is closer to rapidfuzz.
+        # Upper-bound pruning: fuzzy.WindowGate.
         gate = WindowGate(" ".join(sorted(low.split())))
         sa = _SORTED_ANCHORS[dt]
         found_req = sum(

@@ -172,32 +172,17 @@ class SnapshotTable:
 
     # -- commit path ----------------------------------------------------------
 
-    def filter_uncommitted(self, df: DataFrame, url_col: str = "url") -> DataFrame:
-        """Idempotent-resume anti-join: drop rows in already-committed buckets.
-
-        The committed side is a tiny in-manifest list, so it arrives as a
-        broadcast literal `isin` — no shuffle, prunes before any compute."""
-        df = df.withColumn("part_key", part_key(F.col(url_col), self.n_buckets))
-        done = self.committed_partitions()
-        if done:
-            df = df.filter(~F.col("part_key").isin(done))
-        return df
-
-    def commit(
-        self,
-        df: DataFrame,
-        text_col: str = "extracted_text",
-        url_col: str = "url",
-        metrics: dict | None = None,
-    ) -> list[dict]:
-        """Write df (must carry part_key) as a new snapshot; returns the new
-        audit rows. Data lands in an immutable run directory first; the
-        manifest pointer flips last (atomic rename)."""
+    def commit(self, df: DataFrame, metrics: dict | None = None) -> list[dict]:
+        """Write df (url, extracted_text, ...) as a new snapshot; returns the
+        table's audit rows after the commit. ``part_key`` is computed from
+        the table's own bucket count, replacing any column of that name.
+        Data lands in an immutable run directory first; the manifest pointer
+        flips last (atomic rename)."""
         run_id = uuid.uuid4().hex[:12]
         rel_run_dir = os.path.join("data", f"run-{run_id}")
         run_dir = os.path.join(self.path, rel_run_dir)
 
-        df = df.persist()
+        df = df.withColumn("part_key", part_key(F.col("url"), self.n_buckets)).persist()
         try:
             df.write.mode("overwrite").parquet(run_dir)
 
@@ -206,10 +191,10 @@ class SnapshotTable:
             audit_df = (
                 df.groupBy("part_key")
                 .agg(
-                    F.min(url_col).alias("url_min"),
-                    F.max(url_col).alias("url_max"),
+                    F.min("url").alias("url_min"),
+                    F.max("url").alias("url_max"),
                     F.count(F.lit(1)).alias("doc_count"),
-                    content_digest(url_col, text_col).alias("content_sha256"),
+                    content_digest("url", "extracted_text").alias("content_sha256"),
                 )
                 .collect()
             )
@@ -273,25 +258,21 @@ def run_and_commit(
     from ocr_spark.pipeline import run_pipeline
 
     t0 = time.time()
+    before = out_table.current_snapshot()["audit"]
+    done = {a["partition_id"] for a in before}
     pages = spark.read.parquet(pages_path)
-    pages = out_table.filter_uncommitted(pages)
-    if limit_partitions is not None:
-        remaining = [
-            p for p in range(out_table.n_buckets)
-            if p not in set(out_table.committed_partitions())
-        ][:limit_partitions]
-        pages = pages.filter(F.col("part_key").isin(remaining))
-    result = run_pipeline(spark, pages_path=None, pages_df=pages, payloads_path=payloads_path)
-    result = result.withColumn("part_key", part_key(F.col("url"), out_table.n_buckets))
-    n_before = len(out_table.committed_partitions())
-    docs_before = sum(a["doc_count"] for a in out_table.audit_rows())
-    audit = out_table.commit(result, metrics={"elapsed_sec": time.time() - t0})
+    if done or limit_partitions is not None:
+        # Idempotent resume: keep only rows in uncommitted buckets. The
+        # bucket list is a tiny in-manifest literal, so this is an `isin`
+        # filter that prunes before any compute — no shuffle.
+        todo = [p for p in range(out_table.n_buckets) if p not in done][:limit_partitions]
+        pages = pages.filter(part_key(F.col("url"), out_table.n_buckets).isin(todo))
+    audit = out_table.commit(run_pipeline(spark, pages, payloads_path),
+                             metrics={"elapsed_sec": time.time() - t0})
     return {
         "elapsed_sec": time.time() - t0,
-        "partitions_before": n_before,
-        "partitions_after": len(out_table.committed_partitions()),
-        # docs committed BY THIS RUN (0 on an idempotent no-op resume) —
-        # audit[-1].run_id belongs to the last run that wrote rows, which
-        # is a PRIOR run when this one had nothing left to do.
-        "docs_committed": sum(a["doc_count"] for a in audit) - docs_before,
+        "partitions_before": len(done),
+        "partitions_after": len({a["partition_id"] for a in audit}),
+        # docs committed BY THIS RUN (0 on an idempotent no-op resume)
+        "docs_committed": sum(a["doc_count"] for a in audit[len(before):]),
     }

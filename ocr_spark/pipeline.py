@@ -87,65 +87,24 @@ def merged_fields(doc_type, dom_text, full_text, has_ocr,
     return out
 
 
-def _estimate_rows(path: str | None) -> int | None:
-    """Cheap row-count estimate from parquet footers (no Spark job). None
-    when the source isn't a readable local dataset — callers treat unknown
-    as too-big-to-broadcast."""
-    if path is None:
-        return None
-    try:
-        import pyarrow.dataset as ds
-
-        return ds.dataset(path, format="parquet").count_rows()
-    except Exception:  # noqa: BLE001 — remote/odd layouts: size unknown
-        return None
-
-
-def _bucketize(spark: SparkSession, a: DataFrame, b: DataFrame,
-               location: str, n_buckets: int) -> tuple[DataFrame, DataFrame]:
-    """Land both join sides as url-bucketed tables (the Iceberg
-    ``bucket(N, url)`` partition-transform analog on plain parquet) and read
-    them back: the url join then runs bucket-local with ZERO Exchange —
-    the default strategy at 100 TB, where neither side broadcasts and a
-    corpus-wide shuffle of extracted text is the job's dominant cost.
-
-    Table names are derived from the bucket location, so two concurrent
-    pipelines sharing a metastore cannot clobber each other's bucketed
-    tables mid-join (they would with fixed names)."""
-    import hashlib
-
-    run_id = hashlib.sha256(location.encode("utf-8")).hexdigest()[:12]
-    out = []
-    for stage, df in (("a", a), ("b", b)):
-        name = f"graft_stage_{stage}_bucketed_{run_id}"
-        (df.write.bucketBy(n_buckets, "url").sortBy("url")
-         .option("path", f"{location}/{name}")
-         .mode("overwrite").format("parquet").saveAsTable(name))
-        out.append(spark.table(name))
-    return out[0], out[1]
+def _read(spark: SparkSession, src: str | DataFrame) -> DataFrame:
+    return spark.read.parquet(src) if isinstance(src, str) else src
 
 
 def run_pipeline(
     spark: SparkSession,
-    pages_path: str,
-    payloads_path: str | None = None,
+    pages: str | DataFrame,
+    payloads: str | DataFrame | None = None,
     salt_partitions: int | None = None,
-    pages_df: DataFrame | None = None,
-    payloads_df: DataFrame | None = None,
-    payload_join: str = "auto",
-    payload_count: int | None = None,
-    bucket_location: str | None = None,
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Compose the full extraction plan; lazy — caller writes or collects.
 
-    payload_join: "auto" broadcasts the stage-B side only when its size is
-    KNOWN (payload_count or parquet-footer estimate) and within
-    config.PAYLOAD_BROADCAST_MAX_ROWS, else falls back to a shuffled join
-    (AQE handles skew/strategy at runtime); "broadcast"/"shuffle" force a
-    strategy; "bucketed" lands both sides as url-bucketed tables
-    (bucket_location required) and joins them Exchange-free."""
-    pages = pages_df if pages_df is not None else spark.read.parquet(pages_path)
+    pages / payloads: a parquet path or a DataFrame each; without payloads
+    every page has no recognized text. The payload join is a plain left
+    join on url: Spark broadcasts a small payload side from its scan
+    estimate, and AQE can still turn a shuffled join into a broadcast once
+    it sees the recognized-text bytes at runtime."""
+    pages = _read(spark, pages)
     # Skew defuse: crawl files cluster by host; hash(url) spreads hot hosts
     # uniformly before the compute-heavy Arrow stage (north rule). The count
     # is EXPLICIT (cores x SALT_PARTITIONS_PER_CORE): letting AQE size this
@@ -158,42 +117,13 @@ def run_pipeline(
 
     a = stage_a(pages)
 
-    if payloads_path or payloads_df is not None:
-        payloads = payloads_df if payloads_df is not None else spark.read.parquet(payloads_path)
+    if payloads is not None:
         # Same salt treatment as pages: payload files are small in BYTES but
         # each row is expensive to recognize, so a byte-sized scan split
         # would run stage B on a handful of tasks. Spread by hash(url)
         # explicitly (north rule: both Arrow stages get skew-defused input).
-        payloads = payloads.repartition(salt_partitions, F.xxhash64("url"))
-        b = stage_b(payloads)
-        # Payloads are the minority side (~20% of pages carry one). The
-        # broadcast hint avoids re-shuffling + sorting the stage-A output on
-        # url — but ONLY under a size guard: blind-broadcasting a payload
-        # side that turns out to be terabytes OOMs the driver during
-        # broadcast build before AQE can demote the hint.
-        strategy = payload_join
-        if strategy == "auto":
-            n = payload_count if payload_count is not None else _estimate_rows(payloads_path)
-            strategy = (
-                "broadcast"
-                if n is not None and n <= C.PAYLOAD_BROADCAST_MAX_ROWS
-                else "shuffle"
-            )
-        if strategy == "broadcast":
-            a = a.join(F.broadcast(b), "url", "left")
-        elif strategy == "bucketed":
-            if bucket_location is None:
-                raise ValueError("payload_join='bucketed' requires bucket_location")
-            a, b = _bucketize(spark, a, b, bucket_location, n_buckets)
-            # merge hint: keep the planner on SMJ so the bucketed scans join
-            # with zero Exchange instead of re-broadcasting a small side.
-            a = a.join(b.hint("merge"), "url", "left")
-        else:
-            # shuffled sort-merge join; the merge hint stops the static
-            # planner from re-introducing a broadcast off its (unreliable —
-            # the side is behind an Arrow stage) size estimate. AQE still
-            # splits skewed url partitions at runtime.
-            a = a.join(b.hint("merge"), "url", "left")
+        payloads = _read(spark, payloads).repartition(salt_partitions, F.xxhash64("url"))
+        a = a.join(stage_b(payloads), "url", "left")
     else:
         a = a.withColumn("ocr_text", F.lit(None).cast("string")).withColumn(
             "ocr_conf", F.lit(None).cast("double")

@@ -1744,9 +1744,7 @@ def q_golden_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         with open(marker, "w") as f:
             f.write("ok")
     out = run_pipeline(
-        spark,
-        pages_path=os.path.join(d, "pages.parquet"),
-        payloads_path=os.path.join(d, "payloads.parquet"),
+        spark, os.path.join(d, "pages.parquet"), os.path.join(d, "payloads.parquet")
     )
     return out.select(
         "url",

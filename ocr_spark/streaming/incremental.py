@@ -97,9 +97,8 @@ def stream_pages_to_table(
             fresh = batch_df
         if fresh.isEmpty():
             return
-        result = run_pipeline(spark, pages_path=None, pages_df=fresh)
-        result = result.withColumn("part_key", part_key(F.col("url"), table.n_buckets))
-        table.commit(result, metrics={"batch_id": batch_id, "checkpoint": checkpoint_dir})
+        table.commit(run_pipeline(spark, fresh),
+                     metrics={"batch_id": batch_id, "checkpoint": checkpoint_dir})
 
     writer = stream.writeStream.foreachBatch(_process).option(
         "checkpointLocation", checkpoint_dir

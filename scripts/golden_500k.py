@@ -1,6 +1,6 @@
 """Flagship composition at 100x: the FULL extraction pipeline (DOM strip +
-OCR decode + span merge) over a 500k-page corpus with the bucketed
-zero-Exchange payload join, verified byte-identical per url against the
+OCR decode + span merge) over a 500k-page corpus, timed end to end and
+verified byte-identical per url against the
 pure-Python reference oracle over ALL 500k pages (round-4 verdict item 7:
 golden_pipeline was driver-green at 300 pages and benched at 24k; this
 proves the composition — not just its parts — at scale).
@@ -8,12 +8,10 @@ proves the composition — not just its parts — at scale).
 Protocol:
 1. corpus: fixtures/corpus.write_corpus(n) — deterministic per index, the
    same generator the 300-page goldens pin.
-2. layout: both sides landed once as url-bucketed tables (standing table
-   format, like an Iceberg bucket(N, url) spec); bucketize time reported
-   separately, not in the throughput window.
-3. timed: run_pipeline(payload_join="bucketed") forced to a noop sink,
-   best of 3 (same best-of discipline as bench.py).
-4. identity: pipeline (url, sha256(NFC(text))) for all 500k rows compared
+2. timed: run_pipeline over the corpus parquet forced to a noop sink, best
+   of 3 (same best-of discipline as bench.py); every run does the whole
+   job — scan, salt, stage A, stage B, payload join, Catalyst block.
+3. identity: pipeline (url, sha256(NFC(text))) for all 500k rows compared
    against the oracle shas computed by a 30-process pool over page
    indices — full coverage, not a sample.
 
@@ -26,7 +24,6 @@ import hashlib
 import json
 import multiprocessing as mp
 import os
-import shutil
 import sys
 import time
 import unicodedata
@@ -81,12 +78,7 @@ def main() -> None:
     spark.conf.set("spark.sql.files.maxPartitionBytes",
                    str(max(1 << 20, size // (cores * 2))))
 
-    bucket_loc = f"/tmp/ocr_spark_golden500k_buckets_{N_PAGES}"
-    shutil.rmtree(bucket_loc, ignore_errors=True)
-    t0 = time.monotonic()
-    df = run_pipeline(spark, pages, payloads, payload_join="bucketed",
-                      bucket_location=bucket_loc)
-    bucketize_s = time.monotonic() - t0  # layout cost: paid once at ingest
+    df = run_pipeline(spark, pages, payloads)
 
     # warm-up (python workers + codegen), then best-of-3 timed forces
     _force(run_pipeline(spark, os.path.join(corpus_path(2000), "pages.parquet"),
@@ -126,9 +118,7 @@ def main() -> None:
     matches = sum(1 for u, sha in expected.items() if got.get(u) == sha)
     record = {
         "n_pages": N_PAGES,
-        "payload_join": "bucketed",
         "corpus_gen_s": round(gen_s, 1),
-        "bucketize_s_one_off_layout": round(bucketize_s, 2),
         "pipeline_runs_s": runs,
         "pipeline_best_s": secs,
         "docs_per_sec": round(N_PAGES / secs, 1),

@@ -23,8 +23,8 @@ def _hash(text: str) -> str:
 def pipeline_rows(spark, corpus_dir):
     df = run_pipeline(
         spark,
-        pages_path=f"{corpus_dir}/pages.parquet",
-        payloads_path=f"{corpus_dir}/payloads.parquet",
+        f"{corpus_dir}/pages.parquet",
+        f"{corpus_dir}/payloads.parquet",
     )
     return {r["url"]: r for r in df.collect()}
 
@@ -106,8 +106,8 @@ def test_salt_partition_invariance(spark, corpus_dir, goldens):
     meaningful."""
     df = run_pipeline(
         spark,
-        pages_path=f"{corpus_dir}/pages.parquet",
-        payloads_path=f"{corpus_dir}/payloads.parquet",
+        f"{corpus_dir}/pages.parquet",
+        f"{corpus_dir}/payloads.parquet",
         salt_partitions=3,
     )
     for r in df.select("url", "extracted_text").collect():

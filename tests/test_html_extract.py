@@ -4,7 +4,11 @@ strategy, tests/test_quality.py:55-133)."""
 
 from __future__ import annotations
 
-from ocr_spark.extraction.html_extract import extract_page
+import random
+import re
+import time
+
+from ocr_spark.extraction.html_extract import _drop_subtrees, extract_page
 from ocr_spark.fixtures.corpus import make_page
 
 
@@ -92,3 +96,50 @@ def test_determinism_repeated_calls():
     assert a.text == b.text
     assert a.blur_raw == b.blur_raw
     assert a.glare_raw == b.glare_raw
+
+
+# The subtree-drop regex stage A used before _drop_subtrees; kept here as the
+# reference its output must equal on every input.
+_DROP_SUBTREE_REF = re.compile(
+    r"<(script|style|svg|noscript)\b[^>]*>.*?</\1\s*>", re.IGNORECASE | re.DOTALL
+)
+
+
+def test_drop_subtrees_equals_reference_on_fixture_pages():
+    for i in range(2000):
+        raw = make_page(i)["html"].decode("utf-8", errors="replace")
+        assert _drop_subtrees(raw) == _DROP_SUBTREE_REF.sub(" ", raw), f"doc {i}"
+
+
+def test_drop_subtrees_equals_reference_on_tag_soup():
+    # unclosed and mixed-case tags, closers with trailing space or newline,
+    # names that only share a prefix, an opener inside another opener's
+    # attributes, and the non-ASCII chars re.IGNORECASE folds onto the names
+    parts = [
+        "<script>", "<SCRIPT a=1>", "<Script", "</script>", "</script >",
+        "</SCRIPT\n>", "<scripts>", "<script_>", "<scripté>", "</ script>",
+        "<style <script>", "<style>", "</style>", "<style/>", "<svg>", "<sVg x>",
+        "</sVG>", "<noscript>", "</noscript >", "<ſcript>", "</ſcript>",
+        "<scrİpt>", "</scrİpt>", "</script", "<p>", "</p>", "<", ">", " ",
+        "body text",
+    ]
+    rng = random.Random(7)
+    for _ in range(10_000):
+        s = "".join(rng.choice(parts) for _ in range(rng.randint(0, 24)))
+        assert _drop_subtrees(s) == _DROP_SUBTREE_REF.sub(" ", s), repr(s)
+
+
+def test_drop_subtrees_linear_on_unclosed_openers():
+    # 4,000 unclosed <script> tags: ~1 s through the reference regex (each
+    # opener rescans to the end of the page), a few ms here; the bound
+    # leaves room for a loaded machine
+    probe = "<script>" * 4000 + "tail"
+    best = min(_timed(_drop_subtrees, probe) for _ in range(3))
+    assert _drop_subtrees(probe) == probe  # no closer: the reference keeps it all
+    assert best < 0.05, best
+
+
+def _timed(fn, arg) -> float:
+    t0 = time.perf_counter()
+    fn(arg)
+    return time.perf_counter() - t0

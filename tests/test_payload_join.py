@@ -1,75 +1,34 @@
-"""Payload-join strategy guard: the stage-B broadcast hint must be gated on
-a known size (blind broadcast of a huge payload side OOMs at scale), and the
-bucketed strategy must join with zero Exchange."""
+"""Payload join: stage B joins stage A with a plain left join on url, so the
+strategy is Spark's planner's choice — and the outputs must not depend on it."""
 
 from __future__ import annotations
 
 import os
 
-import pytest
 
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="module")
-def pages_and_payloads(spark, corpus_dir):
-    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
-    payloads = spark.read.parquet(os.path.join(corpus_dir, "payloads.parquet"))
-    return pages, payloads
-
-
-def test_small_known_payload_broadcasts(spark, pages_and_payloads):
+def test_planner_join_strategy_does_not_change_outputs(spark, corpus_dir):
     from ocr_spark.pipeline import run_pipeline
 
-    pages, payloads = pages_and_payloads
-    df = run_pipeline(spark, pages_path=None, pages_df=pages,
-                      payloads_df=payloads, payload_count=100)
-    assert "BroadcastExchange" in _plan(df)
+    pages = os.path.join(corpus_dir, "pages.parquet")
+    payloads = os.path.join(corpus_dir, "payloads.parquet")
+    cols = ("extracted_text", "decision", "final_score")
 
+    def run() -> tuple[str, dict]:
+        df = run_pipeline(spark, pages, payloads)
+        rows = {r["url"]: tuple(r[c] for c in cols) for r in df.collect()}
+        return df._jdf.queryExecution().executedPlan().toString(), rows
 
-def test_large_or_unknown_payload_never_broadcasts(spark, pages_and_payloads):
-    from ocr_spark import config as C
-    from ocr_spark.pipeline import run_pipeline
+    # the payload side is small: the planner broadcasts it with no hint
+    plan, broadcast_rows = run()
+    assert "BroadcastHashJoin" in plan, plan
 
-    pages, payloads = pages_and_payloads
-    over = C.PAYLOAD_BROADCAST_MAX_ROWS + 1
-    df = run_pipeline(spark, pages_path=None, pages_df=pages,
-                      payloads_df=payloads, payload_count=over)
-    assert "BroadcastExchange" not in _plan(df)
-
-    # size unknown (payloads_df with no count, no path) -> same conservative path
-    df2 = run_pipeline(spark, pages_path=None, pages_df=pages, payloads_df=payloads)
-    assert "BroadcastExchange" not in _plan(df2)
-
-
-def test_path_estimate_from_parquet_footers(corpus_dir):
-    from ocr_spark.pipeline import _estimate_rows
-
-    n = _estimate_rows(os.path.join(corpus_dir, "payloads.parquet"))
-    assert n is not None and n > 0
-    assert _estimate_rows(None) is None
-    assert _estimate_rows("/nonexistent/path.parquet") is None
-
-
-def test_bucketed_join_zero_exchange_and_identical_output(
-    spark, pages_and_payloads, tmp_path
-):
-    from ocr_spark.pipeline import run_pipeline
-
-    pages, payloads = pages_and_payloads
-    ref = run_pipeline(spark, pages_path=None, pages_df=pages,
-                       payloads_df=payloads, payload_join="broadcast")
-    bk = run_pipeline(spark, pages_path=None, pages_df=pages,
-                      payloads_df=payloads, payload_join="bucketed",
-                      bucket_location=str(tmp_path), n_buckets=8)
-    plan = _plan(bk)
-    assert "BroadcastExchange" not in plan
-    # the join consumes the two bucketed scans directly — no shuffle at all
-    # between storage and output in this plan
-    assert "Exchange" not in plan, plan
-    cols = ["url", "extracted_text", "decision", "final_score"]
-    a = {r["url"]: tuple(r[c] for c in cols) for r in ref.select(cols).collect()}
-    b = {r["url"]: tuple(r[c] for c in cols) for r in bk.select(cols).collect()}
-    assert a == b
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan, shuffled_rows = run()
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert shuffled_rows == broadcast_rows

@@ -102,16 +102,14 @@ def test_partial_and_full_runs_identical_content(spark, paths):
 def test_snapshot_time_travel(spark, tmp_path):
     """Iceberg VERSION-AS-OF analog: every committed snapshot stays readable
     with exactly the rows it referenced."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.io.tableio import SnapshotTable, part_key
+    from ocr_spark.io.tableio import SnapshotTable
 
     table = SnapshotTable(str(tmp_path / "tt"), n_buckets=8)
     for tag, n in (("a", 5), ("b", 7)):
         df = spark.createDataFrame(
             [(f"u-{tag}-{i}", f"text {tag}{i}") for i in range(n)],
             "url string, extracted_text string",
-        ).withColumn("part_key", part_key(F.col("url"), 8))
+        )
         table.commit(df)
     assert table.current_snapshot()["snapshot_id"] == 2
     assert table.read_at(spark, 1).count() == 5

@@ -3,7 +3,7 @@ the scale claims in their docstrings (in-row pair emission, zero-join
 explodes, single-shuffle windows, broadcast-only rings) are asserted
 against the EXECUTED plan, so a refactor that silently reintroduces a
 corpus self-join or an extra shuffle fails CI — the same discipline as
-tests/test_payload_join.py."""
+the payload-join plan test."""
 
 from __future__ import annotations
 

@@ -36,8 +36,8 @@ def test_salt_balances_host_skew(spark, skewed_pages):
 def test_pipeline_output_invariant_to_partitioning(spark, skewed_pages):
     from ocr_spark.pipeline import run_pipeline
 
-    a = run_pipeline(spark, pages_path=None, pages_df=skewed_pages, salt_partitions=4)
-    b = run_pipeline(spark, pages_path=None, pages_df=skewed_pages, salt_partitions=16)
+    a = run_pipeline(spark, skewed_pages, salt_partitions=4)
+    b = run_pipeline(spark, skewed_pages, salt_partitions=16)
     ra = {r["url"]: (r["extracted_text"], r["decision"], r["final_score"])
           for r in a.select("url", "extracted_text", "decision", "final_score").collect()}
     rb = {r["url"]: (r["extracted_text"], r["decision"], r["final_score"])

@@ -115,9 +115,7 @@ def test_windowed_event_counts_matches_batch(spark, tmp_path):
 def test_committed_side_scan_is_o_audit(spark, tmp_path):
     """Bounded resume: the streaming anti-join's committed side must be
     pruned to overlapping runs via audit metadata, not a full table scan."""
-    from pyspark.sql import functions as F
-
-    from ocr_spark.io.tableio import SnapshotTable, part_key
+    from ocr_spark.io.tableio import SnapshotTable
 
     table = SnapshotTable(str(tmp_path / "t"), n_buckets=16)
 
@@ -125,7 +123,7 @@ def test_committed_side_scan_is_o_audit(spark, tmp_path):
         df = spark.createDataFrame(
             [(f"{prefix}{i:04d}", f"text {prefix}{i}") for i in range(50)],
             "url string, extracted_text string",
-        ).withColumn("part_key", part_key(F.col("url"), 16))
+        )
         table.commit(df, metrics={"batch_id": 0, "checkpoint": f"ck-{prefix}"})
 
     commit_urls("https://a.example/")   # run 1: urls a*
@@ -155,13 +153,10 @@ def test_committed_side_scan_is_o_audit(spark, tmp_path):
 
 
 def test_batch_id_replay_guard_is_checkpoint_scoped(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from ocr_spark.io.tableio import SnapshotTable, part_key
+    from ocr_spark.io.tableio import SnapshotTable
 
     table = SnapshotTable(str(tmp_path / "t2"), n_buckets=8)
     df = spark.createDataFrame([("u1", "t")], "url string, extracted_text string")
-    df = df.withColumn("part_key", part_key(F.col("url"), 8))
     table.commit(df, metrics={"batch_id": 3, "checkpoint": "ckA"})
     assert table.last_batch_id("ckA") == 3
     assert table.last_batch_id("ckB") is None  # fresh lineage falls through
