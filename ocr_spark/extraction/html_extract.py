@@ -26,7 +26,6 @@ from ocr_spark import config as C
 # preprocessing/corrections.py:166-189 noise removal stage).
 _DROP_OPEN_RE = re.compile(r"<(script|style|svg|noscript)\b[^>]*>", re.IGNORECASE)
 _DROP_CLOSE_RE = re.compile(r"</(script|style|svg|noscript)\s*>", re.IGNORECASE)
-_COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
 
 # Block-level elements: entering or leaving one flushes the current text block.
 _BLOCK_TAGS = frozenset(
@@ -140,6 +139,27 @@ def _drop_subtrees(s: str) -> str:
     return "".join(out)
 
 
+def _strip_comments(s: str) -> str:
+    """Replace each ``<!--...-->`` comment by one space — the output of
+    ``re.sub(r"<!--.*?-->", " ", s, flags=re.S)`` in linear time.
+
+    The regex rescans to the end of the page for every unclosed ``<!--``.
+    Here a search for ``-->`` that finds none ends the scan: no later opener
+    can be closed either."""
+    out: list[str] = []
+    last = 0
+    while (i := s.find("<!--", last)) != -1:
+        j = s.find("-->", i + 4)
+        if j == -1:
+            break
+        out += (s[last:i], " ")
+        last = j + 3
+    if not out:
+        return s
+    out.append(s[last:])
+    return "".join(out)
+
+
 def extract_page(html_bytes: bytes) -> PageExtract:
     """Extract main-content text and page statistics from raw html bytes."""
     if not html_bytes:
@@ -148,7 +168,7 @@ def extract_page(html_bytes: bytes) -> PageExtract:
     raw = html_bytes.decode("utf-8", errors="replace")
     payload_ids = _PAYLOAD_RE.findall(raw)
 
-    cleaned = _COMMENT_RE.sub(" ", raw)
+    cleaned = _strip_comments(raw)
     cleaned = _drop_subtrees(cleaned)
 
     blocks: list[Block] = []

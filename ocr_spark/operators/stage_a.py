@@ -1,11 +1,8 @@
 """Stage A operator: batched DOM parsing + main-content extraction via
 mapInArrow (graft analog of the reference's segmentation stage, SURVEY.md
-§2.9 G1-G8).
-
-One Python<->JVM crossing for the whole stage; the html column is consumed
-here and NOT emitted — downstream sees only text + metrics columns, so
-Catalyst never ships page bytes past this point (column-pruning discipline,
-SURVEY.md §4.2)."""
+§2.9 G1-G8). The job parses inside its one document stage
+(``operators.document``); this stage is the per-layer ledger's DOM-parse
+cut and the stage A input of the differential tests' Catalyst reference."""
 
 from __future__ import annotations
 

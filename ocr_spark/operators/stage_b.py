@@ -1,8 +1,8 @@
 """Stage B operator: batched character recognition via mapInArrow (rebuild of
-the reference's OCR stage, SURVEY.md §2.9 G10). All glyph segments of the
-whole Arrow batch are scored in ONE matrix multiply (see
-ocr_spark.extraction.recognizer.recognize_batch) — the vectorized inference
-path the north star requires."""
+the reference's OCR stage, SURVEY.md §2.9 G10), one matmul per Arrow batch
+(``recognize_batch``). The job recognizes inside its one document stage
+(``operators.document``); this stage is the per-layer ledger's recognizer
+cut and the stage B input of the differential tests' Catalyst reference."""
 
 from __future__ import annotations
 

@@ -2,9 +2,11 @@
 
 This module reimplements, per document, exactly WHAT the reference computes —
 same regexes, same normalization, same scoring arithmetic, same decision
-precedence — so it can (a) produce the golden fixtures the Spark pipeline is
-byte-checked against, and (b) serve as the differential-test target for the
-native Catalyst expression library (ocr_spark.functions.*).
+precedence. It (a) produces the golden fixtures, (b) is the per-document
+computation of the extraction job itself: the job's one Arrow stage
+(ocr_spark.operators.document) calls ``score_page`` on every document, and
+(c) serves as the differential-test target for the native Catalyst
+expression library (ocr_spark.functions.*).
 
 Reference citations are inline. Deliberately replicated quirks (SURVEY.md
 §7.4.2):
@@ -27,7 +29,7 @@ from __future__ import annotations
 import re
 
 from ocr_spark import config as C
-from ocr_spark.extraction.html_extract import extract_page
+from ocr_spark.extraction.html_extract import PageExtract, extract_page
 from ocr_spark.extraction.recognizer import decode_payload, recognize_batch
 from ocr_spark.functions.fuzzy import token_sort_gate
 
@@ -747,19 +749,18 @@ def make_decision(
 # enhanced pass; dual-pass merge per PRIORITY_FIELDS, pipeline.py:295-316)
 # ---------------------------------------------------------------------------
 
-def process_page(html_bytes: bytes, payload_blob: bytes | None = None) -> dict:
-    page = extract_page(html_bytes)
+def score_page(page: PageExtract, ocr_text: str, ocr_conf: float) -> dict:
+    """Everything after recognition for one document: classify, dual-pass
+    extract + merge, word stats, quality gate, 10-component score, decision.
+
+    ocr_text/ocr_conf are the recognizer's output for the page's payload (""
+    and 0.0 without one). Returns the pipeline's output columns but the
+    url/warc_ts/lang pass-throughs, valued as the table stores them, plus
+    the detail dicts fields, quality, word_stats and score_parts."""
     dom_text = page.text
-
-    ocr_text = ""
-    ocr_conf = 0.0
-    if payload_blob is not None:
-        img = decode_payload(payload_blob)
-        ocr_text, ocr_conf, _ = recognize_batch([img])[0]
-
     full_text = dom_text + ("\n" + ocr_text if ocr_text else "") if dom_text else ocr_text
 
-    doc_type, cls_scores = classify_with_scores(full_text)
+    doc_type, _ = classify_with_scores(full_text)
 
     fields_std = extract_fields(doc_type, dom_text)
     fields = dict(fields_std)
@@ -780,14 +781,10 @@ def process_page(html_bytes: bytes, payload_blob: bytes | None = None) -> dict:
     )
 
     required = C.REQUIRED_FIELDS.get(doc_type, C.REQUIRED_FIELDS_DEFAULT)
-    mandatory_present = all(f in fields for f in required)
-    business_failures: list[str] = []
-    if doc_type in C.FIELD_WEIGHTS:  # critical-field check, pipeline.py:390-403
-        missing = [f for f, w in C.FIELD_WEIGHTS[doc_type].items()
-                   if w >= C.CRITICAL_FIELD_WEIGHT and f not in fields]
-        if missing:
-            business_failures.append("Missing critical field(s): " + ", ".join(missing))
-            mandatory_present = False
+    # critical-field check, pipeline.py:390-403
+    missing = [f for f, w in C.FIELD_WEIGHTS.get(doc_type, {}).items()
+               if w >= C.CRITICAL_FIELD_WEIGHT and f not in fields]
+    mandatory_present = not missing and all(f in fields for f in required)
 
     sschema = schema_score(fields, doc_type)
     parts = {
@@ -809,24 +806,37 @@ def process_page(html_bytes: bytes, payload_blob: bytes | None = None) -> dict:
     decision, hard = make_decision(
         final, quality["passed"], stats["total_words"] > 0, mandatory_present,
         nar, multi_document=multi_document, conflicting_schemas=conflicting,
-        business_failures=business_failures,
+        business_failures=missing,
     )
 
     return {
+        "extracted_text": full_text,
+        "doc_type": doc_type,
+        "extracted_fields": {k: "true" if v is True else str(v) for k, v in fields.items()},
+        "decision": decision,
+        "hard_rejection": hard,
+        "final_score": final,
+        "quality_score": quality["composite_score"],
+        "quality_passed": quality["passed"],
+        "quality_reasons": quality["failure_reasons"],
+        **stats,
+        "fuzzy_score": parts["fuzzy"],
+        "schema_score": sschema,
+        "distribution_score": parts["distribution"],
+        "non_alnum_ratio": nar,
+        "business_failures": missing,
         "multi_document": multi_document,
         "conflicting_schemas": conflicting,
-        "extracted_text": full_text,
-        "dom_text": dom_text,
-        "ocr_text": ocr_text,
-        "doc_type": doc_type,
-        "classification_scores": cls_scores,
         "fields": fields,
         "quality": quality,
         "word_stats": stats,
         "score_parts": parts,
-        "final_score": final,
-        "non_alnum_ratio": nar,
-        "decision": decision,
-        "hard_rejection": hard,
-        "business_failures": business_failures,
     }
+
+
+def process_page(html_bytes: bytes, payload_blob: bytes | None = None) -> dict:
+    """One document end to end: extract_page -> recognize -> score_page."""
+    ocr_text, ocr_conf = "", 0.0
+    if payload_blob is not None:
+        ocr_text, ocr_conf, _ = recognize_batch([decode_payload(payload_blob)])[0]
+    return score_page(extract_page(html_bytes), ocr_text, ocr_conf)

@@ -10,7 +10,7 @@ machinery instead of a second state store. Event analytics use the standard
 watermark + tumbling-window aggregation.
 
 Scale notes: foreachBatch keeps the per-batch plan identical to the batch
-job (same salting, same Arrow stages); the file source's maxFilesPerTrigger
+job (same salting, same document stage); the file source's maxFilesPerTrigger
 bounds micro-batch size; watermarks bound window state.
 """
 

@@ -10,7 +10,8 @@ Protocol:
    same generator the 300-page goldens pin.
 2. timed: run_pipeline over the corpus parquet forced to a noop sink, best
    of 3 (same best-of discipline as bench.py); every run does the whole
-   job — scan, salt, stage A, stage B, payload join, Catalyst block.
+   job — scan, payload join, salt, the one document stage (parse +
+   recognize + score).
 3. identity: pipeline (url, sha256(NFC(text))) for all 500k rows compared
    against the oracle shas computed by a 30-process pool over page
    indices — full coverage, not a sample.

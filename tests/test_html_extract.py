@@ -8,7 +8,7 @@ import random
 import re
 import time
 
-from ocr_spark.extraction.html_extract import _drop_subtrees, extract_page
+from ocr_spark.extraction.html_extract import _drop_subtrees, _strip_comments, extract_page
 from ocr_spark.fixtures.corpus import make_page
 
 
@@ -136,6 +136,38 @@ def test_drop_subtrees_linear_on_unclosed_openers():
     probe = "<script>" * 4000 + "tail"
     best = min(_timed(_drop_subtrees, probe) for _ in range(3))
     assert _drop_subtrees(probe) == probe  # no closer: the reference keeps it all
+    assert best < 0.05, best
+
+
+# The comment regex stage A used before _strip_comments; kept here as the
+# reference its output must equal on every input.
+_COMMENT_REF = re.compile(r"<!--.*?-->", re.DOTALL)
+
+
+def test_strip_comments_equals_reference_on_fixture_pages():
+    for i in range(2000):
+        raw = make_page(i)["html"].decode("utf-8", errors="replace")
+        assert _strip_comments(raw) == _COMMENT_REF.sub(" ", raw), f"doc {i}"
+
+
+def test_strip_comments_equals_reference_on_random_strings():
+    # openers and closers that overlap (<!-->, <!--->, --->), split markers
+    # (<!-, ->), newlines inside comments and unclosed openers
+    parts = ["<!--", "-->", "<!-->", "<!--->", "--->", "<!-", "->", "--", "-",
+             "<", ">", "!", "\n", " ", "text", "<p>"]
+    rng = random.Random(11)
+    for _ in range(20_000):
+        s = "".join(rng.choice(parts) for _ in range(rng.randint(0, 16)))
+        assert _strip_comments(s) == _COMMENT_REF.sub(" ", s), repr(s)
+
+
+def test_strip_comments_linear_on_unclosed_openers():
+    # 4,000 unclosed <!-- openers: ~1 s through the reference regex (each
+    # opener rescans to the end of the page), well under 1 ms here; the
+    # bound leaves room for a loaded machine
+    probe = "<!--" * 4000 + "tail"
+    best = min(_timed(_strip_comments, probe) for _ in range(3))
+    assert _strip_comments(probe) == _COMMENT_REF.sub(" ", probe) == probe
     assert best < 0.05, best
 
 
