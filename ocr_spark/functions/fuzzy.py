@@ -66,7 +66,7 @@ class WindowGate:
     def at_least(self, short: str, threshold: float) -> bool:
         """True iff some same-length window of the text matches ``short``
         with SequenceMatcher ratio*100 >= threshold. ``short`` must be no
-        longer than the text (callers swap; see partial_ratio_at_least)."""
+        longer than the text (callers swap; see anchor_gate)."""
         import numpy as np
 
         long = self.long
@@ -78,7 +78,9 @@ class WindowGate:
             cum = self._char_cum(c)
             win = cum[n:] - cum[:-n]
             overlap += np.minimum(win, sc)
-        bound = overlap * (100.0 / n)  # == quick_ratio * 100 for equal lengths
+        # quick_ratio * 100 for equal lengths, in ratio()'s own float steps,
+        # so rounding never puts the bound below a window's ratio.
+        bound = 2.0 * overlap / (2 * n) * 100.0
         candidates = np.nonzero(bound >= threshold)[0]
         if len(candidates) == 0:
             return False
@@ -91,34 +93,18 @@ class WindowGate:
         return False
 
 
-def partial_ratio_at_least(short: str, long: str, threshold: float) -> bool:
-    """True iff some same-length window of ``long`` (every offset) matches
-    ``short`` with SequenceMatcher ratio*100 >= threshold (see WindowGate)."""
-    if not short or not long:
-        return 0.0 >= threshold
-    if len(short) > len(long):
-        short, long = long, short
-    return WindowGate(long).at_least(short, threshold)
-
-
-def token_sort_gate(anchor: str, token_sorted_text: str, threshold: float) -> bool:
-    """rapidfuzz's ``partial_token_sort_ratio(anchor, text) >= threshold``
-    given the text's token-sorted form precomputed once per document (the
-    sort is the other per-anchor cost worth hoisting)."""
-    return partial_ratio_at_least(_token_sort(anchor.lower()), token_sorted_text, threshold)
-
-
-def token_sort_gate_shared(
-    sorted_anchor: str, gate: "WindowGate", threshold: float
-) -> bool:
-    """token_sort_gate with both per-document costs hoisted: the anchor is
-    pre-token-sorted (a config constant) and the text's WindowGate carries
-    the cached per-char prefix sums. Bit-identical to token_sort_gate."""
+def anchor_gate(sorted_anchor: str, gate: WindowGate, threshold: float) -> bool:
+    """rapidfuzz's ``partial_token_sort_ratio(anchor, text) >= threshold``:
+    some same-length window (every offset) of the longer of the two
+    token-sorted strings matches the shorter with SequenceMatcher
+    ratio*100 >= threshold. ``sorted_anchor`` is the lowercased anchor,
+    token-sorted; ``gate`` is the WindowGate over the document's
+    token-sorted text, built once per document and shared by its anchors."""
     short, long = sorted_anchor, gate.long
     if not short or not long:
         return 0.0 >= threshold
     if len(short) > len(long):
         # Rare tiny-document case: windows slide over the anchor instead,
-        # so the text-side cache does not apply — use the generic path.
-        return partial_ratio_at_least(short, long, threshold)
+        # so the text-side cache does not apply.
+        return WindowGate(short).at_least(long, threshold)
     return gate.at_least(short, threshold)

@@ -3,8 +3,8 @@ Accept/Review/Reject CASE chain as native expressions.
 
 Everything is JVM-side except the fuzzy-anchor fallback (A5), whose
 rapidfuzz-style partial_token_sort_ratio has no Catalyst equivalent: that one
-runs as an Arrow-batched pandas UDF with a native substring fast path inside
-the batch (reference validation/anchors.py:44-71 also tries substring first).
+runs the oracle's per-document anchor_score in an Arrow-batched pandas UDF
+(substring first, as reference validation/anchors.py:44-71 does).
 """
 
 from __future__ import annotations
@@ -15,57 +15,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
 from ocr_spark import config as C
-from ocr_spark.functions.fuzzy import WindowGate, token_sort_gate_shared
+from ocr_spark.oracle import reference_semantics as R
 
 
 # ---------------------------------------------------------------------------
 # A5 — fuzzy anchor score (anchors.py:18-94), Arrow-batched
 # ---------------------------------------------------------------------------
 
-def _sorted_anchors() -> dict[str, dict[str, list[tuple[str, str]]]]:
-    """(raw, token-sorted) anchor pairs per doc type — config constants,
-    token-sorted once per process instead of once per (document, anchor)."""
-    from ocr_spark.functions.fuzzy import _token_sort
-
-    out = {}
-    for dt, cfg in C.ANCHORS.items():
-        out[dt] = {
-            k: [(a, _token_sort(a.lower())) for a in cfg[k]]
-            for k in ("required", "optional")
-        }
-    return out
-
-
-_SORTED_ANCHORS = _sorted_anchors()
-
-
 @F.pandas_udf(DoubleType())
 def _anchor_score_udf(text: pd.Series, doc_type: pd.Series) -> pd.Series:
-    out = []
-    for t, dt in zip(text, doc_type):
-        cfg = C.ANCHORS.get(dt)
-        if cfg is None or t is None:
-            out.append(0.0)
-            continue
-        low = t.lower()
-        # token-sort + per-char window histograms once per doc; per-anchor
-        # matching uses the thresholded gate over that shared state. The
-        # gate checks every window offset, which is closer to rapidfuzz.
-        # Upper-bound pruning: fuzzy.WindowGate.
-        gate = WindowGate(" ".join(sorted(low.split())))
-        sa = _SORTED_ANCHORS[dt]
-        found_req = sum(
-            1 for a, ts_a in sa["required"]
-            if a in low or token_sort_gate_shared(ts_a, gate, cfg["threshold"])
-        )
-        found_opt = sum(
-            1 for a, ts_a in sa["optional"]
-            if a in low or token_sort_gate_shared(ts_a, gate, cfg["threshold"])
-        )
-        req_ratio = found_req / len(cfg["required"]) if cfg["required"] else 1.0
-        out.append(min(1.0, req_ratio + min(C.ANCHOR_OPTIONAL_BONUS_CAP,
-                                            found_opt * C.ANCHOR_OPTIONAL_BONUS)))
-    return pd.Series(out)
+    # The oracle's per-document rule, row by row; a NULL text scores 0.
+    return pd.Series([0.0 if t is None else R.anchor_score(t, dt)
+                      for t, dt in zip(text, doc_type)])
 
 
 def anchor_score(text: Column, doc_type: Column) -> Column:

@@ -13,8 +13,10 @@ Resume model (north rule): every row carries a stable bucket
 against the already-committed buckets, processes only the remainder, and
 commits the new data files together with one audit/lineage row per bucket
 (partition_id, url_range, doc_count, sha256 of the url-ordered per-url text
-hashes). Killing a run between data write and manifest flip leaves the table
-at the previous snapshot — rerunning is idempotent.
+hashes). The audit rows are `lineage_digest` over the files the run wrote,
+so they describe exactly the bytes the snapshot references. Killing a run
+between data write and manifest flip leaves the table at the previous
+snapshot — rerunning is idempotent.
 """
 
 from __future__ import annotations
@@ -61,9 +63,10 @@ def content_digest(url_col: str, text_col: str):
 
 def lineage_digest(df: DataFrame, url_col: str, text_col: str,
                    bucket_col: str) -> DataFrame:
-    """The queryable form of the audit row commit() writes: per bucket,
-    (bucket, doc_count, url_min, url_max, content_sha256). Verifying a
-    snapshot against its audit is one run of this over the data files.
+    """The audit rows commit() writes: per bucket, (bucket, doc_count,
+    url_min, url_max, content_sha256). commit() runs it over the files it
+    just wrote; verifying a snapshot against its audit is one more run of
+    it over the snapshot's data files.
 
     Shape: one hash agg keyed on the bucket; the agg buffer holds
     (url, 32-byte hash) pairs — text itself never enters the buffer, so a
@@ -145,31 +148,6 @@ class SnapshotTable:
                 best = b if best is None else max(best, b)
         return best
 
-    @staticmethod
-    def _run_of(rel_file: str) -> str:
-        # data files live under data/run-<id>/part-*.parquet; audit rows
-        # carry the bare <id>
-        parts = rel_file.replace("\\", "/").split("/")
-        return parts[1].removeprefix("run-") if len(parts) > 1 else ""
-
-    def candidate_committed_files(
-        self, buckets: set[int], url_lo: str, url_hi: str
-    ) -> list[str]:
-        """Data files that COULD contain already-committed rows for the given
-        bucket set and url bounds — decided entirely from the per-run audit
-        rows (partition_id + [url_min, url_max] per bucket), i.e. O(audit)
-        metadata work. Runs whose committed url ranges are disjoint from the
-        probe bounds are pruned wholesale; only overlapping runs' files need
-        a (column-pruned, predicate-pushed) scan."""
-        snap = self.current_snapshot()
-        runs = {
-            a["run_id"]
-            for a in snap["audit"]
-            if a["partition_id"] in buckets
-            and not (a["url_max"] < url_lo or a["url_min"] > url_hi)
-        }
-        return [f for f in snap["data_files"] if self._run_of(f) in runs]
-
     # -- commit path ----------------------------------------------------------
 
     def commit(self, df: DataFrame, metrics: dict | None = None) -> list[dict]:
@@ -182,24 +160,13 @@ class SnapshotTable:
         rel_run_dir = os.path.join("data", f"run-{run_id}")
         run_dir = os.path.join(self.path, rel_run_dir)
 
-        df = df.withColumn("part_key", part_key(F.col("url"), self.n_buckets)).persist()
-        try:
-            df.write.mode("overwrite").parquet(run_dir)
-
-            # Per-partition lineage: url range, count, and an order-stable
-            # content hash (sha256 over url-sorted per-url text sha256s).
-            audit_df = (
-                df.groupBy("part_key")
-                .agg(
-                    F.min("url").alias("url_min"),
-                    F.max("url").alias("url_max"),
-                    F.count(F.lit(1)).alias("doc_count"),
-                    content_digest("url", "extracted_text").alias("content_sha256"),
-                )
-                .collect()
-            )
-        finally:
-            df.unpersist()
+        (df.withColumn("part_key", part_key(F.col("url"), self.n_buckets))
+         .write.mode("overwrite").parquet(run_dir))
+        # Lineage of the bytes just written, read back with an explicit
+        # schema so no schema-inference job runs.
+        written = df.sparkSession.read.schema(
+            "url string, extracted_text string, part_key int").parquet(run_dir)
+        digests = lineage_digest(written, "url", "extracted_text", "part_key").collect()
 
         new_files = [
             os.path.join(rel_run_dir, f)
@@ -209,14 +176,14 @@ class SnapshotTable:
         prev = self.current_snapshot()
         new_audit = prev["audit"] + [
             {
-                "partition_id": int(r["part_key"]),
+                "partition_id": int(r["bucket"]),
                 "url_min": r["url_min"],
                 "url_max": r["url_max"],
                 "doc_count": int(r["doc_count"]),
                 "content_sha256": r["content_sha256"],
                 "run_id": run_id,
             }
-            for r in sorted(audit_df, key=lambda r: int(r["part_key"]))
+            for r in sorted(digests, key=lambda r: int(r["bucket"]))
         ]
         snap = {
             "snapshot_id": prev["snapshot_id"] + 1,
@@ -260,12 +227,16 @@ def run_and_commit(
     t0 = time.time()
     before = out_table.current_snapshot()["audit"]
     done = {a["partition_id"] for a in before}
+    todo = [p for p in range(out_table.n_buckets) if p not in done][:limit_partitions]
+    if not todo:
+        # Idempotent no-op resume: build no plan and commit no snapshot.
+        return {"elapsed_sec": time.time() - t0, "partitions_before": len(done),
+                "partitions_after": len(done), "docs_committed": 0}
     pages = spark.read.parquet(pages_path)
     if done or limit_partitions is not None:
         # Idempotent resume: keep only rows in uncommitted buckets. The
         # bucket list is a tiny in-manifest literal, so this is an `isin`
         # filter that prunes before any compute — no shuffle.
-        todo = [p for p in range(out_table.n_buckets) if p not in done][:limit_partitions]
         pages = pages.filter(part_key(F.col("url"), out_table.n_buckets).isin(todo))
     audit = out_table.commit(run_pipeline(spark, pages, payloads_path),
                              metrics={"elapsed_sec": time.time() - t0})
@@ -273,6 +244,6 @@ def run_and_commit(
         "elapsed_sec": time.time() - t0,
         "partitions_before": len(done),
         "partitions_after": len({a["partition_id"] for a in audit}),
-        # docs committed BY THIS RUN (0 on an idempotent no-op resume)
+        # docs committed BY THIS RUN
         "docs_committed": sum(a["doc_count"] for a in audit[len(before):]),
     }

@@ -31,7 +31,7 @@ import re
 from ocr_spark import config as C
 from ocr_spark.extraction.html_extract import PageExtract, extract_page
 from ocr_spark.extraction.recognizer import decode_payload, recognize_batch
-from ocr_spark.functions.fuzzy import token_sort_gate
+from ocr_spark.functions.fuzzy import WindowGate, _token_sort, anchor_gate
 
 # ---------------------------------------------------------------------------
 # Normalization (reference validation/normalization.py)
@@ -570,19 +570,30 @@ def word_stats(dom_words: list[str], ocr_words: list[tuple[str, float]]) -> dict
 # Validation scores (anchors.py, distribution.py, key_value.py)
 # ---------------------------------------------------------------------------
 
+# (raw, token-sorted) anchor pairs per doc type: config constants, sorted
+# once per process instead of once per (document, anchor).
+_SORTED_ANCHORS = {
+    dt: {k: [(a, _token_sort(a.lower())) for a in cfg[k]] for k in ("required", "optional")}
+    for dt, cfg in C.ANCHORS.items()
+}
+
+
 def anchor_score(text: str, doc_type: str) -> float:
+    """anchors.py:18-94: substring first, then the fuzzy token-sort gate
+    over one WindowGate per document."""
     cfg = C.ANCHORS.get(doc_type)
     if cfg is None:
         return 0.0
     text_lower = text.lower()
-    ts_text = " ".join(sorted(text_lower.split()))
+    gate = WindowGate(_token_sort(text_lower))
+    sa = _SORTED_ANCHORS[doc_type]
     found_req = sum(
-        1 for a in cfg["required"]
-        if a in text_lower or token_sort_gate(a, ts_text, cfg["threshold"])
+        1 for a, ts_a in sa["required"]
+        if a in text_lower or anchor_gate(ts_a, gate, cfg["threshold"])
     )
     found_opt = sum(
-        1 for a in cfg["optional"]
-        if a in text_lower or token_sort_gate(a, ts_text, cfg["threshold"])
+        1 for a, ts_a in sa["optional"]
+        if a in text_lower or anchor_gate(ts_a, gate, cfg["threshold"])
     )
     req_ratio = found_req / len(cfg["required"]) if cfg["required"] else 1.0
     return min(1.0, req_ratio + min(C.ANCHOR_OPTIONAL_BONUS_CAP, found_opt * C.ANCHOR_OPTIONAL_BONUS))

@@ -723,9 +723,9 @@ def _anchor_scores_oracle() -> str:
     corpus because the token-sort fuzzy gate provably never fires beyond
     plain substring containment there — asserted per-document per-anchor by
     tests/test_oracle_semantics.py::test_anchor_gate_substring_decidable.
-    The score arithmetic mirrors scoring._anchor_score_udf operation-for-
-    operation (int counts -> one division -> one min chain), so doubles are
-    bit-identical."""
+    The score arithmetic mirrors reference_semantics.anchor_score (which
+    the UDF calls) operation-for-operation (int counts -> one division ->
+    one min chain), so doubles are bit-identical."""
     cs = OSQL.classify_sql("text")
 
     def hit(a: str) -> str:

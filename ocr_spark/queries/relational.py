@@ -509,8 +509,8 @@ def q_lineage_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (north rule: partition_id, url_range, doc_count, sha256 of url-ordered
     per-url text hashes), as a value-oracled query. The bucket here is
     md5-mod (cross-engine); production part_key is xxhash64
-    (io/tableio.py:33) — the DIGEST formula is identical and shared
-    (io/tableio.content_digest), so the oracle pins the audit semantics."""
+    (io/tableio.py:35) — SnapshotTable.commit writes its audit rows with
+    this same lineage_digest, so the oracle pins the audit semantics."""
     from ocr_spark.io.tableio import lineage_digest
 
     k = F.col("doc_id")

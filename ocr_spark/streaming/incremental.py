@@ -36,12 +36,10 @@ def stream_pages_to_table(
     """File-source stream of page parquet -> extraction -> snapshot commits.
 
     Each micro-batch runs the full batch pipeline and lands as one snapshot.
-    Exactly-once comes in two bounded layers (neither scans the full output
-    table): a checkpoint-scoped batch_id replay guard (O(1) snapshot
-    metadata), and a url anti-join whose committed side is pruned to only
-    the runs whose audit url ranges overlap the batch envelope (O(audit)
-    metadata + a scan of just those runs' files)."""
-    from ocr_spark.io.tableio import part_key
+    Exactly-once comes in two layers: a checkpoint-scoped batch_id replay
+    guard (O(1) snapshot metadata), then one url anti-join of the batch
+    against the committed table's url column, with no pruning of the
+    committed side."""
     from ocr_spark.pipeline import run_pipeline
 
     # The layer-1 replay guard scopes batch ids by this string: normalize
@@ -67,34 +65,12 @@ def stream_pages_to_table(
         last = table.last_batch_id(checkpoint_dir)
         if last is not None and batch_id <= last:
             return
-        # Layer 2 — cross-batch/cross-checkpoint url dedup. The committed
-        # side is NOT the full output table: the audit rows' per-bucket url
-        # ranges prune it to only the runs whose committed ranges overlap
-        # this batch's (bucket, url) envelope — O(audit) metadata work plus
-        # a column-pruned scan of just the overlapping runs' files. A feed
-        # of fresh urls (disjoint ranges, the steady state) anti-joins
-        # against NOTHING. The same job counts the batch, so an empty
-        # micro-batch costs no separate emptiness job.
-        stats = batch_df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("url").alias("lo"),
-            F.max("url").alias("hi"),
-            F.collect_set(part_key(F.col("url"), table.n_buckets)).alias("buckets"),
-        ).first()
-        if stats["n"] == 0:
-            return
-        files = table.candidate_committed_files(
-            set(stats["buckets"]), stats["lo"], stats["hi"]
-        )
-        if files:
-            committed_urls = (
-                spark.read.parquet(*[os.path.join(table.path, f) for f in files])
-                .filter(F.col("url").between(stats["lo"], stats["hi"]))
-                .select("url")
-            )
-            fresh = batch_df.join(committed_urls, "url", "left_anti")
-        else:
-            fresh = batch_df
+        # Layer 2 — cross-batch/cross-checkpoint url dedup: one anti-join
+        # against every committed url. An empty batch, or one whose urls
+        # are all committed, commits nothing.
+        committed = table.read(spark)
+        fresh = batch_df if committed is None else batch_df.join(
+            committed.select("url"), "url", "left_anti")
         if fresh.isEmpty():
             return
         table.commit(run_pipeline(spark, fresh),

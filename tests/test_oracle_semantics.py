@@ -193,9 +193,12 @@ def test_anchor_gate_substring_decidable():
     import pytest
 
     from ocr_spark import config as C
-    from ocr_spark.functions.fuzzy import token_sort_gate
+    from ocr_spark.functions.fuzzy import WindowGate, _token_sort, anchor_gate
     from ocr_spark.queries.extraction import _classify_oracle
     from ocr_spark.synth import SYNTH_CORPUS_SQL
+
+    def token_sort_gate(a, ts, threshold):
+        return anchor_gate(_token_sort(a.lower()), WindowGate(ts), threshold)
 
     sf = "/root/testdata/sf0.001"
     if not os.path.isdir(sf):
@@ -221,3 +224,33 @@ def test_anchor_gate_substring_decidable():
                 assert not token_sort_gate(a, ts, cfg["threshold"]), (
                     f"fuzzy gate fired beyond substring: doc {doc_id} ({dt}) anchor {a!r}"
                 )
+
+
+def test_window_gate_matches_brute_force():
+    """WindowGate.at_least prunes windows by a histogram bound before the
+    exact ratio; its independent reference is the plain scan of every
+    same-length window. One gate serves several needles, as one document
+    serves its anchors."""
+    import random
+    from difflib import SequenceMatcher
+
+    from ocr_spark.functions.fuzzy import WindowGate
+
+    # Float edges: each bound, written as overlap * (100.0 / n), rounds
+    # just below the threshold that the window's exact ratio meets.
+    assert WindowGate("a" * 97).at_least("a" * 97, 100)
+    assert WindowGate("a" * 97 + "b" * 97).at_least("a" * 194, 50)
+
+    rng = random.Random(20261018)
+    for _ in range(600):
+        long = "".join(rng.choice("abc ") for _ in range(rng.randint(1, 60)))
+        gate = WindowGate(long)
+        for _ in range(5):
+            n = rng.randint(1, len(long))
+            short = "".join(rng.choice("abc ") for _ in range(n))
+            t = rng.randint(50, 100)
+            want = any(
+                SequenceMatcher(None, short, long[i:i + n]).ratio() * 100 >= t
+                for i in range(len(long) - n + 1)
+            )
+            assert gate.at_least(short, t) == want, (short, long, t)

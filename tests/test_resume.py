@@ -36,10 +36,14 @@ def test_partial_then_resume(spark, paths):
     # no duplicate urls
     assert df.select("url").distinct().count() == total
 
-    # A third run is a no-op (idempotent).
-    snap_before = table.current_snapshot()["snapshot_id"]
-    run_and_commit(spark, pages, table, payloads_path=payloads)
-    assert df.count() == total
+    # A third run is a no-op (idempotent): no new snapshot, no new file.
+    snap_before = table.current_snapshot()
+    res = run_and_commit(spark, pages, table, payloads_path=payloads)
+    snap_after = table.current_snapshot()
+    assert res["docs_committed"] == 0
+    assert snap_after["snapshot_id"] == snap_before["snapshot_id"]
+    assert snap_after["data_files"] == snap_before["data_files"]
+    assert table.read(spark).count() == total
     audit = table.audit_rows()
     assert len({a["partition_id"] for a in audit}) == 16
 

@@ -8,6 +8,7 @@ import glob
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
@@ -112,44 +113,42 @@ def test_windowed_event_counts_matches_batch(spark, tmp_path):
         assert all(k[0] > max_emitted for k in missing)
 
 
-def test_committed_side_scan_is_o_audit(spark, tmp_path):
-    """Bounded resume: the streaming anti-join's committed side must be
-    pruned to overlapping runs via audit metadata, not a full table scan."""
-    from ocr_spark.io.tableio import SnapshotTable
+def test_partial_overlap_micro_batch_commits_only_fresh_urls(spark, corpus_dir, tmp_path):
+    """Commit urls A+B, then stream one file holding B+C through a fresh
+    checkpoint: the anti-join must keep only C, so the table holds every
+    url once and B's rows and the first run's audit rows are untouched."""
+    from ocr_spark.io.tableio import SnapshotTable, run_and_commit
+    from ocr_spark.streaming.incremental import stream_pages_to_table
 
-    table = SnapshotTable(str(tmp_path / "t"), n_buckets=16)
+    pages = pq.read_table(os.path.join(corpus_dir, "pages.parquet"))
+    n = pages.num_rows // 3
+    a, b, c = pages.slice(0, n), pages.slice(n, n), pages.slice(2 * n)
+    ab = str(tmp_path / "ab.parquet")
+    pq.write_table(pa.concat_tables([a, b]), ab)
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    pq.write_table(pa.concat_tables([b, c]), str(feed / "drop-0.parquet"))
 
-    def commit_urls(prefix):
-        df = spark.createDataFrame(
-            [(f"{prefix}{i:04d}", f"text {prefix}{i}") for i in range(50)],
-            "url string, extracted_text string",
-        )
-        table.commit(df, metrics={"batch_id": 0, "checkpoint": f"ck-{prefix}"})
+    table = SnapshotTable(str(tmp_path / "out"), n_buckets=16)
+    run_and_commit(spark, ab, table)
+    audit_before = table.audit_rows()
+    b_urls = set(b.column("url").to_pylist())
+    b_text = {r["url"]: r["extracted_text"] for r in table.read(spark).collect()
+              if r["url"] in b_urls}
+    assert len(b_text) == len(b_urls)
 
-    commit_urls("https://a.example/")   # run 1: urls a*
-    commit_urls("https://z.example/")   # run 2: urls z*
+    q = stream_pages_to_table(spark, str(feed), table, str(tmp_path / "ckpt"),
+                              available_now=True)
+    assert q.awaitTermination(300)
 
-    # probe overlapping only the a-range: run 2's files must be pruned away
-    all_buckets = set(range(16))
-    fa = table.candidate_committed_files(all_buckets, "https://a.example/0000",
-                                         "https://a.example/9999")
-    fz = table.candidate_committed_files(all_buckets, "https://z.example/0000",
-                                         "https://z.example/9999")
-    fnone = table.candidate_committed_files(all_buckets, "https://m.example/0",
-                                            "https://m.example/9")
-    allf = table.current_snapshot()["data_files"]
-    runs = {SnapshotTable._run_of(f) for f in allf}
-    assert len(runs) == 2
-    assert {SnapshotTable._run_of(f) for f in fa} != runs  # not O(table)
-    assert len({SnapshotTable._run_of(f) for f in fa}) == 1
-    assert len({SnapshotTable._run_of(f) for f in fz}) == 1
-    assert {SnapshotTable._run_of(f) for f in fa} != {SnapshotTable._run_of(f) for f in fz}
-    assert fnone == []  # disjoint feed -> anti-join against NOTHING
-
-    # bucket pruning: probing a single bucket keeps only files of runs that
-    # committed that bucket (both runs here, but the range still prunes)
-    assert table.candidate_committed_files(set(), "https://a.example/0000",
-                                           "https://a.example/9999") == []
+    rows = table.read(spark).select("url", "extracted_text").collect()
+    urls = [r["url"] for r in rows]
+    assert len(urls) == len(set(urls)) == pages.num_rows
+    assert set(urls) == set(pages.column("url").to_pylist())
+    assert {r["url"]: r["extracted_text"] for r in rows if r["url"] in b_urls} == b_text
+    audit = table.audit_rows()
+    assert audit[:len(audit_before)] == audit_before
+    assert sum(r["doc_count"] for r in audit[len(audit_before):]) == c.num_rows
 
 
 def test_batch_id_replay_guard_is_checkpoint_scoped(spark, tmp_path):
