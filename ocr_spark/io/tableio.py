@@ -5,24 +5,26 @@ pipeline codes against this thin layer instead: an output table is a
 directory of immutable parquet data files plus a `_manifest/` of JSON
 snapshots; `current` is flipped by atomic rename, so a commit is all-or-
 nothing exactly like an Iceberg snapshot swap. On a cluster with Iceberg
-available, `commit()`/`committed_partitions()` map 1:1 onto an Iceberg
-append + audit-table scan.
+available, `commit()`/`uncommitted()` map 1:1 onto an Iceberg append + an
+anti-join against the table's url column.
 
-Resume model (north rule): every row carries a stable bucket
-`part_key = pmod(xxhash64(url), n_buckets)`. A run anti-joins its input
-against the already-committed buckets, processes only the remainder, and
-commits the new data files together with one audit/lineage row per bucket
-(partition_id, url_range, doc_count, sha256 of the url-ordered per-url text
-hashes). The audit rows are `lineage_digest` over the files the run wrote,
-so they describe exactly the bytes the snapshot references. Killing a run
-between data write and manifest flip leaves the table at the previous
-snapshot — rerunning is idempotent.
+Resume model (north rule), one rule for the batch job and the stream: a
+run anti-joins its input urls against the committed url column
+(`uncommitted`), processes only the remainder, and commits the new data
+files together with one audit/lineage row per bucket it wrote (bucket
+`part_key = pmod(xxhash64(url), n_buckets)`; partition_id, url_range,
+doc_count, sha256 of the url-ordered per-url text hashes). The audit rows
+are `lineage_digest` over the files the run wrote, so they describe exactly
+the bytes the snapshot references; a run that writes no row appends no
+snapshot. Killing a run between data write and manifest flip leaves the
+table at the previous snapshot — rerunning is idempotent.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
@@ -122,9 +124,6 @@ class SnapshotTable:
             return None
         return spark.read.parquet(*[os.path.join(self.path, f) for f in files])
 
-    def committed_partitions(self) -> list[int]:
-        return sorted({a["partition_id"] for a in self.current_snapshot()["audit"]})
-
     def audit_rows(self) -> list[dict]:
         return self.current_snapshot()["audit"]
 
@@ -133,6 +132,18 @@ class SnapshotTable:
         if not files:
             return None
         return spark.read.parquet(*[os.path.join(self.path, f) for f in files])
+
+    def uncommitted(self, spark: SparkSession, pages: DataFrame) -> DataFrame:
+        """The rows of ``pages`` whose url the table does not hold: one
+        anti-join against the committed url column, read with an explicit
+        schema so no schema-inference job runs. With nothing committed,
+        ``pages`` itself."""
+        files = self.current_snapshot()["data_files"]
+        if not files:
+            return pages
+        committed = spark.read.schema("url string").parquet(
+            *[os.path.join(self.path, f) for f in files])
+        return pages.join(committed, "url", "left_anti")
 
     # -- bounded resume metadata (O(audit), no data scan) ---------------------
 
@@ -155,7 +166,8 @@ class SnapshotTable:
         table's audit rows after the commit. ``part_key`` is computed from
         the table's own bucket count, replacing any column of that name.
         Data lands in an immutable run directory first; the manifest pointer
-        flips last (atomic rename)."""
+        flips last (atomic rename). A df with no rows appends no snapshot:
+        the run directory is deleted and the current audit returned."""
         run_id = uuid.uuid4().hex[:12]
         rel_run_dir = os.path.join("data", f"run-{run_id}")
         run_dir = os.path.join(self.path, rel_run_dir)
@@ -167,13 +179,16 @@ class SnapshotTable:
         written = df.sparkSession.read.schema(
             "url string, extracted_text string, part_key int").parquet(run_dir)
         digests = lineage_digest(written, "url", "extracted_text", "part_key").collect()
+        prev = self.current_snapshot()
+        if not digests:
+            shutil.rmtree(run_dir)
+            return prev["audit"]
 
         new_files = [
             os.path.join(rel_run_dir, f)
             for f in sorted(os.listdir(run_dir))
             if f.endswith(".parquet")
         ]
-        prev = self.current_snapshot()
         new_audit = prev["audit"] + [
             {
                 "partition_id": int(r["bucket"]),
@@ -216,34 +231,17 @@ def run_and_commit(
     pages_path: str,
     out_table: SnapshotTable,
     payloads_path: str | None = None,
-    limit_partitions: int | None = None,
 ) -> dict:
-    """Full job: read -> resume-filter -> pipeline -> commit. Returns metrics.
-
-    limit_partitions processes only the first N uncommitted buckets — used by
-    tests to simulate a killed run and prove idempotent resume."""
+    """Full job: read -> drop committed urls -> pipeline -> commit. Returns
+    the run's wall and the docs this run committed; a rerun over committed
+    input commits nothing and appends no snapshot."""
     from ocr_spark.pipeline import run_pipeline
 
     t0 = time.time()
-    before = out_table.current_snapshot()["audit"]
-    done = {a["partition_id"] for a in before}
-    todo = [p for p in range(out_table.n_buckets) if p not in done][:limit_partitions]
-    if not todo:
-        # Idempotent no-op resume: build no plan and commit no snapshot.
-        return {"elapsed_sec": time.time() - t0, "partitions_before": len(done),
-                "partitions_after": len(done), "docs_committed": 0}
-    pages = spark.read.parquet(pages_path)
-    if done or limit_partitions is not None:
-        # Idempotent resume: keep only rows in uncommitted buckets. The
-        # bucket list is a tiny in-manifest literal, so this is an `isin`
-        # filter that prunes before any compute — no shuffle.
-        pages = pages.filter(part_key(F.col("url"), out_table.n_buckets).isin(todo))
-    audit = out_table.commit(run_pipeline(spark, pages, payloads_path),
-                             metrics={"elapsed_sec": time.time() - t0})
+    before = len(out_table.audit_rows())
+    pages = out_table.uncommitted(spark, spark.read.parquet(pages_path))
+    audit = out_table.commit(run_pipeline(spark, pages, payloads_path))
     return {
         "elapsed_sec": time.time() - t0,
-        "partitions_before": len(done),
-        "partitions_after": len({a["partition_id"] for a in audit}),
-        # docs committed BY THIS RUN
-        "docs_committed": sum(a["doc_count"] for a in audit[len(before):]),
+        "docs_committed": sum(a["doc_count"] for a in audit[before:]),
     }

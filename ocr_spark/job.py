@@ -9,11 +9,12 @@ Usage (cluster):
         --conf spark.sql.shuffle.partitions=<2x cores> \\
         ocr_spark/job.py --pages s3://.../pages --out s3://.../extracted
 
-Each invocation: read pages -> anti-join committed buckets (idempotent
-resume) -> salt repartition -> extraction pipeline -> snapshot commit with
-per-partition lineage (tableio.SnapshotTable; Iceberg append on clusters
-that ship the runtime jar). Re-running after a kill resumes from the last
-committed snapshot. Prints one JSON metrics line.
+Each invocation: read pages -> anti-join the urls the table already holds
+(idempotent resume) -> salt repartition -> extraction pipeline -> snapshot
+commit with per-partition lineage (tableio.SnapshotTable; Iceberg append on
+clusters that ship the runtime jar). Re-running after a kill resumes from
+the last committed snapshot; a run with no new url commits nothing. Prints
+one JSON metrics line.
 """
 
 from __future__ import annotations
@@ -24,27 +25,23 @@ import sys
 
 
 def main(argv: list[str] | None = None) -> int:
+    from ocr_spark.io.tableio import DEFAULT_BUCKETS, SnapshotTable, run_and_commit
+
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--pages", required=True, help="input pages parquet (url, warc_ts, html, text, lang)")
     ap.add_argument("--payloads", default=None, help="optional payloads parquet (url, payload)")
     ap.add_argument("--out", required=True, help="output snapshot-table directory")
-    ap.add_argument("--buckets", type=int, default=64, help="resume-bucket count")
-    ap.add_argument("--limit-partitions", type=int, default=None,
-                    help="process at most N uncommitted buckets (incremental runs)")
+    ap.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS,
+                    help="lineage-bucket count of the audit rows")
     ap.add_argument("--cores", type=int, default=None, help="local[N] (default: env/32)")
     args = ap.parse_args(argv)
 
-    from ocr_spark.io.tableio import SnapshotTable, run_and_commit
     from ocr_spark.session import get_spark
 
     spark = get_spark(app_name="ocr_spark_job", cores=args.cores)
     spark.sparkContext.setLogLevel("WARN")
     table = SnapshotTable(args.out, n_buckets=args.buckets)
-    metrics = run_and_commit(
-        spark, args.pages, table,
-        payloads_path=args.payloads,
-        limit_partitions=args.limit_partitions,
-    )
+    metrics = run_and_commit(spark, args.pages, table, payloads_path=args.payloads)
     audit = table.audit_rows()
     docs = sum(a["doc_count"] for a in audit)
     print(json.dumps({

@@ -35,11 +35,11 @@ def stream_pages_to_table(
 ) -> StreamingQuery:
     """File-source stream of page parquet -> extraction -> snapshot commits.
 
-    Each micro-batch runs the full batch pipeline and lands as one snapshot.
-    Exactly-once comes in two layers: a checkpoint-scoped batch_id replay
-    guard (O(1) snapshot metadata), then one url anti-join of the batch
-    against the committed table's url column, with no pruning of the
-    committed side."""
+    Each micro-batch runs the full batch pipeline and lands as one snapshot
+    (none when it has no fresh url). Exactly-once comes in two layers: a
+    checkpoint-scoped batch_id replay guard (O(1) snapshot metadata), then
+    the batch job's own rule, ``table.uncommitted`` — one url anti-join of
+    the batch against the committed url column."""
     from ocr_spark.pipeline import run_pipeline
 
     # The layer-1 replay guard scopes batch ids by this string: normalize
@@ -65,15 +65,10 @@ def stream_pages_to_table(
         last = table.last_batch_id(checkpoint_dir)
         if last is not None and batch_id <= last:
             return
-        # Layer 2 — cross-batch/cross-checkpoint url dedup: one anti-join
-        # against every committed url. An empty batch, or one whose urls
-        # are all committed, commits nothing.
-        committed = table.read(spark)
-        fresh = batch_df if committed is None else batch_df.join(
-            committed.select("url"), "url", "left_anti")
-        if fresh.isEmpty():
-            return
-        table.commit(run_pipeline(spark, fresh),
+        # Layer 2 — cross-batch/cross-checkpoint url dedup, the batch job's
+        # rule: commit only the urls the table does not hold. An empty
+        # batch, or one whose urls are all committed, appends no snapshot.
+        table.commit(run_pipeline(spark, table.uncommitted(spark, batch_df)),
                      metrics={"batch_id": batch_id, "checkpoint": checkpoint_dir})
 
     writer = stream.writeStream.foreachBatch(_process).option(

@@ -1,9 +1,14 @@
-"""Idempotent resume + per-partition lineage (north rule): a killed/partial
-run commits only whole buckets; rerunning completes the rest with no
-duplicate urls and a final state identical to a single-shot run."""
+"""Idempotent resume + per-partition lineage (north rule): a run commits
+only the urls the table does not hold, so a partial or killed run followed
+by a rerun leaves every url committed once, in a state identical to a
+single-shot run, and a rerun over committed input appends nothing."""
 
 from __future__ import annotations
 
+import json
+import os
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,18 +20,30 @@ def paths(corpus_dir, tmp_path):
     return f"{corpus_dir}/pages.parquet", f"{corpus_dir}/payloads.parquet", str(tmp_path / "out")
 
 
+def _slice_pages(pages: str, out: str, start: int, stop: int | None = None) -> str:
+    """Write rows [start, stop) of a pages file to ``out``; returns ``out``."""
+    t = pq.read_table(pages)
+    stop = t.num_rows if stop is None else stop
+    pq.write_table(t.slice(start, stop - start), out)
+    return out
+
+
+def _content(spark, table: SnapshotTable) -> set:
+    return {(r["url"], r["extracted_text"], r["decision"]) for r in table.read(spark).collect()}
+
+
 def test_partial_then_resume(spark, paths):
     pages, payloads, out = paths
     table = SnapshotTable(out, n_buckets=16)
 
-    # "Killed" first run: only 5 buckets get committed.
-    run_and_commit(spark, pages, table, payloads_path=payloads, limit_partitions=5)
-    assert len(table.committed_partitions()) == 5
+    # "Killed" first run: only a subset of the urls gets committed.
+    subset = _slice_pages(pages, out + "_subset.parquet", 0, 40)
+    run_and_commit(spark, subset, table, payloads_path=payloads)
     n_after_first = table.read(spark).count()
 
-    # Resume: completes the remaining buckets.
+    # Resume: completes the remaining urls.
     run_and_commit(spark, pages, table, payloads_path=payloads)
-    done = table.committed_partitions()
+    done = {a["partition_id"] for a in table.audit_rows()}
     assert len(done) == 16
 
     df = table.read(spark)
@@ -92,15 +109,106 @@ def test_partial_and_full_runs_identical_content(spark, paths):
     """Two-phase (kill+resume) table content == single-shot table content."""
     pages, payloads, out = paths
     t1 = SnapshotTable(out + "_two_phase", n_buckets=8)
-    run_and_commit(spark, pages, t1, payloads_path=payloads, limit_partitions=3)
+    subset = _slice_pages(pages, out + "_subset.parquet", 100, 200)
+    run_and_commit(spark, subset, t1, payloads_path=payloads)
     run_and_commit(spark, pages, t1, payloads_path=payloads)
 
     t2 = SnapshotTable(out + "_single", n_buckets=8)
     run_and_commit(spark, pages, t2, payloads_path=payloads)
 
-    a = {(r["url"], r["extracted_text"], r["decision"]) for r in t1.read(spark).collect()}
-    b = {(r["url"], r["extracted_text"], r["decision"]) for r in t2.read(spark).collect()}
-    assert a == b
+    assert _content(spark, t1) == _content(spark, t2)
+
+
+def test_rerun_with_empty_buckets_appends_no_snapshot(spark, tmp_path):
+    """8 urls in 64 buckets leave most buckets empty; a rerun over the same
+    input must still commit nothing: no snapshot, no data file."""
+    from ocr_spark.fixtures.corpus import write_corpus
+
+    pages, payloads = write_corpus(str(tmp_path / "corpus"), 8)
+    table = SnapshotTable(str(tmp_path / "out"), n_buckets=64)
+    first = run_and_commit(spark, pages, table, payloads_path=payloads)
+    assert first["docs_committed"] == 8
+    snap = table.current_snapshot()
+    assert snap["snapshot_id"] == 1
+    for _ in range(2):
+        res = run_and_commit(spark, pages, table, payloads_path=payloads)
+        assert res["docs_committed"] == 0
+        assert table.current_snapshot()["snapshot_id"] == 1
+        assert table.current_snapshot()["data_files"] == snap["data_files"]
+    assert set(res) == {"elapsed_sec", "docs_committed"}
+    assert os.listdir(table.data_dir) == [
+        os.path.basename(os.path.dirname(snap["data_files"][0]))]
+
+
+def test_disjoint_inputs_commit_every_url_once(spark, paths, tmp_path):
+    """Two page files with disjoint urls into one table: the second run
+    commits all of its urls, whatever buckets the first one filled."""
+    pages, payloads, out = paths
+    first = _slice_pages(pages, str(tmp_path / "first.parquet"), 0, 150)
+    second = _slice_pages(pages, str(tmp_path / "second.parquet"), 150)
+    table = SnapshotTable(out, n_buckets=16)
+    r1 = run_and_commit(spark, first, table, payloads_path=payloads)
+    r2 = run_and_commit(spark, second, table, payloads_path=payloads)
+    assert r1["docs_committed"] == 150
+    assert r2["docs_committed"] == pq.read_metadata(second).num_rows
+
+    urls = [r["url"] for r in table.read(spark).select("url").collect()]
+    expected = pq.read_table(pages, columns=["url"]).column("url").to_pylist()
+    assert sorted(urls) == sorted(expected)
+    assert sum(a["doc_count"] for a in table.audit_rows()) == len(expected)
+
+
+def test_kill_between_data_write_and_manifest_flip(spark, paths, tmp_path, monkeypatch):
+    """A resume run dies after writing its data files but before its
+    manifest lands: the current snapshot is untouched, the orphaned run
+    directory is never referenced, and a rerun gives the single-shot table."""
+    pages, payloads, out = paths
+    table = SnapshotTable(out, n_buckets=16)
+    subset = _slice_pages(pages, str(tmp_path / "subset.parquet"), 0, 100)
+    run_and_commit(spark, subset, table, payloads_path=payloads)
+    before = table.current_snapshot()
+
+    def killed(*args, **kwargs):
+        raise OSError("killed before the manifest write")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", killed)
+        with pytest.raises(OSError, match="killed"):
+            run_and_commit(spark, pages, table, payloads_path=payloads)
+    assert table.current_snapshot() == before
+    referenced = {os.path.dirname(f) for f in before["data_files"]}
+    orphans = {os.path.join("data", d) for d in os.listdir(table.data_dir)} - referenced
+    assert len(orphans) == 1
+
+    run_and_commit(spark, pages, table, payloads_path=payloads)
+    data_dirs = {os.path.dirname(f) for f in table.current_snapshot()["data_files"]}
+    assert not data_dirs & orphans
+    single = SnapshotTable(str(tmp_path / "single"), n_buckets=16)
+    run_and_commit(spark, pages, single, payloads_path=payloads)
+    assert _content(spark, table) == _content(spark, single)
+    assert table.read(spark).count() == single.read(spark).count()
+
+
+def test_job_cli_second_run_commits_nothing(spark, tmp_path, capsys):
+    """Two in-process runs of the spark-submit entry over the same input:
+    the second commits 0 docs and leaves the snapshot id where it was."""
+    from ocr_spark import job
+    from ocr_spark.fixtures.corpus import write_corpus
+
+    pages, payloads = write_corpus(str(tmp_path / "corpus"), 8)
+    argv = ["--pages", pages, "--payloads", payloads,
+            "--out", str(tmp_path / "table"), "--cores", "4"]
+    lines = []
+    try:
+        for _ in range(2):
+            assert job.main(argv) == 0
+            lines.append(json.loads(capsys.readouterr().out.strip().splitlines()[-1]))
+    finally:
+        spark.sparkContext.setLogLevel("ERROR")
+    assert lines[0]["docs_committed"] == 8
+    assert lines[1]["docs_committed"] == 0
+    assert lines[1]["snapshot_id"] == lines[0]["snapshot_id"] == 1
+    assert lines[1]["total_docs_committed"] == 8
 
 
 def test_snapshot_time_travel(spark, tmp_path):
