@@ -203,8 +203,6 @@ QUALITY_MAX_GLARE_RATIO = 0.10
 # Normalizer knees (image_quality.py:237-284).
 QUALITY_BLUR_CAP = 1000.0
 QUALITY_BRIGHTNESS_PEAK = 127.5
-QUALITY_RES_MIN_PIXELS = 307200.0
-QUALITY_RES_GOOD_PIXELS = 2073600.0
 # Page-analog knees (html byte size stands in for pixel count; same piecewise
 # shape as image_quality.py:254-266 with web-page-scale knees).
 PAGE_RES_MIN_BYTES = 512.0

@@ -10,14 +10,17 @@ anti-join against the table's url column.
 
 Resume model (north rule), one rule for the batch job and the stream: a
 run anti-joins its input urls against the committed url column
-(`uncommitted`), processes only the remainder, and commits the new data
-files together with one audit/lineage row per bucket it wrote (bucket
+(`uncommitted`; a NULL url never matches, so it is dropped), processes only
+the remainder, and commits the new data files together with one
+audit/lineage row per bucket it wrote (bucket
 `part_key = pmod(xxhash64(url), n_buckets)`; partition_id, url_range,
 doc_count, sha256 of the url-ordered per-url text hashes). The audit rows
 are `lineage_digest` over the files the run wrote, so they describe exactly
 the bytes the snapshot references; a run that writes no row appends no
-snapshot. Killing a run between data write and manifest flip leaves the
-table at the previous snapshot — rerunning is idempotent.
+snapshot. A stream micro-batch is the same call, so a replayed batch (or a
+new checkpoint over old input) commits only the urls the table lacks.
+A run that fails before the manifest flip deletes its run directory and
+leaves the table at the previous snapshot — rerunning is idempotent.
 """
 
 from __future__ import annotations
@@ -102,7 +105,7 @@ class SnapshotTable:
     def current_snapshot(self) -> dict:
         ptr = self._current_pointer()
         if not os.path.exists(ptr):
-            return {"snapshot_id": 0, "data_files": [], "audit": [], "metrics": {}}
+            return {"snapshot_id": 0, "data_files": [], "audit": []}
         with open(ptr) as f:
             snap_name = f.read().strip()
         with open(os.path.join(self.manifest_dir, snap_name)) as f:
@@ -136,8 +139,10 @@ class SnapshotTable:
     def uncommitted(self, spark: SparkSession, pages: DataFrame) -> DataFrame:
         """The rows of ``pages`` whose url the table does not hold: one
         anti-join against the committed url column, read with an explicit
-        schema so no schema-inference job runs. With nothing committed,
-        ``pages`` itself."""
+        schema so no schema-inference job runs. Rows with a NULL url never
+        match the anti-join, so they are dropped rather than committed again
+        on every rerun."""
+        pages = pages.filter(F.col("url").isNotNull())
         files = self.current_snapshot()["data_files"]
         if not files:
             return pages
@@ -145,103 +150,94 @@ class SnapshotTable:
             *[os.path.join(self.path, f) for f in files])
         return pages.join(committed, "url", "left_anti")
 
-    # -- bounded resume metadata (O(audit), no data scan) ---------------------
-
-    def last_batch_id(self, checkpoint: str) -> int | None:
-        """Highest committed streaming batch_id for a checkpoint lineage, from
-        snapshot metrics alone. Scoped to the checkpoint: a NEW checkpoint
-        restarts batch ids at 0, so its batches must not be confused with an
-        old lineage's."""
-        best = None
-        for m in self.current_snapshot().get("metrics", {}).values():
-            if m.get("checkpoint") == checkpoint and "batch_id" in m:
-                b = int(m["batch_id"])
-                best = b if best is None else max(best, b)
-        return best
-
     # -- commit path ----------------------------------------------------------
 
-    def commit(self, df: DataFrame, metrics: dict | None = None) -> list[dict]:
+    def commit(self, df: DataFrame) -> list[dict]:
         """Write df (url, extracted_text, ...) as a new snapshot; returns the
-        table's audit rows after the commit. ``part_key`` is computed from
-        the table's own bucket count, replacing any column of that name.
-        Data lands in an immutable run directory first; the manifest pointer
-        flips last (atomic rename). A df with no rows appends no snapshot:
-        the run directory is deleted and the current audit returned."""
+        audit rows this commit appended. ``part_key`` is computed from the
+        table's own bucket count, replacing any column of that name. Data
+        lands in an immutable run directory first; the manifest pointer flips
+        last (atomic rename). A df with no rows appends no snapshot and
+        returns ``[]``. Whatever raises before the flip deletes the run
+        directory and re-raises, so the table keeps its previous snapshot."""
         run_id = uuid.uuid4().hex[:12]
         rel_run_dir = os.path.join("data", f"run-{run_id}")
         run_dir = os.path.join(self.path, rel_run_dir)
+        try:
+            (df.withColumn("part_key", part_key(F.col("url"), self.n_buckets))
+             .write.mode("overwrite").parquet(run_dir))
+            # Lineage of the bytes just written, read back with an explicit
+            # schema so no schema-inference job runs.
+            written = df.sparkSession.read.schema(
+                "url string, extracted_text string, part_key int").parquet(run_dir)
+            digests = lineage_digest(written, "url", "extracted_text", "part_key").collect()
+            if not digests:
+                shutil.rmtree(run_dir)
+                return []
 
-        (df.withColumn("part_key", part_key(F.col("url"), self.n_buckets))
-         .write.mode("overwrite").parquet(run_dir))
-        # Lineage of the bytes just written, read back with an explicit
-        # schema so no schema-inference job runs.
-        written = df.sparkSession.read.schema(
-            "url string, extracted_text string, part_key int").parquet(run_dir)
-        digests = lineage_digest(written, "url", "extracted_text", "part_key").collect()
-        prev = self.current_snapshot()
-        if not digests:
-            shutil.rmtree(run_dir)
-            return prev["audit"]
-
-        new_files = [
-            os.path.join(rel_run_dir, f)
-            for f in sorted(os.listdir(run_dir))
-            if f.endswith(".parquet")
-        ]
-        new_audit = prev["audit"] + [
-            {
-                "partition_id": int(r["bucket"]),
-                "url_min": r["url_min"],
-                "url_max": r["url_max"],
-                "doc_count": int(r["doc_count"]),
-                "content_sha256": r["content_sha256"],
-                "run_id": run_id,
+            prev = self.current_snapshot()
+            new_files = [
+                os.path.join(rel_run_dir, f)
+                for f in sorted(os.listdir(run_dir))
+                if f.endswith(".parquet")
+            ]
+            appended = [
+                {
+                    "partition_id": int(r["bucket"]),
+                    "url_min": r["url_min"],
+                    "url_max": r["url_max"],
+                    "doc_count": int(r["doc_count"]),
+                    "content_sha256": r["content_sha256"],
+                    "run_id": run_id,
+                }
+                for r in sorted(digests, key=lambda r: int(r["bucket"]))
+            ]
+            snap = {
+                "snapshot_id": prev["snapshot_id"] + 1,
+                "parent_id": prev["snapshot_id"],
+                "data_files": prev["data_files"] + new_files,
+                "audit": prev["audit"] + appended,
+                "committed_at": time.time(),
             }
-            for r in sorted(digests, key=lambda r: int(r["bucket"]))
-        ]
-        snap = {
-            "snapshot_id": prev["snapshot_id"] + 1,
-            "parent_id": prev["snapshot_id"],
-            "data_files": prev["data_files"] + new_files,
-            "audit": new_audit,
-            "metrics": {**prev.get("metrics", {}), run_id: (metrics or {})},
-            "committed_at": time.time(),
-        }
-        snap_name = f"snapshot-{snap['snapshot_id']:06d}.json"
-        snap_path = os.path.join(self.manifest_dir, snap_name)
-        tmp = snap_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(snap, f, indent=1)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, snap_path)
+            snap_name = f"snapshot-{snap['snapshot_id']:06d}.json"
+            snap_path = os.path.join(self.manifest_dir, snap_name)
+            tmp = snap_path + ".tmp"
+            with open(tmp, "w") as f:
+                json.dump(snap, f, indent=1)
+                f.flush()
+                os.fsync(f.fileno())
+            os.rename(tmp, snap_path)
 
-        ptr_tmp = self._current_pointer() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(snap_name)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(ptr_tmp, self._current_pointer())  # the atomic commit point
-        return new_audit
+            ptr_tmp = self._current_pointer() + ".tmp"
+            with open(ptr_tmp, "w") as f:
+                f.write(snap_name)
+                f.flush()
+                os.fsync(f.fileno())
+            os.rename(ptr_tmp, self._current_pointer())  # the atomic commit point
+            return appended
+        except BaseException:
+            shutil.rmtree(run_dir, ignore_errors=True)
+            raise
 
 
 def run_and_commit(
     spark: SparkSession,
-    pages_path: str,
+    pages: str | DataFrame,
     out_table: SnapshotTable,
     payloads_path: str | None = None,
 ) -> dict:
-    """Full job: read -> drop committed urls -> pipeline -> commit. Returns
-    the run's wall and the docs this run committed; a rerun over committed
-    input commits nothing and appends no snapshot."""
+    """Full job over a pages parquet path or DataFrame: drop committed urls
+    -> pipeline -> commit. Returns the run's wall and the docs this run
+    committed; a rerun over committed input commits nothing and appends no
+    snapshot. The stream's micro-batch body is this call."""
     from ocr_spark.pipeline import run_pipeline
 
     t0 = time.time()
-    before = len(out_table.audit_rows())
-    pages = out_table.uncommitted(spark, spark.read.parquet(pages_path))
-    audit = out_table.commit(run_pipeline(spark, pages, payloads_path))
+    if isinstance(pages, str):
+        pages = spark.read.parquet(pages)
+    fresh = out_table.uncommitted(spark, pages)
+    appended = out_table.commit(run_pipeline(spark, fresh, payloads_path))
     return {
         "elapsed_sec": time.time() - t0,
-        "docs_committed": sum(a["doc_count"] for a in audit[before:]),
+        "docs_committed": sum(a["doc_count"] for a in appended),
     }

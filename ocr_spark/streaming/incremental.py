@@ -35,22 +35,12 @@ def stream_pages_to_table(
 ) -> StreamingQuery:
     """File-source stream of page parquet -> extraction -> snapshot commits.
 
-    Each micro-batch runs the full batch pipeline and lands as one snapshot
-    (none when it has no fresh url). Exactly-once comes in two layers: a
-    checkpoint-scoped batch_id replay guard (O(1) snapshot metadata), then
-    the batch job's own rule, ``table.uncommitted`` — one url anti-join of
-    the batch against the committed url column."""
-    from ocr_spark.pipeline import run_pipeline
-
-    # The layer-1 replay guard scopes batch ids by this string: normalize
-    # it so the same logical checkpoint passed as relative vs absolute (or
-    # with a trailing slash) still matches the ids recorded in snapshot
-    # metrics — a mismatch is only a lost O(1) fast path (layer 2 still
-    # dedups), but there is no reason to lose it. URI checkpoints
-    # (s3://, hdfs://) only get the trailing-slash strip.
-    if "://" not in checkpoint_dir:
-        checkpoint_dir = os.path.abspath(checkpoint_dir)
-    checkpoint_dir = checkpoint_dir.rstrip("/") or "/"
+    Each micro-batch is the batch job, ``run_and_commit``: it commits only
+    the urls the table does not hold (``table.uncommitted``, one url
+    anti-join against the committed url column) and lands as one snapshot,
+    or none when it has no fresh url. That one rule makes a replayed batch
+    a no-op and lets a new checkpoint at any path commit every new url."""
+    from ocr_spark.io.tableio import run_and_commit
 
     stream = (
         spark.readStream.schema(PAGE_SCHEMA)
@@ -58,22 +48,9 @@ def stream_pages_to_table(
         .parquet(input_dir)
     )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        # Exactly-once layer 1 (O(1) metadata): within one checkpoint
-        # lineage the source re-delivers a crashed micro-batch with the SAME
-        # batch_id and content, so an already-committed id is a pure replay.
-        last = table.last_batch_id(checkpoint_dir)
-        if last is not None and batch_id <= last:
-            return
-        # Layer 2 — cross-batch/cross-checkpoint url dedup, the batch job's
-        # rule: commit only the urls the table does not hold. An empty
-        # batch, or one whose urls are all committed, appends no snapshot.
-        table.commit(run_pipeline(spark, table.uncommitted(spark, batch_df)),
-                     metrics={"batch_id": batch_id, "checkpoint": checkpoint_dir})
-
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    writer = stream.writeStream.foreachBatch(
+        lambda batch_df, _: run_and_commit(spark, batch_df, table)
+    ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

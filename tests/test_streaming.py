@@ -13,17 +13,20 @@ import pyarrow.parquet as pq
 import pytest
 
 
+def _write_drops(feed, table: pa.Table, n_files: int) -> None:
+    """Split ``table`` into ``n_files`` parquet drop files under ``feed``."""
+    feed.mkdir()
+    n = table.num_rows
+    for i in range(n_files):
+        lo, hi = i * n // n_files, (i + 1) * n // n_files
+        pq.write_table(table.slice(lo, hi - lo), str(feed / f"drop-{i}.parquet"))
+
+
 @pytest.fixture()
 def paged_corpus(tmp_path, corpus_dir):
     """The golden corpus split into 3 parquet drop files (a 'crawl feed')."""
-    src = os.path.join(corpus_dir, "pages.parquet")
-    table = pq.read_table(src)
     feed = tmp_path / "feed"
-    feed.mkdir()
-    n = table.num_rows
-    for i in range(3):
-        part = table.slice(i * n // 3, (i + 1) * n // 3 - i * n // 3)
-        pq.write_table(part, str(feed / f"drop-{i}.parquet"))
+    _write_drops(feed, pq.read_table(os.path.join(corpus_dir, "pages.parquet")), 3)
     return str(feed)
 
 
@@ -45,7 +48,7 @@ def test_streaming_ingestion_commits_snapshots(spark, paged_corpus, tmp_path):
     out = table.read(spark)
     assert out.count() == total
     # replaying the whole feed through a FRESH checkpoint must be a no-op
-    # (committed buckets are anti-joined away -> no duplicate rows)
+    # (committed urls are anti-joined away -> no duplicate rows)
     q2 = stream_pages_to_table(
         spark, paged_corpus, table, str(tmp_path / "ckpt2"),
         max_files_per_trigger=3, available_now=True,
@@ -151,14 +154,58 @@ def test_partial_overlap_micro_batch_commits_only_fresh_urls(spark, corpus_dir, 
     assert sum(r["doc_count"] for r in audit[len(audit_before):]) == c.num_rows
 
 
-def test_batch_id_replay_guard_is_checkpoint_scoped(spark, tmp_path):
+def test_recreated_checkpoint_commits_every_new_url(spark, corpus_dir, tmp_path):
+    """A checkpoint deleted and recreated at the same path restarts its
+    batch ids at 0; the batches it streams next hold new urls and must all
+    be committed."""
     from ocr_spark.io.tableio import SnapshotTable
+    from ocr_spark.streaming.incremental import stream_pages_to_table
 
-    table = SnapshotTable(str(tmp_path / "t2"), n_buckets=8)
-    df = spark.createDataFrame([("u1", "t")], "url string, extracted_text string")
-    table.commit(df, metrics={"batch_id": 3, "checkpoint": "ckA"})
-    assert table.last_batch_id("ckA") == 3
-    assert table.last_batch_id("ckB") is None  # fresh lineage falls through
+    pages = pq.read_table(os.path.join(corpus_dir, "pages.parquet")).slice(0, 60)
+    _write_drops(tmp_path / "feed1", pages.slice(0, 30), 3)
+    _write_drops(tmp_path / "feed2", pages.slice(30, 30), 3)
+    table = SnapshotTable(str(tmp_path / "out"), n_buckets=16)
+    ckpt = str(tmp_path / "ckpt")
+    for feed in ("feed1", "feed2"):
+        shutil.rmtree(ckpt, ignore_errors=True)
+        q = stream_pages_to_table(spark, str(tmp_path / feed), table, ckpt,
+                                  max_files_per_trigger=1, available_now=True)
+        assert q.awaitTermination(300)
+        assert [p["numInputRows"] for p in q.recentProgress] == [10, 10, 10]
+
+    urls = [r["url"] for r in table.read(spark).select("url").collect()]
+    assert sorted(urls) == sorted(pages.column("url").to_pylist())
+    assert sum(a["doc_count"] for a in table.audit_rows()) == 60
+
+
+def test_replayed_micro_batch_appends_nothing(spark, corpus_dir, tmp_path):
+    """Delete the last batch's commit marker and restart on the same
+    checkpoint: Spark re-runs that batch, and the url rule alone makes it a
+    no-op: same snapshot, same data files, same data directories."""
+    from ocr_spark.io.tableio import SnapshotTable
+    from ocr_spark.streaming.incremental import stream_pages_to_table
+
+    pages = pq.read_table(os.path.join(corpus_dir, "pages.parquet")).slice(0, 30)
+    feed = tmp_path / "feed"
+    _write_drops(feed, pages, 3)
+    table = SnapshotTable(str(tmp_path / "out"), n_buckets=16)
+    ckpt = tmp_path / "ckpt"
+    q = stream_pages_to_table(spark, str(feed), table, str(ckpt),
+                              max_files_per_trigger=1, available_now=True)
+    assert q.awaitTermination(300)
+    snap = table.current_snapshot()
+    dirs = sorted(os.listdir(table.data_dir))
+    assert snap["snapshot_id"] == 3
+
+    os.remove(ckpt / "commits" / "2")
+    os.remove(ckpt / "commits" / ".2.crc")
+    q = stream_pages_to_table(spark, str(feed), table, str(ckpt),
+                              max_files_per_trigger=1, available_now=True)
+    assert q.awaitTermination(300)
+    assert [p["batchId"] for p in q.recentProgress] == [2]
+    assert os.path.exists(ckpt / "commits" / "2")
+    assert table.current_snapshot() == snap
+    assert sorted(os.listdir(table.data_dir)) == dirs
 
 
 def test_streaming_first_seen_dedup_across_batches(spark, tmp_path):
