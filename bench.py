@@ -10,7 +10,7 @@ one-line record overflowed the driver's stdout tail capture in round 3).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   testdata dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] cores (default 32)
+  SPARK_GRAFT_CPUS     local[N] cores (default: the usable cores)
   BENCH_PAGES          synthetic page count for the extraction stage (default 24000)
   BENCH_QUERIES        comma-list to restrict the query suite
   BENCH_REPS           executions per query, best (min) is recorded (default 2;
@@ -116,7 +116,7 @@ def run_extraction(spark, n_pages: int) -> dict:
     # 8->16 scaling runs). Split the scan so every core gets work; at
     # production scale (many 100 MB-1 GB files) the default applies.
     size = os.path.getsize(pages)
-    par = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    par = spark.sparkContext.defaultParallelism
     spark_split = max(1 << 20, size // (par * 2))
     spark.conf.set("spark.sql.files.maxPartitionBytes", str(spark_split))
 
@@ -166,11 +166,11 @@ def run_extraction(spark, n_pages: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    from ocr_spark.session import default_cores, get_spark
+
+    cores = default_cores()
     n_pages = int(os.environ.get("BENCH_PAGES", "24000"))
     pipeline_only = "--pipeline-only" in sys.argv
-
-    from ocr_spark.session import get_spark
 
     spark = get_spark(app_name="ocr_spark_bench", cores=cores,
                   extra_conf={"spark.ui.showConsoleProgress": "false"})

@@ -9,6 +9,12 @@ Usage (cluster):
         --conf spark.sql.shuffle.partitions=<2x cores> \\
         ocr_spark/job.py --pages s3://.../pages --out s3://.../extracted
 
+Python workers fork from ``ocr_spark.pyworker`` (see session.get_spark),
+which starts before a task adds ``--py-files`` to ``sys.path``. get_spark
+hands the workers the driver's copy of the package, which executors on
+other hosts do not have: there, also pass
+``--conf spark.executorEnv.PYTHONPATH=ocr_spark.zip``.
+
 Each invocation: read pages -> anti-join the urls the table already holds
 (idempotent resume) -> salt repartition -> extraction pipeline -> snapshot
 commit with per-partition lineage (tableio.SnapshotTable; Iceberg append on
@@ -33,7 +39,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--out", required=True, help="output snapshot-table directory")
     ap.add_argument("--buckets", type=int, default=DEFAULT_BUCKETS,
                     help="lineage-bucket count of the audit rows")
-    ap.add_argument("--cores", type=int, default=None, help="local[N] (default: env/32)")
+    ap.add_argument("--cores", type=int, default=None,
+                    help="local[N] (default: $SPARK_GRAFT_CPUS, else the usable cores)")
     args = ap.parse_args(argv)
 
     from ocr_spark.session import get_spark

@@ -59,9 +59,9 @@ def _oracle_chunk(args: tuple[int, int]) -> list[tuple[str, str]]:
 def main() -> None:
     from bench import corpus_path
     from ocr_spark.pipeline import run_pipeline
-    from ocr_spark.session import get_spark
+    from ocr_spark.session import default_cores, get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = default_cores()
     spark = get_spark(app_name="golden_500k", cores=cores,
                       extra_conf={"spark.ui.showConsoleProgress": "false"})
     spark.sparkContext.setLogLevel("ERROR")

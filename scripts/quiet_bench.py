@@ -20,14 +20,16 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
+sys.path.insert(0, REPO)
 
+from ocr_spark.session import default_cores  # noqa: E402
 from scaling import cpu_control  # noqa: E402
 
 
 def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else \
         os.path.join(REPO, "BENCH_quiet_r5.json")
-    procs = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    procs = default_cores()
 
     before = cpu_control(procs)
     bench = subprocess.run(
